@@ -16,6 +16,10 @@ with a typed dataclass. Mapping of the load-bearing reference knobs:
   ``writetime_min``/``writetime_max``.
 - null-PK replacement (KnownProperties.java:197) → ``null_ts_default``.
 - guardrail colSizeInKB (feature/Guardrail.java:60-77) → ``guardrail_kb``.
+
+Plan thresholds with one sensible value, such as the LWW pre-reduction
+gate (``_PREREDUCE_MAX_EVENTS``), are module constants in
+``lake/table.py``, not settable options.
 """
 
 from __future__ import annotations
@@ -71,20 +75,6 @@ class EngineConfig:
     # --- skew handling (north_rule: salted repartition) ------------------
     salt_buckets: int = 4             # sub-splits for hot keys inside a bucket
     hot_key_threshold: int = 100_000  # rows per key in a batch → considered hot
-
-    # --- LWW pre-reduction (merge shuffle-volume cut) --------------------
-    # Before the merge shuffle, reduce the batch to its per-key LWW
-    # winners: a column-pruned (key, ts, seq) aggregation picks the
-    # winning version per key (map-side combined, ~24 B/row shuffled),
-    # then a broadcast join-back selects only winner rows to carry the
-    # fat payload into the shuffle + window. At K events/key/epoch the
-    # payload shuffle and window buffering shrink K× — on a real cluster
-    # the network shuffle is the scarce resource, and jstack profiling
-    # here showed the merge bound by UnsafeRow payload copies in exactly
-    # those two places. Applied when the batch's event count is at most
-    # this bound (the winner-key set must broadcast); 0 disables.
-    # unset_nulls merges never pre-reduce (they need every event).
-    lww_prereduce_max_events: int = 32_000_000
 
     # --- filters (ref OriginSelectStatement.java:104-131) ----------------
     writetime_min: datetime | None = None

@@ -41,10 +41,11 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -65,11 +66,6 @@ from cassandra_data_migrator_spark.lake.fs import get_fs
 _BUCKET = "_bucket"     # int   — hash bucket of the key
 _DELETED = "_deleted"   # bool  — tombstone marker (delete events persist)
 _SEQ = "_seq"           # long  — event seq of the winning writer (tie-break)
-# Above this many events in a batch the winner set may be too large to
-# force-broadcast (worst case one winner per event at ~40 B/row ≈ 64 MB
-# at 1.6M — around the configured autoBroadcastJoinThreshold); past it
-# the pre-reduction join-back is left unhinted for AQE to size.
-_PREREDUCE_FORCE_BROADCAST_MAX_EVENTS = 1_500_000
 _CK = "_ck"             # long  — row checksum, precomputed at write time so
                         #         the lineage pass reads 3 thin columns
                         #         instead of re-scanning payloads
@@ -78,6 +74,19 @@ _DV = "_dv"             # int — delta commit version during MoR resolution
                         #       (read-time literal from the manifest entry's
                         #       "dv"; base files read as 0; never stored)
 INTERNAL_COLS = (_BUCKET, _DELETED, _SEQ)
+
+# LWW pre-reduction gate: a batch of at most this many events is reduced
+# to its per-key winners (the probe's winner versions, joined back)
+# before the merge shuffle. Setting it to 0 selects the unreduced window
+# merge, the reference path the equivalence tests compare against.
+_PREREDUCE_MAX_EVENTS = 32_000_000
+# Above this many events in a batch the winner set may be too large to
+# force-broadcast (worst case one winner per event at ~40 B/row ≈ 64 MB
+# at 1.6M — around the configured autoBroadcastJoinThreshold); past it
+# the pre-reduction join-back is left unhinted for AQE to size.
+_PREREDUCE_FORCE_BROADCAST_MAX_EVENTS = 1_500_000
+# seq stand-in for a null seq inside the winner version struct
+_NO_SEQ = -(2 ** 63)
 
 
 class CommitConflict(RuntimeError):
@@ -99,6 +108,45 @@ class MergeResult:
     counters: dict[str, int] = field(default_factory=dict)
     lineage: list[dict[str, Any]] = field(default_factory=list)
     version: int | None = None
+
+
+@dataclass
+class Probe:
+    """A change batch's per-(bucket, key) rollup, computed once by
+    :meth:`LakeTable.probe` and shared by every consumer of the merge.
+
+    ``perkey`` is persisted: one row per (status, bucket ``_b``, key
+    ``_k``) with the key's winner version ``_w`` = max of struct(ts,
+    coalesce(seq, -2^63)), its min/max seq (``mn``/``mx``) and its event
+    count ``n``. Rows whose status is non-null are rejects: they are
+    counted per status in ``rejects`` and kept out of everything else.
+    Whoever asked for the probe unpersists it."""
+
+    perkey: DataFrame
+    touched: list[int]
+    offsets: dict[int, dict]
+    rejects: dict[str, int]
+    status_col: str | None = None
+
+    @property
+    def events(self) -> int:
+        return sum(o["events"] for o in self.offsets.values())
+
+    def _merged(self) -> DataFrame:
+        if self.status_col is None:
+            return self.perkey
+        return self.perkey.filter(F.col(self.status_col).isNull())
+
+    def winners(self) -> DataFrame:
+        """``(_k, _w)`` per merged key: the pre-reduction join-back input."""
+        return self._merged().select("_k", "_w")
+
+    def keys(self, name: str) -> DataFrame:
+        """The merged keys (distinct by construction) as column ``name``."""
+        return self._merged().select(F.col("_k").alias(name))
+
+    def unpersist(self) -> None:
+        self.perkey.unpersist()
 
 
 def _schema_to_fields(schema: T.StructType, start_id: int = 1) -> list[dict]:
@@ -143,9 +191,10 @@ def watermark_tail_predicate(seq_col: str, wm: int) -> F.Column:
 
 
 def _ts_bound_micros(v: Any) -> int | None:
-    """A ts_between bound as epoch micros for manifest-stats compare
-    (ints pass through; naive datetimes are read as UTC — the pinned
-    session timezone, matching how the stats were computed)."""
+    """A ts_between bound as epoch micros, the unit of both the
+    manifest-stats compare and the row filter (ints pass through; naive
+    datetimes are read as UTC — the pinned session timezone, matching
+    how the stats were computed)."""
     import datetime as _dt
 
     if v is None:
@@ -156,20 +205,6 @@ def _ts_bound_micros(v: Any) -> int | None:
         v = v.replace(tzinfo=_dt.timezone.utc)
     epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
     return (v - epoch) // _dt.timedelta(microseconds=1)
-
-
-def _ts_bound_datetime(v: Any) -> Any:
-    """The same bound as a (naive-UTC) datetime for the Catalyst row
-    filter. Int bounds are EPOCH MICROS (matching _ts_bound_micros) —
-    converting here keeps the file-skip compare and the row predicate
-    on the same unit; a raw ``lit(int).cast(timestamp)`` would read
-    the value as SECONDS and silently filter everything out."""
-    import datetime as _dt
-
-    if v is None or not isinstance(v, int):
-        return v
-    return (_dt.datetime(1970, 1, 1)
-            + _dt.timedelta(microseconds=v))
 
 
 def _name_by_field_id(own_fields: list[dict], own_name: str,
@@ -543,13 +578,13 @@ class LakeTable:
             own = schemas[str(manifest["schema_version"])]
             ts_out = _name_by_field_id(own, manifest["config"]["ts_col"],
                                        current)
-            ttype = _fields_to_schema(current)[ts_out].dataType
-            lo = _ts_bound_datetime(ts_between[0])
-            hi = _ts_bound_datetime(ts_between[1])
-            if lo is not None:
-                out = out.filter(F.col(ts_out) >= F.lit(lo).cast(ttype))
-            if hi is not None:
-                out = out.filter(F.col(ts_out) <= F.lit(hi).cast(ttype))
+            # compared in the epoch-micros domain the file stats use, so
+            # a naive bound means UTC here too, whatever the driver's TZ
+            tsm = F.unix_micros(F.col(ts_out).cast("timestamp"))
+            if lo_us is not None:
+                out = out.filter(tsm >= F.lit(lo_us))
+            if hi_us is not None:
+                out = out.filter(tsm <= F.lit(hi_us))
         if not include_deleted:
             out = out.filter(~F.col(_DELETED))
         expires_col = manifest["config"].get("expires_col")
@@ -712,6 +747,18 @@ class LakeTable:
         _write_manifest(self.path, new_manifest, fs=self.fs)
         self.manifest = new_manifest
 
+    def _successor_manifest(self, epoch_key: str | None = None) -> dict:
+        """A deep copy of the current manifest as the draft of the next
+        version: version bumped, parent linked, ``epoch_key`` set."""
+        m = copy.deepcopy(self.manifest)
+        m.update(version=self.version + 1, parent=self.version,
+                 epoch_key=epoch_key)
+        return m
+
+    def _data_cols(self) -> list[str]:
+        return [f["name"] for f in self.current_fields()
+                if f["name"] not in (self.key_col, self.ts_col)]
+
     def overwrite(self, df: DataFrame,
                   buckets: list[int] | None = None) -> int:
         """Replace the table content (bootstrap / initial copy) with
@@ -725,51 +772,28 @@ class LakeTable:
         and input rows hashing OUTSIDE the scope are dropped with the
         same bucket expression the scope is defined by — the caller
         bucket-prunes its read, this guard just makes the contract
-        unbreakable.
+        unbreakable. Without ``buckets`` the scope is every bucket.
 
+        The commit goes through the same tail as a merge, so seeds and
+        repairs carry ``_ck``, per-bucket lineage and ts stats too.
         Input columns must match the current schema; key/ts must be
         non-null (caller quarantines — ``operators.filters``).
         """
-        schema_cols = [f["name"] for f in self.current_fields()]
-        src = df.select(*schema_cols)
         src = (
-            src.withColumn(_BUCKET, self.bucket_of(self.key_col))
+            df.select(*[f["name"] for f in self.current_fields()])
+            .withColumn(_BUCKET, self.bucket_of(self.key_col))
             .withColumn(_DELETED, F.lit(False))
             .withColumn(_SEQ, F.lit(None).cast("long"))
         )
-        sel = None if buckets is None else sorted(int(b) for b in buckets)
-        if sel is not None:
-            src = src.filter(F.col(_BUCKET).isin(sel))
-        rel, absdir = self._new_data_dir()
-        (src.withColumn(_PB, F.col(_BUCKET))
-            .repartition(self.n_buckets, F.col(_BUCKET))
-            .write.partitionBy(_PB).parquet(absdir))
-        files = self._list_written_files(rel, absdir)
-        # stamp the same ts_min/ts_max entry stats a merge commit gets:
-        # bootstrap/seed files are the ones an incremental reader most
-        # wants to skip later (one thin 2-column scan of the new
-        # files). A zero-row overwrite (bucket-scoped repair clearing
-        # its scope) writes NO files — nothing to scan or stamp.
-        ts_stats = self._collect_ts_stats(absdir) if files else {}
-        m = json.loads(json.dumps(self.manifest))
-        m["version"] = self.version + 1
-        m["parent"] = self.version
-        m["epoch_key"] = None
-        new_entries = {
-            str(b): [{"path": p, "schema_version": self.schema_version,
-                      **({"ts_min": ts_stats[b][0],
-                          "ts_max": ts_stats[b][1]}
-                         if b in ts_stats else {})}
-                     for p in ps]
-            for b, ps in files.items()
-        }
-        if sel is None:
-            m["files"] = new_entries
+        if buckets is None:
+            scope = list(range(self.n_buckets))
         else:
-            for b in sel:
-                m["files"][str(b)] = new_entries.get(str(b), [])
-        self._commit(m)
-        return m["version"]
+            scope = sorted({int(b) for b in buckets})
+            src = src.filter(F.col(_BUCKET).isin(scope))
+        return self._write_and_commit(
+            src.repartition(self.n_buckets, F.col(_BUCKET)), offsets={},
+            touched=scope, epoch_key=None, stream_id=None,
+            epoch_id=None).version
 
     # ------------------------------------------------------------ the MERGE
 
@@ -783,9 +807,7 @@ class LakeTable:
         unset_nulls: bool = False,
         force_overwrite: bool = False,
         finalize: Any | None = None,
-        probed: tuple[list[int], dict[int, dict]] | None = None,
-        prereduce_max_events: int = 32_000_000,
-        prereduced: DataFrame | None = None,
+        probe: Probe | None = None,
         mode: str | None = None,
     ) -> MergeResult:
         """LWW MERGE of a change batch into the table.
@@ -815,6 +837,11 @@ class LakeTable:
         post-merge they run once per surviving row and the shuffle
         carries only raw inputs. The callable must preserve the table
         schema (it may fill columns, not add/remove them).
+
+        ``probe``: this batch's :meth:`probe`, when the caller already
+        ran it (over this batch, or over a frame it reaches by
+        row-preserving steps plus a status filter). The merge then
+        launches no probe job of its own; the caller unpersists it.
 
         Semantics (the engine's central operator — reference analogs
         S4/S5 upserts + J3 ``TargetUpsertStatement``, Cassandra LWW):
@@ -846,129 +873,105 @@ class LakeTable:
                 return MergeResult(epoch_key=epoch_key, skipped=True,
                                    version=self.version)
 
-        schema_fields = self.current_fields()
-        data_cols = [f["name"] for f in schema_fields
-                     if f["name"] not in (self.key_col, self.ts_col)]
+        own_probe = probe is None
+        if own_probe:
+            probe = self.probe(source, seq_col)
+        try:
+            if not probe.touched:
+                return self._commit_empty_epoch(epoch_key, stream_id,
+                                                epoch_id)
+            delta = mode == "mor" and not force_overwrite and not unset_nulls
+            merged = self._lww_merged(source, probe, op_col, seq_col,
+                                      unset_nulls, force_overwrite, delta)
+            if finalize is not None:
+                merged = finalize(merged)
+            return self._write_and_commit(
+                merged, probe.offsets, probe.touched, epoch_key, stream_id,
+                epoch_id, delta=delta)
+        finally:
+            if own_probe:
+                probe.unpersist()
 
+    def _lww_merged(
+        self, source: DataFrame, probe: Probe, op_col: str, seq_col: str,
+        unset_nulls: bool, force_overwrite: bool, delta: bool,
+    ) -> DataFrame:
+        """The merge plan: the batch's LWW winners (``delta``: merge-on-
+        read, batch rows only) or the touched buckets' merged state,
+        clustered by ``_bucket`` for the bucketed write."""
+        schema_fields = self.current_fields()
+        data_cols = self._data_cols()
         src = source
         # missing data columns in the batch → null (partial-row events)
         for f in schema_fields:
             if f["name"] not in src.columns:
                 src = src.withColumn(f["name"],
                                      F.lit(None).cast(_parse_type(f["type"])))
-        # cast every column to the TABLE's registered type: a no-op
-        # (erased by SimplifyCasts) when they already match, a lossless
-        # promotion for narrower events, and a LOUD ANSI overflow error
-        # for wider-than-schema values — without this, a wider event
-        # column union-coerces the whole merge frame and the written
-        # files' physical type contradicts the table schema, breaking
-        # every later read of the bucket
-        typed = {f["name"]: _parse_type(f["type"]) for f in schema_fields}
-        src = src.select(
-            F.col(self.key_col).cast(typed[self.key_col]),
-            F.col(self.ts_col).cast(typed[self.ts_col]),
-            *[F.col(c).cast(typed[c]).alias(c) for c in data_cols],
-            F.col(op_col).alias("_op"), F.col(seq_col).cast("long").alias(_SEQ),
-        ).withColumn(_BUCKET, self.bucket_of(self.key_col)) \
-         .withColumn(_DELETED, F.col("_op") == F.lit("delete")) \
-         .drop("_op")
+        src = self._typed_source(src, seq_col, data_cols, op_col=op_col)
 
-        # ONE probe pass over the source yields both the touched-bucket
-        # list and the per-bucket event offsets for lineage (tiny
-        # driver-side result, ≤ n_buckets rows; payload columns pruned).
-        # A caller that already aggregated the batch (the pipeline's
-        # combined status/offset rollup) passes ``probed`` and the job
-        # is skipped entirely.
-        touched, offsets = probed if probed is not None \
-            else self._probe_source(src)
-        if not touched:
-            return self._commit_empty_epoch(epoch_key, stream_id, epoch_id)
-
-        total_events = sum((o.get("events") or 0) for o in offsets.values())
-        if (prereduce_max_events and not unset_nulls
-                and 0 < total_events <= prereduce_max_events):
+        n_events = probe.events
+        if not unset_nulls and 0 < n_events <= _PREREDUCE_MAX_EVENTS:
             # LWW pre-reduction: drop intra-batch losers BEFORE the
-            # payload shuffle. A column-pruned (key → max(ts, seq))
-            # aggregation (map-side combined, ~24 B/row through its own
-            # tiny shuffle) picks the winning version per key; a
-            # broadcast join-back then admits only rows carrying that
-            # version. Rows that lose LWW within the batch can never win
-            # against stored rows, so this is a pure pre-filter: the
-            # window below sees identical winners, ties (exact duplicate
-            # events) still collapse there, and stored-row-wins-on-tie
-            # is untouched (base rows are never pre-reduced). Cuts the
-            # fat-payload shuffle AND the window's row buffering by the
-            # events-per-key factor — measured here as the merge's
-            # dominant cost (UnsafeRow payload copies), and on a real
-            # cluster it is the network shuffle itself.
-            neg = F.lit(-(2 ** 63))
-            if prereduced is not None:
-                # the caller (pipeline combined path) already rolled the
-                # winner version per key out of ITS probe aggregation —
-                # reusing it saves this block's own thin source scan.
-                # Contract: (_k, _w struct<_t: ts, _s: long>) computed
-                # with the exact expression below over the same rows.
-                win = prereduced
-            else:
-                win = (
-                    src.groupBy(F.col(self.key_col).alias("_k"))
-                    .agg(F.max(F.struct(
-                        F.col(self.ts_col).alias("_t"),
-                        F.coalesce(F.col(_SEQ), neg).alias("_s")))
-                         .alias("_w"))
-                )
+            # payload shuffle. The probe's cached rollup already holds
+            # the winning version per key; a broadcast join-back admits
+            # only rows carrying that version. Rows that lose LWW within
+            # the batch can never win against stored rows, so this is a
+            # pure pre-filter: the window below sees identical winners,
+            # ties (exact duplicate events) still collapse there, and
+            # stored-row-wins-on-tie is untouched (base rows are never
+            # pre-reduced). Cuts the fat-payload shuffle AND the window's
+            # row buffering by the events-per-key factor — measured here
+            # as the merge's dominant cost (UnsafeRow payload copies),
+            # and on a real cluster it is the network shuffle itself.
+            win = probe.winners()
             # null-safe on key and ts: a null-ts (or even null-key) event
             # must survive exactly as the window path would keep it
             cond = (
                 F.col(self.key_col).eqNullSafe(F.col("_k"))
                 & F.col(self.ts_col).eqNullSafe(F.col("_w._t"))
-                & (F.coalesce(F.col(_SEQ), neg) == F.col("_w._s"))
+                & (F.coalesce(F.col(_SEQ), F.lit(_NO_SEQ))
+                   == F.col("_w._s"))
             )
             # Force the broadcast only when the winner set is provably
             # small (its row count is bounded by the EVENT count). A
             # mostly-unique-key epoch near the prereduce gate would
-            # have ~total_events winners — forcing F.broadcast there
+            # have ~n_events winners — forcing F.broadcast there
             # bypasses autoBroadcastJoinThreshold and builds a multi-GB
             # hash relation on the driver and every executor. Past the
             # bound, leave the join unhinted: AQE sees the aggregated
             # side's ACTUAL runtime size and still broadcasts when it
             # is genuinely small (few distinct keys), else sort-merges
             # on the key — both strictly better than an OOM.
-            if total_events <= _PREREDUCE_FORCE_BROADCAST_MAX_EVENTS:
+            if n_events <= _PREREDUCE_FORCE_BROADCAST_MAX_EVENTS:
                 win = F.broadcast(win)
             src = src.join(win, cond, "inner").drop("_k", "_w")
 
-        if mode == "mor" and not force_overwrite and not unset_nulls:
+        n_part = max(len(probe.touched),
+                     self.spark.sparkContext.defaultParallelism)
+        if delta:
             # merge-on-read: never touch stored rows. One shuffle
             # clusters the (pre-reduced) batch by bucket; a window picks
             # exactly one winner per key (prereduction can leave exact
             # (key, ts, seq) duplicates — replay copies — which must
             # collapse so a delta commit holds at most one row per key,
             # the invariant read-time resolution and changes_between
-            # rely on); the bucketed write below then splits per-bucket
-            # files with no further shuffle.
-            n_part = max(len(touched),
-                         self.spark.sparkContext.defaultParallelism)
+            # rely on); the bucketed write then splits per-bucket files
+            # with no further shuffle.
             clustered = src.repartition(n_part, F.col(_BUCKET))
             w = Window.partitionBy(_BUCKET, self.key_col).orderBy(
                 F.col(self.ts_col).desc(), F.col(_SEQ).desc_nulls_last())
-            winners = (clustered.withColumn("_rn", F.row_number().over(w))
-                                .filter(F.col("_rn") == 1).drop("_rn"))
-            if finalize is not None:
-                winners = finalize(winners)
-            return self._write_and_commit(
-                winners, offsets, touched, data_cols, epoch_key,
-                stream_id, epoch_id, delta=True)
+            return (clustered.withColumn("_rn", F.row_number().over(w))
+                             .filter(F.col("_rn") == 1).drop("_rn"))
 
-        target = self.read(buckets=touched, include_deleted=True,
+        target = self.read(buckets=probe.touched, include_deleted=True,
                            include_internal=True)
         if force_overwrite:
             # autocorrect mode: the source IS the truth for its keys — the
             # stored row is dropped regardless of LWW order (reference
-            # re-upsert, DiffJobSession.java:255-258)
-            target = target.join(
-                src.select(self.key_col).distinct(), self.key_col, "left_anti"
-            )
+            # re-upsert, DiffJobSession.java:255-258); the key set comes
+            # from the probe's cache, not another source scan
+            target = target.join(probe.keys(self.key_col), self.key_col,
+                                 "left_anti")
         target = target.withColumn("_is_src", F.lit(0))
         src = src.withColumn("_is_src", F.lit(1))
         unioned = target.select(src.columns).unionByName(src)
@@ -978,9 +981,7 @@ class LakeTable:
         # function of the key, grouping is identical, and Catalyst's
         # ClusteredDistribution is already satisfied by the bucket hash
         # partitioning, so the window adds only a partition-local sort.
-        # The bucketed write below then needs no second repartition.
-        n_part = max(len(touched),
-                     self.spark.sparkContext.defaultParallelism)
+        # The bucketed write then needs no second repartition.
         unioned = unioned.repartition(n_part, F.col(_BUCKET))
 
         # LWW: newest (ts, seq) wins; tie → stored row wins (idempotence)
@@ -1010,13 +1011,7 @@ class LakeTable:
                 ranked = ranked.withColumn(c, F.last(c, ignorenulls=True).over(genw))
             ranked = ranked.withColumn("_rn", F.row_number().over(w))
 
-        merged = ranked.filter(F.col("_rn") == 1).drop("_rn", "_is_src", "_gen") \
-            if unset_nulls else ranked.filter(F.col("_rn") == 1).drop("_rn", "_is_src")
-        if finalize is not None:
-            merged = finalize(merged)
-
-        return self._write_and_commit(
-            merged, offsets, touched, data_cols, epoch_key, stream_id, epoch_id)
+        return ranked.filter(F.col("_rn") == 1).drop("_rn", "_is_src", "_gen")
 
     def _commit_empty_epoch(
         self, epoch_key: str | None, stream_id: str | None,
@@ -1030,10 +1025,7 @@ class LakeTable:
         if stream_id is None or epoch_id is None:
             return MergeResult(epoch_key=epoch_key, skipped=False,
                                version=self.version)
-        m = json.loads(json.dumps(self.manifest))
-        m["version"] = self.version + 1
-        m["parent"] = self.version
-        m["epoch_key"] = epoch_key
+        m = self._successor_manifest(epoch_key)
         m["epoch_fence"][stream_id] = max(
             epoch_id, m["epoch_fence"].get(stream_id, -1))
         m["lineage"] = []
@@ -1041,61 +1033,101 @@ class LakeTable:
         return MergeResult(epoch_key=epoch_key, skipped=False,
                            version=m["version"])
 
-    def _ts_stats_enabled(self) -> bool:
-        ts_type = next((f["type"] for f in self.current_fields()
-                        if f["name"] == self.ts_col), "")
-        return ts_type in ("timestamp", "timestamp_ntz")
+    def _typed_source(
+        self, source: DataFrame, seq_col: str, data_cols: Sequence[str] = (),
+        op_col: str | None = None, keep: Sequence[str] = (),
+    ) -> DataFrame:
+        """``source`` projected to the table's registered types: key,
+        ts, ``data_cols``, ``_SEQ`` and ``_BUCKET``, plus ``_DELETED``
+        from ``op_col`` and the ``keep`` columns as they are.
 
-    def _collect_ts_stats(self, absdir: str) -> dict[int, tuple[int, int]]:
-        """Per-bucket (min, max) event time of a freshly written data
-        dir, as epoch micros — one column-pruned scan of (bucket, ts).
-        Empty when the ts column is not a timestamp type."""
-        if not self._ts_stats_enabled():
-            return {}
-        tsm = F.unix_micros(F.col(self.ts_col).cast("timestamp"))
-        rows = (self.spark.read.parquet(absdir)
-                .groupBy(F.col(_BUCKET))
-                .agg(F.min(tsm).alias("_lo"), F.max(tsm).alias("_hi"))
-                .collect())
-        return {r[_BUCKET]: (int(r["_lo"]), int(r["_hi"]))
-                for r in rows if r["_lo"] is not None}
+        The cast is a no-op (erased by SimplifyCasts) when the types
+        already match, a lossless promotion for narrower events, and a
+        LOUD ANSI overflow error for wider-than-schema values — without
+        it, a wider event column union-coerces the whole merge frame and
+        the written files' physical type contradicts the table schema,
+        breaking every later read of the bucket."""
+        typed = {f["name"]: _parse_type(f["type"])
+                 for f in self.current_fields()}
+        return source.select(
+            F.col(self.key_col).cast(typed[self.key_col]),
+            F.col(self.ts_col).cast(typed[self.ts_col]),
+            *[F.col(c).cast(typed[c]).alias(c) for c in data_cols],
+            *([(F.col(op_col) == F.lit("delete")).alias(_DELETED)]
+              if op_col is not None else []),
+            F.col(seq_col).cast("long").alias(_SEQ),
+            *keep,
+        ).withColumn(_BUCKET, self.bucket_of(self.key_col))
 
-    def _probe_source(
-        self, src: DataFrame
-    ) -> tuple[list[int], dict[int, dict]]:
-        """Single aggregation pass over the batch: touched buckets plus
-        per-bucket (min_seq, max_seq, events) for lineage. Column pruning
-        keeps payload columns out of this scan."""
-        rows = src.groupBy(_BUCKET).agg(
-            F.min(_SEQ).alias("min_seq"), F.max(_SEQ).alias("max_seq"),
-            F.count("*").alias("events"),
-        ).collect()
-        offsets = {r[_BUCKET]: {"min_seq": r["min_seq"],
-                                "max_seq": r["max_seq"],
-                                "events": r["events"]}
-                   for r in rows}
-        return sorted(offsets), offsets
+    def probe(self, source: DataFrame, seq_col: str = "seq",
+              status_col: str | None = None) -> Probe:
+        """THE probe of a change batch: one persisted per-(bucket, key)
+        rollup over the batch's typed key/ts/seq columns (payloads are
+        pruned), re-aggregated per bucket into the touched buckets and
+        the lineage offsets ``(min_seq, max_seq, events)``. The same
+        cache then serves the merge's pre-reduction join-back (the
+        per-key winner version) and ``force_overwrite``'s key set, so
+        the merge reads its source once more only in its write job.
+
+        ``status_col`` names a column that is null on the rows the
+        merge will receive and holds a reject label otherwise (the
+        pipeline's skipped/quarantined tags): the labels are counted in
+        ``Probe.rejects`` from the same job. The caller unpersists the
+        returned probe."""
+        status = [status_col] if status_col is not None else []
+        src = self._typed_source(source, seq_col, keep=status)
+        # clustered by bucket: the rollup's partitioning then already
+        # satisfies the per-bucket re-aggregation below, which runs over
+        # the cache with no second shuffle (one Spark job fewer per
+        # probe than hashing on (bucket, key); the thin key/ts/seq rows
+        # shuffle without a map-side combine)
+        perkey = (
+            src.repartition(F.col(_BUCKET))
+            .groupBy(*status, F.col(_BUCKET).alias("_b"),
+                     F.col(self.key_col).alias("_k"))
+            .agg(F.max(F.struct(
+                     F.col(self.ts_col).alias("_t"),
+                     F.coalesce(F.col(_SEQ), F.lit(_NO_SEQ)).alias("_s")))
+                  .alias("_w"),
+                 F.min(_SEQ).alias("mn"), F.max(_SEQ).alias("mx"),
+                 F.count("*").alias("n"))
+            .persist())
+        offsets: dict[int, dict] = {}
+        rejects: dict[str, int] = {}
+        for r in (perkey.groupBy(*status, "_b")
+                  .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"),
+                       F.sum("n").alias("n"))
+                  .collect()):
+            label = r[status_col] if status_col is not None else None
+            if label is None:
+                offsets[r["_b"]] = {"min_seq": r["mn"], "max_seq": r["mx"],
+                                    "events": int(r["n"])}
+            else:
+                rejects[label] = rejects.get(label, 0) + int(r["n"])
+        return Probe(perkey, sorted(offsets), offsets, rejects, status_col)
 
     def _write_and_commit(
         self,
         merged: DataFrame,
         offsets: dict[int, dict],
         touched: list[int],
-        data_cols: list[str],
         epoch_key: str | None,
         stream_id: str | None,
         epoch_id: int | None,
         counter_watermark: tuple[str, int] | None = None,
         delta: bool = False,
     ) -> MergeResult:
-        """Shared tail of every merge flavor: bucketed write (no extra
-        shuffle — ``merged`` is already clustered by ``_bucket``),
-        per-bucket lineage/checksum rows, atomic manifest commit with the
-        epoch fence advanced (and, for watermarked counter merges, the
-        per-stream seq high-watermark recorded in the SAME atomic
-        commit — the watermark can never run ahead of or behind the
-        data it fences).
+        """THE commit tail of every write (merges, compaction, seeds and
+        repairs): bucketed write (no extra shuffle — ``merged`` is
+        already clustered by ``_bucket``), per-bucket lineage/checksum
+        rows, atomic manifest commit with the epoch fence advanced (and,
+        for watermarked counter merges, the per-stream seq high-
+        watermark recorded in the SAME atomic commit — the watermark can
+        never run ahead of or behind the data it fences).
 
+        ``touched`` is the replace scope: each listed bucket's file list
+        becomes this commit's files for it (the bucket leaves the
+        manifest when it got no rows).
         ``delta=True`` (merge-on-read commit): the new files are
         APPENDED to each touched bucket's entry list, flagged
         ``{"delta": true, "dv": <this commit's version>}``, instead of
@@ -1111,7 +1143,7 @@ class LakeTable:
         ck = F.when(~F.col(_DELETED),
                     row_checksum_expr(*hash_safe_cols(
                         merged.schema,
-                        [self.key_col, self.ts_col, *data_cols]))) \
+                        [self.key_col, self.ts_col, *self._data_cols()]))) \
              .otherwise(F.lit(0)).cast("long")
         (merged.withColumn(_CK, ck)
                .withColumn(_PB, F.col(_BUCKET))
@@ -1124,8 +1156,8 @@ class LakeTable:
         # actually durable on disk. Reads ONLY (_bucket, _deleted, _ck):
         # a column-pruned parquet scan that never touches payloads —
         # the per-epoch lineage cost is O(rows) over 13 bytes/row, not
-        # a full re-read.
-        written = self.spark.read.parquet(absdir)
+        # a full re-read. A write of zero rows (a scoped overwrite
+        # clearing its buckets) leaves no file: nothing to scan.
         aggs = [
             F.sum(F.when(~F.col(_DELETED), 1).otherwise(0)).alias("live_rows"),
             F.count("*").alias("rows_with_tombstones"),
@@ -1136,15 +1168,19 @@ class LakeTable:
         # — stamped on the manifest file entries so time-scoped reads
         # can skip whole files (Iceberg column-stats pruning). Widens
         # the lineage scan from 3 to 4 thin columns; still no payloads.
-        with_ts_stats = self._ts_stats_enabled()
+        with_ts_stats = next(
+            f["type"] for f in self.current_fields()
+            if f["name"] == self.ts_col) in ("timestamp", "timestamp_ntz")
         if with_ts_stats:
             tsm = F.unix_micros(F.col(self.ts_col).cast("timestamp"))
             aggs += [F.min(tsm).alias("_ts_min"),
                      F.max(tsm).alias("_ts_max")]
-        lineage_df = written.groupBy(F.col(_BUCKET)).agg(*aggs)
         ts_stats: dict[int, tuple[int, int]] = {}
         lineage_rows = []
-        for r in lineage_df.collect():
+        summary = (self.spark.read.parquet(absdir)
+                   .groupBy(F.col(_BUCKET)).agg(*aggs).collect()
+                   if files else [])
+        for r in summary:
             d = r.asDict()
             if with_ts_stats:
                 lo, hi = d.pop("_ts_min"), d.pop("_ts_max")
@@ -1167,10 +1203,7 @@ class LakeTable:
             "live_rows_touched": int(sum(l["live_rows"] for l in lineage_rows)),
         }
 
-        m = json.loads(json.dumps(self.manifest))
-        m["version"] = self.version + 1
-        m["parent"] = self.version
-        m["epoch_key"] = epoch_key
+        m = self._successor_manifest(epoch_key)
         for b in touched:
             stats = ts_stats.get(b)
             new_entries = [
@@ -1182,8 +1215,10 @@ class LakeTable:
             ]
             if delta:
                 m["files"].setdefault(str(b), []).extend(new_entries)
-            else:
+            elif new_entries:
                 m["files"][str(b)] = new_entries
+            else:  # a replaced bucket left without rows holds no files
+                m["files"].pop(str(b), None)
         if stream_id is not None and epoch_id is not None:
             m["epoch_fence"][stream_id] = max(
                 epoch_id, m["epoch_fence"].get(stream_id, -1)
@@ -1298,9 +1333,7 @@ class LakeTable:
                 return MergeResult(epoch_key=epoch_key, skipped=True,
                                    version=self.version)
 
-        schema_fields = self.current_fields()
-        data_cols = [f["name"] for f in schema_fields
-                     if f["name"] not in (self.key_col, self.ts_col)]
+        data_cols = self._data_cols()
         counter_cols = list(counter_cols or data_cols)
         extra = set(data_cols) - set(counter_cols)
         if extra:
@@ -1311,15 +1344,11 @@ class LakeTable:
         # same schema-is-the-contract cast as merge_batch: no-op when
         # types match, loud ANSI overflow when a delta exceeds the
         # registered counter type
-        typed = {f["name"]: _parse_type(f["type"]) for f in schema_fields}
-        src = source.select(
-            F.col(self.key_col).cast(typed[self.key_col]),
-            F.col(self.ts_col).cast(typed[self.ts_col]),
-            *[F.col(c).cast(typed[c]).alias(c) for c in counter_cols],
-            F.col(seq_col).cast("long").alias(_SEQ),
-        ).withColumn(_BUCKET, self.bucket_of(self.key_col))
-
-        touched, offsets = self._probe_source(src)
+        src = self._typed_source(source, seq_col, counter_cols)
+        # only the bucket-level result is used: counters never pre-reduce
+        probe = self.probe(source, seq_col)
+        probe.unpersist()
+        touched, offsets = probe.touched, probe.offsets
         if not touched:
             if watermark:
                 # nothing past the watermark: a byte-identical replay —
@@ -1369,7 +1398,7 @@ class LakeTable:
             .unionByName(tombstones)
         )
         return self._write_and_commit(
-            merged, offsets, touched, data_cols, epoch_key, stream_id,
+            merged, offsets, touched, epoch_key, stream_id,
             epoch_id, counter_watermark=wm_update)
 
     # ---------------------------------------------------- schema evolution
@@ -1378,30 +1407,24 @@ class LakeTable:
         """Add a nullable column (new field id) — metadata-only commit."""
         if name in [f["name"] for f in self.current_fields()]:
             raise ValueError(f"column {name!r} exists")
-        m = json.loads(json.dumps(self.manifest))
-        fields = json.loads(json.dumps(self.current_fields()))
-        fields.append({"id": m["next_field_id"], "name": name,
-                       "type": type_ddl, "nullable": True})
-        m["next_field_id"] += 1
-        self._bump_schema(m, fields)
+        fid = self.manifest["next_field_id"]
+        self._bump_schema(
+            [*self.current_fields(),
+             {"id": fid, "name": name, "type": type_ddl, "nullable": True}],
+            next_field_id=fid + 1)
 
     def rename_column(self, old: str, new: str) -> None:
         """Rename a column keeping its field id — old files keep working."""
-        fields = json.loads(json.dumps(self.current_fields()))
-        names = [f["name"] for f in fields]
+        names = [f["name"] for f in self.current_fields()]
         if old not in names:
             raise ValueError(f"no column {old!r}")
         if new in names:
             raise ValueError(f"column {new!r} exists")
-        m = json.loads(json.dumps(self.manifest))
-        for f in fields:
-            if f["name"] == old:
-                f["name"] = new
-        if m["config"]["key_col"] == old:
-            m["config"]["key_col"] = new
-        if m["config"]["ts_col"] == old:
-            m["config"]["ts_col"] = new
-        self._bump_schema(m, fields)
+        self._bump_schema(
+            [{**f, "name": new} if f["name"] == old else f
+             for f in self.current_fields()],
+            config={k: new for k in ("key_col", "ts_col")
+                    if self.manifest["config"][k] == old})
 
     def drop_column(self, name: str) -> None:
         """Drop a data column — metadata-only commit (Iceberg drop
@@ -1413,17 +1436,15 @@ class LakeTable:
         values never leak back into the new column. The key, ts, and
         expires columns cannot be dropped (the table's contract depends
         on them)."""
-        fields = json.loads(json.dumps(self.current_fields()))
-        names = [f["name"] for f in fields]
-        if name not in names:
+        fields = self.current_fields()
+        if name not in [f["name"] for f in fields]:
             raise ValueError(f"no column {name!r}")
         protected = {self.key_col, self.ts_col, self.expires_col} - {None}
         if name in protected:
             raise ValueError(
                 f"cannot drop {name!r}: key/ts/expiry columns are the "
                 f"table's contract")
-        m = json.loads(json.dumps(self.manifest))
-        self._bump_schema(m, [f for f in fields if f["name"] != name])
+        self._bump_schema([f for f in fields if f["name"] != name])
 
     # safe widenings: every old value is exactly representable in the
     # new type, so files written before the change read back unchanged
@@ -1444,8 +1465,8 @@ class LakeTable:
         stored value reads back equal. Narrowing or cross-family casts
         are refused: they would silently corrupt history."""
         new_type = new_type.strip().lower()
-        fields = json.loads(json.dumps(self.current_fields()))
-        f = next((f for f in fields if f["name"] == name), None)
+        f = next((f for f in self.current_fields() if f["name"] == name),
+                 None)
         if f is None:
             raise ValueError(f"no column {name!r}")
         old_type = f["type"].strip().lower()
@@ -1455,24 +1476,27 @@ class LakeTable:
             raise ValueError(
                 f"refusing {old_type} -> {new_type} for {name!r}: not a "
                 f"lossless widening ({sorted(self._WIDENINGS)})")
-        f["type"] = new_type
-        m = json.loads(json.dumps(self.manifest))
-        self._bump_schema(m, fields)
+        self._bump_schema(
+            [{**g, "type": new_type} if g is f else g
+             for g in self.current_fields()])
 
-    def _bump_schema(self, m: dict, fields: list[dict]) -> None:
+    def _bump_schema(self, fields: list[dict], config: dict | None = None,
+                     next_field_id: int | None = None) -> None:
+        """Metadata-only commit of ``fields`` as the next schema version
+        (with the given ``config`` entries and field-id counter)."""
+        m = self._successor_manifest()
+        m["config"].update(config or {})
+        if next_field_id is not None:
+            m["next_field_id"] = next_field_id
         m["schema_version"] = self.schema_version + 1
         m["schemas"][str(m["schema_version"])] = fields
-        m["version"] = self.version + 1
-        m["parent"] = self.version
-        m["epoch_key"] = None
         self._commit(m)
 
     # ------------------------------------------------------------ utility
 
     def checksums(self) -> DataFrame:
         """Per-bucket ``(bucket, row_count, checksum)`` over live rows."""
-        data_cols = [f["name"] for f in self.current_fields()
-                     if f["name"] not in (self.key_col, self.ts_col)]
+        data_cols = self._data_cols()
         live = self.read(include_internal=True)
         return (
             live
@@ -1612,10 +1636,8 @@ class LakeTable:
         n_part = max(len(buckets),
                      self.spark.sparkContext.defaultParallelism)
         clustered = rows.repartition(n_part, F.col(_BUCKET))
-        data_cols = [f["name"] for f in self.current_fields()
-                     if f["name"] not in (self.key_col, self.ts_col)]
         return self._write_and_commit(
-            clustered, offsets={}, touched=buckets, data_cols=data_cols,
+            clustered, offsets={}, touched=buckets,
             epoch_key=None, stream_id=None, epoch_id=None)
 
     def clone_to(self, path: str, version: int | None = None,

@@ -43,12 +43,10 @@ from cassandra_data_migrator_spark.functions.udfs import extract_text, normalize
 from cassandra_data_migrator_spark.lake.table import (
     LakeTable,
     MergeResult,
+    Probe,
     retry_on_conflict,
 )
-from cassandra_data_migrator_spark.operators.filters import (
-    split_events,
-    split_predicates,
-)
+from cassandra_data_migrator_spark.operators.filters import split_predicates
 from cassandra_data_migrator_spark.sources.event_log import read_event_stream
 
 LINEAGE_SCHEMA = (
@@ -164,14 +162,41 @@ class CdcPipeline:
     # ------------------------------------------------------------ core
 
     def _prepare(self, events: DataFrame,
-                 epoch_id: int = 0) -> tuple[DataFrame, int, int]:
-        """Filters + vectorized transforms; returns (batch, n_skip, n_quar)."""
-        valid, skipped, quarantined = split_events(events, self.config)
+                 epoch_id: int) -> tuple[DataFrame, Probe | None, int, int]:
+        """Filters + vectorized transforms; returns ``(batch, probe,
+        n_skip, n_quar)``.
 
-        n_skip = self._side_sink(skipped, self.skipped_path, epoch_id)
-        n_quar = self._side_sink(quarantined, self.quarantine_path, epoch_id)
-
-        batch = valid
+        ONE probe over the status-tagged batch yields the reject counts
+        together with everything the merge needs from its own probe
+        (touched buckets, lineage offsets, per-key winner versions).
+        Reject ROWS are only written when their count is non-zero (the
+        rare path), and always before the merge commits: the epoch fence
+        then guards their exactly-once. A custom ``transform`` may add
+        or drop rows and reshape the key, so there one thin count of the
+        tagged frame gives the reject counts and the merge probes the
+        transformed batch itself (``probe`` is None). Otherwise the
+        caller unpersists the returned probe after the merge."""
+        out, keep, valid_keys = split_predicates(events, self.config)
+        tag = out.withColumn(
+            "_status",
+            F.when(~valid_keys, F.lit("quarantined"))
+             .when(~keep, F.lit("skipped")))
+        if self.transform is None:
+            probe = self.table.probe(tag, seq_col=self.config.seq_col,
+                                     status_col="_status")
+            rejects = probe.rejects
+        else:
+            probe = None
+            rejects = {r["_status"]: r["count"] for r in
+                       tag.groupBy("_status").count().collect()}
+        n_skip = rejects.get("skipped", 0)
+        n_quar = rejects.get("quarantined", 0)
+        for label, n, path in (("skipped", n_skip, self.skipped_path),
+                               ("quarantined", n_quar, self.quarantine_path)):
+            if n:
+                self._side_sink(tag.filter(F.col("_status") == label)
+                                .drop("_status"), path, epoch_id)
+        batch = tag.filter(F.col("_status").isNull()).drop("_status")
         if self.salt_transform_stage and not self.lazy_extract:
             # break hot-domain skew BEFORE the expensive Python UDF stage:
             # rows are independent here, so a salted repartition levels
@@ -195,7 +220,7 @@ class CdcPipeline:
             batch = self._redact(batch)
         if self.transform is not None:
             batch = self.transform(batch)
-        return batch, n_skip, n_quar
+        return batch, probe, n_skip, n_quar
 
     def _redact(self, df: DataFrame) -> DataFrame:
         """PII scrub of the configured columns (no-op when unset or
@@ -231,131 +256,25 @@ class CdcPipeline:
                                        normalize_lang(F.col("lang")))
         return self._redact(merged)
 
-    def _side_sink(self, df: DataFrame, path: str, epoch_id: int) -> int:
-        """Persist rejected rows for this epoch; returns their count.
+    def _side_sink(self, df: DataFrame, path: str, epoch_id: int) -> None:
+        """Persist this epoch's rejected rows (the caller already knows
+        their count from the probe and calls this only when it is
+        non-zero).
 
         DATA-plane I/O by design: rejected rows can be arbitrarily many,
-        so they are written and counted by Spark itself (any
-        Hadoop-visible URI — local, s3a, gs), not the driver-side
-        metadata seam. Only bounded driver-side bookkeeping (lineage,
-        counters, run_details, manifests) routes through ``table.fs``.
-
-        Exactly ONE pass over the reject predicate's (column-pruned)
-        scan: write unconditionally, then count from the parquet footers
-        of the just-written directory — a metadata-only read. (A
-        take(1) pre-probe costs a full extra scan precisely when
-        nothing is rejected, the common case; a statically-empty reject
-        side — e.g. no filters configured — constant-folds to an empty
-        write, no scan at all.) Overwrite keeps checkpoint redelivery
-        of the epoch idempotent.
+        so they are written by Spark itself (any Hadoop-visible URI —
+        local, s3a, gs), not the driver-side metadata seam. Only bounded
+        driver-side bookkeeping (lineage, counters, run_details,
+        manifests) routes through ``table.fs``. Overwrite keeps
+        checkpoint redelivery of the epoch idempotent.
         """
-        target = os.path.join(path, f"epoch={epoch_id}")
-        df.write.mode("overwrite").parquet(target)
-        return self.spark.read.parquet(target).count()
-
-    def _prepare_probed(
-        self, events: DataFrame, epoch_id: int
-    ) -> tuple[DataFrame, tuple[list[int], dict[int, dict]], int, int,
-               DataFrame | None]:
-        """Single-job variant of :meth:`_prepare`: ONE aggregation over
-        the status-tagged batch yields the reject counts, the merge's
-        per-bucket probe offsets, AND the LWW winner version per key
-        (the merge's pre-reduction input) together — one thin scan of
-        the source where the probe agg and the winner-key agg used to
-        scan it separately, and 3 driver jobs per epoch instead of ~6
-        (the fixed per-epoch job-gap tail is the last Amdahl term once
-        row work is distributed). The per-key rollup is cached (tiny:
-        one ~40 B row per distinct (status, key)); the bucket-level
-        offsets re-aggregate it without touching the source, and the
-        merge's broadcast join-back reads the same cache. Reject ROWS
-        are only materialized when their counts are non-zero (the rare
-        path). Requires row-preserving config (no custom ``transform``).
-
-        Returns ``(batch, probed, n_skip, n_quar, perkey)`` — the
-        caller owns unpersisting ``perkey`` after the merge."""
-        out, keep, valid_keys = split_predicates(events, self.config)
-        tag = out.withColumn(
-            "_status",
-            F.when(~valid_keys, F.lit("quarantined"))
-             .when(~keep, F.lit("skipped")).otherwise(F.lit("valid")))
-        seq = (F.col(self.config.seq_col).cast("long")
-               if self.config.seq_col in tag.columns
-               else F.lit(None).cast("long"))
-        # winner version struct — MUST mirror merge_batch's internal
-        # pre-reduction exactly: (ts, coalesce(seq :: long, -2^63)) max
-        neg = F.lit(-(2 ** 63))
-        perkey = (
-            tag.groupBy(
-                "_status",
-                F.col(self.config.key_col).alias("_k"),
-                self.table.bucket_of(self.config.key_col).alias("_b"))
-            .agg(F.max(F.struct(
-                     F.col(self.config.ts_col).alias("_t"),
-                     F.coalesce(seq, neg).alias("_s"))).alias("_w"),
-                 F.min(seq).alias("mn"), F.max(seq).alias("mx"),
-                 F.count("*").alias("n"))
-            .persist())
-        stats = (
-            perkey.groupBy("_status", "_b")
-            .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"),
-                 F.sum("n").alias("n"))
-            .collect())
-        offsets = {r["_b"]: {"min_seq": r["mn"], "max_seq": r["mx"],
-                             "events": int(r["n"])}
-                   for r in stats if r["_status"] == "valid"}
-        n_skip = sum(int(r["n"]) for r in stats if r["_status"] == "skipped")
-        n_quar = sum(int(r["n"])
-                     for r in stats if r["_status"] == "quarantined")
-        if n_skip:
-            self._side_sink(tag.filter(F.col("_status") == "skipped")
-                            .drop("_status"), self.skipped_path, epoch_id)
-        if n_quar:
-            self._side_sink(tag.filter(F.col("_status") == "quarantined")
-                            .drop("_status"), self.quarantine_path, epoch_id)
-        batch = tag.filter(F.col("_status") == "valid").drop("_status")
-        if self.salt_transform_stage and not self.lazy_extract:
-            # mirror _prepare: level hot-domain skew before the eager
-            # Arrow extraction (same rationale/partition count as there)
-            n_tasks = max(self.spark.sparkContext.defaultParallelism * 2, 16)
-            batch = batch.repartition(
-                n_tasks,
-                *salted_partition_exprs(self.config.key_col,
-                                        self.config.n_buckets,
-                                        self.config.salt_buckets)
-            )
-        if not self.lazy_extract:
-            if "html" in batch.columns and "text" not in batch.columns:
-                batch = batch.withColumn("text", extract_text(F.col("html")))
-            if "lang" in batch.columns:
-                batch = batch.withColumn("lang",
-                                         normalize_lang(F.col("lang")))
-        return batch, (sorted(offsets), offsets), n_skip, n_quar, perkey
+        df.write.mode("overwrite").parquet(
+            os.path.join(path, f"epoch={epoch_id}"))
 
     def apply_batch(self, events: DataFrame, epoch_id: int) -> MergeResult:
         """One micro-batch: the foreachBatch body (also callable directly
         for batch replays)."""
-        probed = None
-        perkey = None
-        prereduced = None
-        if self.transform is None:
-            # combined path: probe + reject counts + winner versions in
-            # one job
-            batch, probed, n_skip, n_quar, perkey = self._prepare_probed(
-                events, epoch_id)
-            n_valid = sum(o["events"] or 0 for o in probed[1].values())
-            # hand the merge its pre-reduction input only when its own
-            # gate would engage (merge re-checks; this avoids caching a
-            # frame the merge would ignore)
-            if (self.config.lww_prereduce_max_events and not self.unset_nulls
-                    and 0 < n_valid
-                    <= self.config.lww_prereduce_max_events):
-                prereduced = (perkey
-                              .filter(F.col("_status") == "valid")
-                              .select("_k", "_w"))
-        else:
-            # a custom transform may drop/add rows, so the pre-computed
-            # offsets would lie — fall back to the per-sink path
-            batch, n_skip, n_quar = self._prepare(events, epoch_id)
+        batch, probe, n_skip, n_quar = self._prepare(events, epoch_id)
         # no persist of the batch itself: the probe pass prunes to thin
         # columns, so the Arrow UDF transform columns are computed
         # exactly once — in the merge's write traversal. Caching the
@@ -382,15 +301,12 @@ class CdcPipeline:
                     unset_nulls=self.unset_nulls,
                     finalize=self._finalize if self.lazy_extract
                     else None,
-                    probed=probed,
-                    prereduce_max_events=self.config
-                    .lww_prereduce_max_events,
-                    prereduced=prereduced,
+                    probe=probe,
                 ),
                 _reload, attempts=4)
         finally:
-            if perkey is not None:
-                perkey.unpersist()
+            if probe is not None:
+                probe.unpersist()
         if not result.skipped:
             self._record(result, epoch_id, n_skip, n_quar)
             self._maybe_compact_deltas()
@@ -407,17 +323,20 @@ class CdcPipeline:
         thresh = self.config.mor_compact_min_deltas
         if not thresh:
             return
-        hot = [b for b, n in self.table.delta_file_counts().items()
-               if n >= thresh]
-        if not hot:
-            return
+
+        def _compact_hot() -> MergeResult | None:
+            # recomputed per attempt: after a conflict the reloaded
+            # manifest may show a rival already folded some or all of
+            # them, and then there is nothing left to rewrite
+            hot = [b for b, n in self.table.delta_file_counts().items()
+                   if n >= thresh]
+            return self.table.compact(buckets=hot) if hot else None
 
         def _reload() -> None:
             self.conflict_retries += 1
             self.table._load_latest()
 
-        retry_on_conflict(
-            lambda: self.table.compact(buckets=hot), _reload, attempts=4)
+        retry_on_conflict(_compact_hot, _reload, attempts=4)
 
     def _record(self, result: MergeResult, epoch_id: int,
                 n_skip: int, n_quar: int) -> None:

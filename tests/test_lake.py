@@ -197,6 +197,46 @@ def test_overwrite_bootstrap(spark, table):
     assert sum(r["row_count"] for r in cs) == 2
 
 
+def test_seed_and_repair_commits_carry_lineage_and_stats(spark, table):
+    """Seeds (full overwrite) and repairs (bucket-scoped overwrite) go
+    through the merge's commit tail: each bucket's manifest lineage
+    (live_rows, checksum) equals checksums(), every new file entry has
+    ts stats, and a scoped overwrite with zero rows still commits."""
+    pages = spark.createDataFrame(
+        [(f"u{i}", ts(i), b"<p>x</p>", f"t{i}", "en") for i in range(20)],
+        WEB_SCHEMA)
+
+    def lineage_matches_checksums(scope):
+        lineage = {ln["_bucket"]: (ln["live_rows"], ln["checksum"])
+                   for ln in table.lineage_rows()}
+        state = {r["bucket"]: (r["row_count"], int(r["checksum"]))
+                 for r in table.checksums().collect()
+                 if r["bucket"] in scope}
+        assert lineage == state
+        for b in scope:
+            for e in table.manifest["files"].get(str(b), []):
+                assert e["ts_min"] <= e["ts_max"]
+
+    table.overwrite(pages)
+    lineage_matches_checksums(range(table.n_buckets))
+    assert sum(ln["live_rows"] for ln in table.lineage_rows()) == 20
+
+    buckets = sorted({r["b"] for r in pages.select(
+        table.bucket_of("url").alias("b")).collect()})
+    b0, b1 = buckets[:2]
+    repl = pages.filter(table.bucket_of("url") == b0) \
+        .withColumn("text", F.lit("repaired"))
+    table.overwrite(repl, buckets=[b0, b1])
+    lineage_matches_checksums([b0, b1])
+    assert {ln["_bucket"] for ln in table.lineage_rows()} == {b0}
+    assert str(b1) not in table.manifest["files"]
+
+    v = table.version
+    assert table.overwrite(pages.limit(0), buckets=[b0]) == v + 1
+    assert str(b0) not in table.manifest["files"]
+    assert table.lineage_rows() == []
+
+
 COUNTER_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("warc_ts", T.TimestampType(), True),
@@ -407,9 +447,9 @@ def test_compact_migrates_old_schema_files(spark, table):
             for r in table.read().collect()} == state
 
 
-def test_lww_prereduce_equivalence(spark, tmpdir_path):
-    """The LWW pre-reduction (thin winner-key broadcast pre-filter,
-    merge_batch prereduce_max_events) must be invisible semantically:
+def test_lww_prereduce_equivalence(spark, tmpdir_path, monkeypatch):
+    """The LWW pre-reduction (thin winner-key broadcast pre-filter, gated
+    by lake.table._PREREDUCE_MAX_EVENTS) must be invisible semantically:
     same final state, same checksums as the unreduced window merge, on a
     batch with multi-event keys, deletes, exact duplicates, late events,
     and a null-seq event."""
@@ -430,16 +470,19 @@ def test_lww_prereduce_equivalence(spark, tmpdir_path):
     ev = ev.unionByName(mk_events(spark, [(0, "insert", "https://e/5", 100, "e1")])
                         .withColumn("seq", F.lit(None).cast("long")))
 
+    from cassandra_data_migrator_spark.lake import table as table_mod
+
     states = {}
     for mode, max_ev in (("on", 32_000_000), ("off", 0)):
+        monkeypatch.setattr(table_mod, "_PREREDUCE_MAX_EVENTS", max_ev)
         t = LakeTable.create(spark, os.path.join(tmpdir_path, f"t_{mode}"),
                              WEB_SCHEMA, EngineConfig(n_buckets=8))
-        t.merge_batch(ev, prereduce_max_events=max_ev)
+        t.merge_batch(ev)
         # second epoch on an existing base: stored-wins-on-tie must hold
         t.merge_batch(mk_events(spark, [
             (9, "update", "https://d/4", 100, "dX"),  # ties stored → loses
             (20, "update", "https://a/1", 500, "a5"),
-        ]), prereduce_max_events=max_ev)
+        ]))
         states[mode] = (
             final_state(t),
             {r["bucket"]: (r["row_count"], int(r["checksum"]))

@@ -485,6 +485,45 @@ def test_inline_auto_compaction_bounds_delta_depth(spark, tmpdir_path):
     assert mor.manifest["epoch_fence"]["s"] >= 5
 
 
+def test_inline_compaction_retry_skips_buckets_a_rival_folded(
+        spark, tmpdir_path, monkeypatch):
+    """A rival handle folds the hot buckets while the pipeline's inline
+    compaction is in flight: the first attempt loses the manifest race,
+    the retry recomputes the hot list from the reloaded manifest, finds
+    it empty and rewrites nothing."""
+    from cassandra_data_migrator_spark.streaming import CdcPipeline
+
+    mor = mk_table(spark, tmpdir_path, "mor", n_buckets=4)
+    cfg = EngineConfig(n_buckets=4, merge_mode="mor",
+                       mor_compact_min_deltas=2)
+    p = CdcPipeline(spark, mor, cfg, stream_id="s")
+    keys = [f"https://k/{i}" for i in range(16)]
+    p.apply_batch(mk_events(spark, [
+        (i, "insert", k, 100, "a") for i, k in enumerate(keys)]), epoch_id=0)
+
+    real_compact = LakeTable.compact
+    calls, rival_versions = [], []
+
+    def racing_compact(self, buckets=None, min_files=2):
+        calls.append(sorted(buckets))
+        if len(calls) == 1:
+            rival = LakeTable(spark, self.path)
+            rival_versions.append(real_compact(rival, buckets=buckets).version)
+        return real_compact(self, buckets=buckets, min_files=min_files)
+
+    monkeypatch.setattr(LakeTable, "compact", racing_compact)
+    p.apply_batch(mk_events(spark, [
+        (100 + i, "update", k, 200, "b") for i, k in enumerate(keys)]),
+        epoch_id=1)
+
+    assert len(calls) == 1 and calls[0]       # the retry compacted nothing
+    assert p.conflict_retries == 1
+    assert mor.version == rival_versions[0]   # nothing committed after it
+    assert mor.delta_file_counts() == {}
+    assert {r["url"]: r["text"] for r in mor.read().collect()} == {
+        k: "b" for k in keys}
+
+
 def test_migrate_cli_auto_compact_deltas(spark, tmpdir_path, capsys):
     import json as _json
 

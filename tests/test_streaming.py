@@ -186,9 +186,9 @@ def test_run_info_rollup_with_known_rejects(spark, tmpdir_path):
 
 
 def test_probed_path_counts_null_predicate_as_skipped(spark, tmpdir_path):
-    """_prepare_probed (the transform=None fast path) must agree with
-    split_events on NULL-predicate rows: skipped, never 'valid' or
-    silently dropped (ADVICE r2)."""
+    """_prepare's status tagging (the transform=None probe path) must
+    agree with split_events on NULL-predicate rows: skipped, never
+    'valid' or silently dropped (ADVICE r2)."""
     import datetime as dt
 
     t = mk_table(spark, tmpdir_path, "t")
@@ -219,14 +219,14 @@ def test_probed_path_counts_null_predicate_as_skipped(spark, tmpdir_path):
 
 def test_probed_path_applies_salted_repartition(spark, tmpdir_path):
     """With eager extraction (lazy_extract=False) + salting on, the
-    probed fast path must level hot-domain skew before the Arrow UDF
-    stage exactly like _prepare does (ADVICE r2)."""
+    probe path of _prepare must level hot-domain skew before the Arrow
+    UDF stage (ADVICE r2)."""
     t = mk_table(spark, tmpdir_path, "t")
     p = CdcPipeline(spark, t, stream_id="s",
                     lazy_extract=False, salt_transform_stage=True)
     ev = gen_change_events(spark, n_urls=20, n_events=50, seed=3)
-    batch, _probed, _s, _q, _pk = p._prepare_probed(ev, epoch_id=0)
-    _pk.unpersist()
+    batch, probe, _s, _q = p._prepare(ev, epoch_id=0)
+    probe.unpersist()
     # the salt expr hashes (key, monotonically_increasing_id)
     plan = batch._jdf.queryExecution().analyzed().toString()
     assert "RepartitionByExpression" in plan
@@ -271,7 +271,7 @@ def test_counters_count_skipped_and_quarantined(spark, tmpdir_path):
     assert t.read().count() == 2
 
 
-def test_fused_probe_prereduce_equivalence(spark, tmpdir_path):
+def test_fused_probe_prereduce_equivalence(spark, tmpdir_path, monkeypatch):
     """The combined probe+winner aggregation (one thin scan feeding
     offsets, reject counts AND the merge's pre-reduction) must be
     invisible: same final state, same counters as the same pipeline
@@ -304,14 +304,16 @@ def test_fused_probe_prereduce_equivalence(spark, tmpdir_path):
         (8, "update", "https://f/6", old, b"<p>f</p>", "en"),   # skipped
         (9, "update", None, ok, b"<p>g</p>", "en"),             # quarantined
     ]
+    from cassandra_data_migrator_spark.lake import table as table_mod
+
     counters, states = {}, {}
     for mode, max_ev in (("fused", 32_000_000), ("off", 0)):
+        monkeypatch.setattr(table_mod, "_PREREDUCE_MAX_EVENTS", max_ev)
         t = mk_table(spark, tmpdir_path, f"fp_{mode}")
         cfg = EngineConfig(
             n_buckets=8,
             writetime_min=dt.datetime(2023, 11, 15,
                                       tzinfo=dt.timezone.utc),
-            lww_prereduce_max_events=max_ev,
         )
         p = CdcPipeline(spark, t, cfg, stream_id=f"s_{mode}")
         p.apply_batch(spark.createDataFrame(rows, schema), epoch_id=0)
@@ -385,8 +387,9 @@ def test_finalize_empty_run_records_zero_totals(spark, tmpdir_path):
 def test_hot_domain_skew_salted_correctness(spark, tmpdir_path):
     """P2 salting, correctness-tested (was plan-tested only): a log
     where ONE url carries 60% of all events runs through BOTH eager
-    paths that engage the salted repartition — the per-sink path
-    (custom transform) and the fused probed path — and each converges
+    paths that engage the salted repartition — with a custom transform
+    (the merge probes itself) and without (the pipeline's probe) — and
+    each converges
     to the same LWW state as the unsalted lazy path and the plain
     window oracle. Salting must level the Arrow stage without
     changing a single winner."""
@@ -422,9 +425,9 @@ def test_hot_domain_skew_salted_correctness(spark, tmpdir_path):
         return {r["url"]: (r["warc_ts"], r["text"], r["lang"])
                 for r in t.read().collect()}
 
-    # eager + probed (fused rollup path, salted at pipeline.py mirror)
+    # eager, pipeline probe handed to the merge
     probed = replay("probed", lazy_extract=False)
-    # eager + custom transform (per-sink path, salted in _prepare)
+    # eager + custom transform (the merge probes the transformed batch)
     sink = replay("sink", lazy_extract=False, transform=lambda df: df)
     # lazy winner-side extraction (no salt stage — skew-free by
     # construction)

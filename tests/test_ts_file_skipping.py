@@ -150,3 +150,36 @@ def test_overwrite_seed_gets_stats_and_skips(spark, tmpdir_path):
     scanned = {f.replace("file://", "").replace("file:", "")
                for f in scoped.inputFiles()}
     assert len(scanned) < len(all_files)
+
+
+def test_naive_bound_is_utc_under_non_utc_driver_tz(spark, tmpdir_path):
+    """A naive ts_between bound means UTC for the file skip AND the row
+    filter, whatever the driver OS timezone: under TZ=America/Los_Angeles
+    a scoped read equals the same read with the bounds made UTC-aware
+    and the keys known to lie in the window."""
+    import time
+
+    t = mk(spark, tmpdir_path, "t")
+    t.merge_batch(ev(spark, [(1, "insert", "a", 100, "x"),
+                             (2, "insert", "b", 5 * 3600, "y"),
+                             (3, "insert", "c", 10 * 3600, "z")]))
+    lo = dt.datetime(2024, 1, 1, 4, 0)   # naive: 04:00 UTC
+    hi = dt.datetime(2024, 1, 1, 6, 0)   # naive: 06:00 UTC
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        got = sorted(r["url"] for r in
+                     t.read(ts_between=(lo, hi)).collect())
+        aware = sorted(r["url"] for r in t.read(ts_between=(
+            lo.replace(tzinfo=UTC), hi.replace(tzinfo=UTC))).collect())
+        open_lo = sorted(r["url"] for r in
+                         t.read(ts_between=(lo, None)).collect())
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert got == aware == ["b"]
+    assert open_lo == ["b", "c"]

@@ -56,10 +56,10 @@ def dir_bytes(path: str) -> int:
     return total
 
 
-def run_side(spark, base, mode, pages, epoch_frames):
+def run_side(spark, base, mode, pages, epoch_frames, n_buckets):
     t = LakeTable.create(
         spark, os.path.join(base, mode), SCHEMA,
-        EngineConfig(n_buckets=args.buckets, merge_mode=mode))
+        EngineConfig(n_buckets=n_buckets, merge_mode=mode))
     t.overwrite(pages)
     seeded = dir_bytes(t.path)
     t0 = time.time()
@@ -82,7 +82,6 @@ def run_side(spark, base, mode, pages, epoch_frames):
 
 
 def main():
-    global args
     ap = argparse.ArgumentParser()
     ap.add_argument("--urls", type=int, default=200_000)
     ap.add_argument("--epochs", type=int, default=12)
@@ -109,8 +108,8 @@ def main():
                         & (F.col("seq") < (i + 1) * args.events))
               for i in range(args.epochs)]
 
-    t_cow, cow = run_side(spark, base, "cow", pages, frames)
-    t_mor, mor = run_side(spark, base, "mor", pages, frames)
+    t_cow, cow = run_side(spark, base, "cow", pages, frames, args.buckets)
+    t_mor, mor = run_side(spark, base, "mor", pages, frames, args.buckets)
 
     # equivalence: both sides must hold the same final state
     cs = lambda t: sorted(  # noqa: E731
