@@ -1402,6 +1402,50 @@ def cmd_curate(args, spark) -> dict[str, Any]:
             "output": args.output}
 
 
+def _replica_hops(args) -> tuple[list, str]:
+    """The ``changes`` replication hops — the ``--fanout`` spec's, or
+    the one ``--replicate-to`` hop — and the bootstrap hint an expired
+    changelog window prints in that mode."""
+    from cassandra_data_migrator_spark.streaming.changelog import ReplicaHop
+
+    if args.fanout and args.replicate_to:
+        raise SystemExit(
+            "error: --fanout and --replicate-to are exclusive "
+            "(--fanout's spec names each replica)")
+    if args.fanout:
+        # spec: a JSON list of hops — [{"target": path, "checkpoint":
+        # path, "where"?: sql, "columns"?: [..], "bootstrap"?: mode,
+        # "stream_id"?: id}, ...]. A driver-local file, like
+        # --properties-file.
+        with open(args.fanout) as f:  # noqa: seam-exempt (CLI input)
+            spec = json.load(f)
+        try:
+            hops = [ReplicaHop(
+                target=h["target"], checkpoint=h["checkpoint"],
+                where=h.get("where"), columns=h.get("columns"),
+                bootstrap=h.get("bootstrap", "changelog"),
+                stream_id=h.get("stream_id", "changelog"),
+            ) for h in spec]
+        except (KeyError, TypeError) as e:
+            raise SystemExit(
+                f"error: bad --fanout spec (each hop needs target + "
+                f"checkpoint): {e}") from e
+        return hops, ("\"bootstrap\": \"snapshot\" in the hop spec "
+                      "seeds from the current state without the expired "
+                      "history")
+    if not args.checkpoint:
+        raise SystemExit("error: --replicate-to requires --checkpoint")
+    return [ReplicaHop(
+        target=args.replicate_to, checkpoint=args.checkpoint,
+        where=args.where,
+        columns=([c.strip() for c in args.columns.split(",")
+                  if c.strip()] if args.columns else None),
+        bootstrap=args.bootstrap, stream_id=args.stream_id,
+        merge_mode=args.replica_merge_mode,
+    )], ("--bootstrap snapshot seeds a fresh replica from the current "
+         "state (and re-seeds a live one) without the expired history")
+
+
 def cmd_changes(args, spark) -> dict[str, Any]:
     """Cascaded CDC terminal: export a lake table's changelog between
     two versions, or replicate it into a downstream lake table through
@@ -1414,8 +1458,6 @@ def cmd_changes(args, spark) -> dict[str, Any]:
 
     from cassandra_data_migrator_spark.lake import LakeTable
     from cassandra_data_migrator_spark.streaming.changelog import (
-        ReplicaHop,
-        replicate,
         replicate_many,
     )
 
@@ -1499,42 +1541,17 @@ def cmd_changes(args, spark) -> dict[str, Any]:
         # (the last poll of a caught-up tail is typically empty)
         if acc is None:
             return res
-        if "hops" in res:
-            by_tgt = {h["target"]: h for h in acc["hops"]}
-            for h in res["hops"]:
-                prev = by_tgt.get(h["target"])
-                if prev is not None:
-                    h["batches"] = prev["batches"] + h["batches"]
-                    if "seeded_at_version" not in h \
-                            and "seeded_at_version" in prev:
-                        h["seeded_at_version"] = prev["seeded_at_version"]
-            return res
-        res["batches"] = acc["batches"] + res["batches"]
-        if "seeded_at_version" not in res and "seeded_at_version" in acc:
-            res["seeded_at_version"] = acc["seeded_at_version"]
+        by_tgt = {h["target"]: h for h in acc["hops"]}
+        for h in res["hops"]:
+            prev = by_tgt.get(h["target"])
+            if prev is not None:
+                h["batches"] = prev["batches"] + h["batches"]
+                if "seeded_at_version" not in h \
+                        and "seeded_at_version" in prev:
+                    h["seeded_at_version"] = prev["seeded_at_version"]
         return res
-    if args.fanout:
-        if args.replicate_to:
-            raise SystemExit(
-                "error: --fanout and --replicate-to are exclusive "
-                "(--fanout's spec names each replica)")
-        # spec: a JSON list of hops — [{"target": path, "checkpoint":
-        # path, "where"?: sql, "columns"?: [..], "bootstrap"?: mode,
-        # "stream_id"?: id}, ...]. A driver-local file, like
-        # --properties-file.
-        with open(args.fanout) as f:  # noqa: seam-exempt (CLI input)
-            spec = json.load(f)
-        try:
-            hops = [ReplicaHop(
-                target=h["target"], checkpoint=h["checkpoint"],
-                where=h.get("where"), columns=h.get("columns"),
-                bootstrap=h.get("bootstrap", "changelog"),
-                stream_id=h.get("stream_id", "changelog"),
-            ) for h in spec]
-        except (KeyError, TypeError) as e:
-            raise SystemExit(
-                f"error: bad --fanout spec (each hop needs target + "
-                f"checkpoint): {e}") from e
+    if args.fanout or args.replicate_to:
+        hops, hint = _replica_hops(args)
         polls = 0
         res = None
         while True:
@@ -1542,52 +1559,19 @@ def cmd_changes(args, spark) -> dict[str, Any]:
                 res = _merge_poll(res, replicate_many(
                     spark, table, hops, max_versions=args.max_versions))
             except ValueError as e:
-                raise SystemExit(f"error: {e}") from e
-            except LookupError as e:
-                raise SystemExit(
-                    f"error: {e}\nhint: \"bootstrap\": \"snapshot\" in "
-                    f"the hop spec seeds from the current state without "
-                    f"the expired history") from e
-            polls += 1
-            if not args.follow or (args.max_polls is not None
-                                   and polls >= args.max_polls):
-                break
-            time.sleep(args.poll_interval)
-        out.update(res)
-        out["polls"] = polls
-        return out
-    if args.replicate_to:
-        if not args.checkpoint:
-            raise SystemExit("error: --replicate-to requires --checkpoint")
-        cols = ([c.strip() for c in args.columns.split(",") if c.strip()]
-                if args.columns else None)
-        polls = 0
-        res = None
-        while True:
-            try:
-                res = _merge_poll(res, replicate(
-                    spark, table, args.replicate_to,
-                    args.checkpoint, stream_id=args.stream_id,
-                    max_versions=args.max_versions,
-                    where=args.where, columns=cols,
-                    bootstrap=args.bootstrap,
-                    merge_mode=args.replica_merge_mode))
-            except ValueError as e:
                 # pinned-rule conflict / bad projection: config error
                 raise SystemExit(f"error: {e}") from e
             except LookupError as e:
                 # expired changelog window: operational error with the
                 # recovery spelled out, not a traceback
-                raise SystemExit(
-                    f"error: {e}\nhint: --bootstrap snapshot seeds a "
-                    f"fresh replica from the current state (and "
-                    f"re-seeds a live one) without the expired "
-                    f"history") from e
+                raise SystemExit(f"error: {e}\nhint: {hint}") from e
             polls += 1
             if not args.follow or (args.max_polls is not None
                                    and polls >= args.max_polls):
                 break
             time.sleep(args.poll_interval)
+        if args.replicate_to:
+            res = {"source": res["source"], **res["hops"][0]}
         out.update(res)
         out["polls"] = polls
         return out

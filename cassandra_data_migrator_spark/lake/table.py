@@ -215,6 +215,16 @@ def _name_by_field_id(own_fields: list[dict], own_name: str,
     return next(f["name"] for f in out_fields if f["id"] == fid)
 
 
+def bucket_checksums(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Per-bucket ``(bucket, row_count, checksum)`` of ``df``'s rows,
+    hashing ``cols`` in order; ``df`` carries the internal bucket
+    column."""
+    return df.groupBy(F.col(_BUCKET).alias("bucket")).agg(
+        F.count("*").alias("row_count"),
+        checksum_agg_expr(*hash_safe_cols(df.schema, cols))
+        .alias("checksum"))
+
+
 def _internal_struct_fields() -> list[T.StructField]:
     return [
         T.StructField(_BUCKET, T.IntegerType(), False),
@@ -1496,17 +1506,9 @@ class LakeTable:
 
     def checksums(self) -> DataFrame:
         """Per-bucket ``(bucket, row_count, checksum)`` over live rows."""
-        data_cols = self._data_cols()
-        live = self.read(include_internal=True)
-        return (
-            live
-            .groupBy(F.col(_BUCKET).alias("bucket"))
-            .agg(F.count("*").alias("row_count"),
-                 checksum_agg_expr(*hash_safe_cols(
-                     live.schema,
-                     [self.key_col, self.ts_col, *data_cols]))
-                 .alias("checksum"))
-        )
+        return bucket_checksums(
+            self.read(include_internal=True),
+            [self.key_col, self.ts_col, *self._data_cols()])
 
     def lineage_rows(self) -> list[dict]:
         return self.manifest.get("lineage", [])

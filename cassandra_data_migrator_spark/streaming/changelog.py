@@ -23,14 +23,17 @@ Three pieces:
   commit versions: ``poll()`` returns the next unconsumed delta,
   ``commit()`` durably advances the offset (atomic replace through the
   FS seam, same discipline as the manifest commit).
-- :func:`replicate` — the loop: poll → lower → ``merge_batch`` into the
-  replica with ``epoch_id = v_to`` → commit the offset. Exactly-once
-  end-to-end comes from TWO independent guards: the replica's epoch
-  fence suppresses a byte-identical replay of an already-applied range,
-  and even a WIDER re-polled range (crash after merge, before offset
+- :func:`replicate_many` — the one hop path: poll → follow the batch's
+  schema → lower → ``merge_batch`` into each replica with
+  ``epoch_id = v_to`` → commit the offset, for N replicas reading each
+  source delta once (:class:`ReplicaHop` is one replica's spec);
+  :func:`replicate` is its single-hop case. Exactly-once end-to-end
+  comes from TWO independent guards: the replica's epoch fence
+  suppresses a byte-identical replay of an already-applied range, and
+  even a WIDER re-polled range (crash after merge, before offset
   commit, plus new source commits) re-applies cleanly because the LWW
   merge is idempotent — cumulative deltas of the same history converge
-  to the same winners. ``where=`` / ``columns=`` make FILTERED /
+  to the same winners. ``where`` / ``columns`` make FILTERED /
   PROJECTED replicas (out-of-predicate winners become deletes, so the
   replica is exactly σ_pred of the source state; dropped columns never
   enter the hop's shuffle), both pinned in the checkpoint.
@@ -54,7 +57,11 @@ from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.config import EngineConfig
 from cassandra_data_migrator_spark.lake.fs import get_fs
-from cassandra_data_migrator_spark.lake.table import LakeTable, MergeResult
+from cassandra_data_migrator_spark.lake.table import (
+    _BUCKET,
+    LakeTable,
+    bucket_checksums,
+)
 
 _ORDERING_COLS = ("_change_ts", "_change_seq")
 
@@ -191,16 +198,23 @@ class ChangelogConsumer:
             v_to = min(v_to, pos + int(max_versions))
         if v_to <= pos:
             return None
-        try:
-            df = self.table.changes_between(
-                pos, v_to, with_ordering=with_ordering)
-        except LookupError as e:
-            raise LookupError(
-                f"changelog position v{pos} of {self.table.path} has "
-                f"been expired (retained: {self.table.history()}); "
-                f"re-seed the replica from read_version(earliest) and "
-                f"seek(earliest)") from e
-        return ChangeBatch(df=df, v_from=pos, v_to=v_to)
+        return ChangeBatch(
+            df=_changes_since(self.table, pos, v_to, with_ordering),
+            v_from=pos, v_to=v_to)
+
+
+def _changes_since(table: LakeTable, pos: int, v_to: int,
+                   with_ordering: bool = True) -> DataFrame:
+    """``changes_between(pos, v_to)``; an expired ``pos`` raises a
+    ``LookupError`` that spells out the re-seed recovery."""
+    try:
+        return table.changes_between(pos, v_to, with_ordering=with_ordering)
+    except LookupError as e:
+        raise LookupError(
+            f"changelog position v{pos} of {table.path} has "
+            f"been expired (retained: {table.history()}); "
+            f"re-seed the replica from read_version(earliest) and "
+            f"seek(earliest)") from e
 
 
 def _fields_at(source: LakeTable, version: int) -> list[dict]:
@@ -439,14 +453,33 @@ def _seed_from_snapshot(
     # DDL the replica never saw (its changelog window expired wholesale)
     v = source.version
     _follow_schema(_fields_at(source, v), target, allow_adds=allow_adds)
-    snap = source.read_version(v)
-    if where is not None:
-        # filter BEFORE projecting: the predicate may use dropped columns
-        snap = snap.filter(F.expr(where))
-    target.overwrite(
-        snap.select(*[f["name"] for f in target.current_fields()]))
+    target.overwrite(_source_view(source, v, target, where))
     consumer.commit(v)
     return v
+
+
+def _source_view(
+    source: LakeTable, version: int, target: LakeTable, where: str | None,
+    buckets: list[int] | None = None, with_bucket: bool = False,
+) -> DataFrame:
+    """σ_where(source @ version) projected to the replica's current
+    columns: what the replica must hold at that position (the snapshot
+    seed, the verified side, the repaired buckets). The filter runs
+    BEFORE the projection — the predicate may use dropped columns.
+    ``with_bucket`` keeps the internal bucket column."""
+    snap = source.read_version(version, buckets=buckets,
+                               include_internal=with_bucket)
+    cols = [f["name"] for f in target.current_fields()]
+    missing = [c for c in cols if c not in snap.columns]
+    if missing:
+        raise ValueError(
+            f"replica columns {missing} do not exist in the source at "
+            f"position v{version}: the replica's schema is ahead of (or "
+            f"foreign to) the source snapshot — catch the hop up, or "
+            f"re-create the replica via ensure_replica")
+    if where is not None:
+        snap = snap.filter(F.expr(where))
+    return snap.select(*([_BUCKET] if with_bucket else []), *cols)
 
 
 def _event_col_names(field_names: set[str]) -> tuple[str, str]:
@@ -480,26 +513,15 @@ def _hop_events(
         if c in tgt_names or c in (op_col, seq_col)])
 
 
-def replicate(
-    spark: SparkSession,
-    source: LakeTable,
-    target: LakeTable | str,
-    checkpoint: str,
-    stream_id: str = "changelog",
-    max_versions: int | None = None,
-    max_batches: int | None = None,
-    where: str | None = None,
-    columns: list[str] | None = None,
-    bootstrap: str = "changelog",
-    merge_mode: str | None = None,
-) -> dict[str, Any]:
-    """Catch the replica up to the source's current version.
 
-    Each polled delta becomes one fenced merge epoch on the replica
-    (``epoch_id = v_to``), then the offset commits. Loops until
-    ``poll()`` returns None (or ``max_batches``). Returns a summary
-    dict (applied ranges, rows per change type are NOT counted here —
-    counting would force an extra pass; use the replica's lineage).
+
+@dataclass
+class ReplicaHop:
+    """One downstream replica of a source's changelog.
+
+    ``target`` is the replica (a path is created from the source's
+    schema when absent, see :func:`ensure_replica`; a ``LakeTable`` is
+    used as given); ``checkpoint`` holds the hop's consumer offset.
 
     ``where`` makes a FILTERED replica: a SQL predicate over the
     change's post-image. A change whose post-image fails the predicate
@@ -515,7 +537,7 @@ def replicate(
 
     ``columns`` makes a PROJECTED replica (see :func:`ensure_replica`);
     events are projected to the replica's current schema, so the hop's
-    shuffle carries only kept columns. Both knobs are pinned in the
+    shuffle carries only kept columns. Both are pinned in the
     checkpoint on first use.
 
     ``bootstrap``: how a replica with NO committed offset gets its
@@ -535,82 +557,204 @@ def replicate(
       poll finds its position expired mid-stream (retention overtook a
       long-idle consumer) — a full state replace is always convergent,
       so the replica comes back exact rather than erroring.
+
+    ``merge_mode`` is the replica's write strategy when the hop CREATES
+    it (see :func:`ensure_replica`); ``stream_id`` names its epoch
+    fence.
     """
-    if bootstrap not in ("changelog", "snapshot"):
+
+    target: "LakeTable | str"
+    checkpoint: str
+    where: str | None = None
+    columns: list[str] | None = None
+    bootstrap: str = "changelog"
+    stream_id: str = "changelog"
+    merge_mode: str | None = None
+
+
+def replicate_many(
+    spark: SparkSession,
+    source: LakeTable,
+    hops: list[ReplicaHop],
+    max_versions: int | None = None,
+) -> dict[str, Any]:
+    """Catch every hop's replica up to the source's current version,
+    reading each version delta from the source ONCE.
+
+    Each polled delta becomes one fenced merge epoch on the replica
+    (``epoch_id = v_to``), then the hop's offset commits; the loop
+    repeats until every consumer is caught up. ``max_versions`` bounds
+    one epoch's version span. Rows per change type are NOT counted
+    (counting would force an extra pass; use the replica's lineage).
+
+    Consumers at the SAME position share one ``changes_between`` read:
+    at fleet scale (one corpus table feeding a filtered replica per
+    downstream team) N independent hops would be N full delta scans of
+    the same bytes. With more than one hop in a group the lowered event
+    frame is persisted, each hop applies only its own cheap tail
+    (predicate conversion + projection + its replica's merge), and the
+    frame is unpersisted when the group is done. Hops at different
+    positions (a replica added later, or one that missed a round) form
+    separate groups and converge to the same head within one call.
+
+    Every hop's bootstrap mode, predicate and pinned rule are checked
+    before any hop creates, pins or seeds anything. Failure isolation
+    is deliberately NOT attempted after that: a hop's merge error
+    aborts the call; already-committed hops are durable and a retry
+    resumes every hop from its own offset.
+    """
+    ckpts = [h.checkpoint for h in hops]
+    if len(set(ckpts)) != len(ckpts):
         raise ValueError(
-            f"bootstrap must be 'changelog' or 'snapshot', "
-            f"got {bootstrap!r}")
-    consumer = ChangelogConsumer(source, checkpoint)
-    where, columns, pinned = _load_hop_config(consumer.fs, checkpoint,
-                                              where, columns)
-    if not pinned:
-        _validate_where(spark, source, where)
-    if isinstance(target, str):
-        # a NEW changelog-bootstrap replica is born with its FIRST
-        # batch's schema (bounded polls backfill through history — the
-        # head schema would be ahead of the frames); snapshot bootstrap
-        # seeds at head, so head is right there
+            "hops share a checkpoint: each replica needs its own "
+            "consumer offset (a shared one would skip deltas on "
+            "whichever hop commits second)")
+    tgts = [h.target if isinstance(h.target, str) else h.target.path
+            for h in hops]
+    if len(set(tgts)) != len(tgts):
+        raise ValueError(
+            "hops share a target table: two consumers merging into "
+            "one replica would race their epoch fences")
+    checked = []
+    for hop in hops:
+        if hop.bootstrap not in ("changelog", "snapshot"):
+            raise ValueError(
+                f"bootstrap must be 'changelog' or 'snapshot', "
+                f"got {hop.bootstrap!r}")
+        fs = get_fs(hop.checkpoint)
+        where, columns, pinned = _load_hop_config(
+            fs, hop.checkpoint, hop.where, hop.columns)
+        if not pinned:
+            _validate_where(spark, source, where)
+        checked.append((hop, fs, where, columns, pinned))
+    states: list[dict[str, Any]] = []
+    for hop, fs, where, columns, pinned in checked:
+        consumer = ChangelogConsumer(source, hop.checkpoint, fs=fs)
+        target = hop.target
+        if isinstance(target, str):
+            # a NEW changelog-bootstrap replica is born with its FIRST
+            # batch's schema (bounded polls backfill through history —
+            # the head schema would be ahead of the frames); snapshot
+            # bootstrap seeds at head, so head is right there
+            source.refresh()
+            first_v = source.version
+            if hop.bootstrap == "changelog" and max_versions is not None:
+                first_v = min(first_v,
+                              consumer.position + int(max_versions))
+            target = ensure_replica(spark, source, target,
+                                    columns=columns,
+                                    at_version=max(first_v, 1),
+                                    merge_mode=hop.merge_mode)
+        states.append({"hop": hop, "consumer": consumer, "target": target,
+                       "where": where, "columns": columns,
+                       "pinned": pinned, "batches": [], "seeded_at": None})
+    for st in states:
+        if not st["pinned"]:
+            # pin only after every hop validated and every replica
+            # exists: a typo'd first call must not poison the checkpoint
+            _pin_hop_config(st["consumer"].fs, st["hop"].checkpoint,
+                            st["where"], st["columns"])
+        if st["hop"].bootstrap == "snapshot" \
+                and st["consumer"].committed_position is None:
+            st["seeded_at"] = _seed_from_snapshot(
+                source, st["target"], st["consumer"], st["where"],
+                allow_adds=st["columns"] is None)
+
+    while True:
         source.refresh()
-        first_v = source.version
-        if bootstrap == "changelog" and max_versions is not None:
-            first_v = min(first_v,
-                          consumer.position + int(max_versions))
-        target = ensure_replica(spark, source, target, columns=columns,
-                                at_version=max(first_v, 1),
-                                merge_mode=merge_mode)
-    if not pinned:
-        # pin only after the values validated (replica exists, predicate
-        # analyzes): a typo'd first call must not poison the checkpoint
-        _pin_hop_config(consumer.fs, checkpoint, where, columns)
-    seeded_at = None
-    if bootstrap == "snapshot" and consumer.committed_position is None:
-        seeded_at = _seed_from_snapshot(
-            source, target, consumer, where,
-            allow_adds=columns is None)
-    applied: list[dict[str, Any]] = []
-    while max_batches is None or len(applied) < max_batches:
-        try:
-            batch = consumer.poll(max_versions=max_versions)
-        except LookupError:
-            if bootstrap != "snapshot":
-                raise
-            # retention overtook the cursor mid-stream: re-seed rather
-            # than fail — an overwrite replaces all state, so the
-            # replica is exact at the new position whatever was missed
-            seeded_at = _seed_from_snapshot(
-                source, target, consumer, where,
-                allow_adds=columns is None)
-            batch = consumer.poll(max_versions=max_versions)
-        if batch is None:
+        head = source.version
+        # group pending hops by their (from, to) window so one delta
+        # read serves every consumer standing at the same position
+        groups: dict[tuple[int, int], list[dict]] = {}
+        for st in states:
+            pos = st["consumer"].position
+            v_hi = head if max_versions is None \
+                else min(head, pos + int(max_versions))
+            if v_hi > pos:
+                groups.setdefault((pos, v_hi), []).append(st)
+        if not groups:
             break
-        # the batch frame is in v_to's schema — follow THAT, and take
-        # the ts column's name (renameable) from v_to's config too
-        mt = source.manifest_at(batch.v_to)
-        _follow_schema(mt["schemas"][str(mt["schema_version"])],
-                       target, allow_adds=columns is None)
-        op_c, seq_c = _event_col_names({c for c in batch.df.columns})
-        events = changes_to_events(
-            batch.df, ts_col=mt["config"]["ts_col"],
-            op_col=op_c, seq_col=seq_c)
-        res: MergeResult = target.merge_batch(
-            _hop_events(events, target, where, op_c, seq_c),
-            op_col=op_c, seq_col=seq_c,
-            stream_id=stream_id, epoch_id=batch.v_to)
-        consumer.commit(batch.v_to)
-        applied.append({
-            "v_from": batch.v_from, "v_to": batch.v_to,
-            "skipped": res.skipped,
-            "target_version": res.version,
-        })
-    out = {
-        "source": source.path, "target": target.path,
-        "batches": applied,
-        "position": consumer.position,
-        "target_version": target.version,
-    }
-    if seeded_at is not None:
-        out["seeded_at_version"] = seeded_at
-    return out
+        for (pos, v_hi), group in sorted(groups.items()):
+            try:
+                changes = _changes_since(source, pos, v_hi)
+            except LookupError:
+                # expired window: snapshot hops re-seed (an overwrite
+                # replaces all state, so the replica is exact at the new
+                # position whatever was missed), others fail — per hop,
+                # so one stale changelog consumer cannot sink the
+                # snapshot-mode ones
+                for st in group:
+                    if st["hop"].bootstrap != "snapshot":
+                        raise
+                    st["seeded_at"] = _seed_from_snapshot(
+                        source, st["target"], st["consumer"],
+                        st["where"],
+                        allow_adds=st["columns"] is None)
+                continue
+            # the delta frame is in v_hi's schema — follow THAT, and
+            # take the ts column's name (renameable) from v_hi's config
+            mt = source.manifest_at(v_hi)
+            v_hi_fields = mt["schemas"][str(mt["schema_version"])]
+            op_c, seq_c = _event_col_names(set(changes.columns))
+            events = changes_to_events(
+                changes, ts_col=mt["config"]["ts_col"],
+                op_col=op_c, seq_col=seq_c)
+            if len(group) > 1:
+                events = events.persist()
+            try:
+                for st in group:
+                    _follow_schema(v_hi_fields, st["target"],
+                                   allow_adds=st["columns"] is None)
+                    res = st["target"].merge_batch(
+                        _hop_events(events, st["target"], st["where"],
+                                    op_c, seq_c),
+                        op_col=op_c, seq_col=seq_c,
+                        stream_id=st["hop"].stream_id, epoch_id=v_hi)
+                    st["consumer"].commit(v_hi)
+                    st["batches"].append({
+                        "v_from": pos, "v_to": v_hi,
+                        "skipped": res.skipped,
+                        "target_version": res.version,
+                    })
+            finally:
+                if len(group) > 1:
+                    events.unpersist()
+    out_hops = []
+    for st in states:
+        h = {
+            "target": st["target"].path,
+            "position": st["consumer"].position,
+            "batches": st["batches"],
+            "target_version": st["target"].version,
+        }
+        if st["seeded_at"] is not None:
+            h["seeded_at_version"] = st["seeded_at"]
+        out_hops.append(h)
+    return {"source": source.path, "hops": out_hops}
+
+
+def replicate(
+    spark: SparkSession,
+    source: LakeTable,
+    target: LakeTable | str,
+    checkpoint: str,
+    stream_id: str = "changelog",
+    max_versions: int | None = None,
+    where: str | None = None,
+    columns: list[str] | None = None,
+    bootstrap: str = "changelog",
+    merge_mode: str | None = None,
+) -> dict[str, Any]:
+    """Catch one replica up to the source's current version: the
+    single-hop case of :func:`replicate_many` (the options are the
+    :class:`ReplicaHop` fields). Returns ``{"source", "target",
+    "batches", "position", "target_version"}`` plus
+    ``"seeded_at_version"`` when a snapshot seed ran."""
+    hop = ReplicaHop(target, checkpoint, where=where, columns=columns,
+                     bootstrap=bootstrap, stream_id=stream_id,
+                     merge_mode=merge_mode)
+    out = replicate_many(spark, source, [hop], max_versions=max_versions)
+    return {"source": out["source"], **out["hops"][0]}
 
 
 def verify_replica(
@@ -649,12 +793,6 @@ def verify_replica(
     ``mismatched_buckets`` lists up to ``max_report_buckets`` of the
     differing buckets with both sides' counts and checksums.
     """
-    from cassandra_data_migrator_spark.functions.hashing import (
-        checksum_agg_expr,
-        hash_safe_cols,
-    )
-    from cassandra_data_migrator_spark.lake.table import _BUCKET
-
     if (source.n_buckets != target.n_buckets
             or source.key_col != target.key_col
             or source.bucket_prefix_sep != target.bucket_prefix_sep):
@@ -673,38 +811,18 @@ def verify_replica(
     where, _columns, _pinned = _load_hop_config(
         consumer.fs, checkpoint, None, None)
     key, ts = target.key_col, target.ts_col
-    data_cols = [f["name"] for f in target.current_fields()
-                 if f["name"] not in (key, ts)]
-
-    def _sums(df: DataFrame) -> DataFrame:
-        return df.groupBy(F.col(_BUCKET).alias("bucket")).agg(
-            F.count("*").alias("rows"),
-            checksum_agg_expr(*hash_safe_cols(
-                df.schema, [key, ts, *data_cols])).alias("checksum"))
-
-    snap = source.read_version(pos, include_internal=True)
-    missing = [c for c in (key, ts, *data_cols)
-               if c not in snap.columns]
-    if missing:
-        raise ValueError(
-            f"replica columns {missing} do not exist in the source at "
-            f"position v{pos}: the replica's schema is ahead of (or "
-            f"foreign to) the verified snapshot — catch the hop up, or "
-            f"re-create the replica via ensure_replica")
-    if where is not None:
-        # filter BEFORE projecting — the predicate may use columns the
-        # projection drops, same rule as the hop and the snapshot seed
-        snap = snap.filter(F.expr(where))
-    src_sums = _sums(snap.select(_BUCKET, key, ts, *data_cols))
-    dst_sums = _sums(target.read(include_internal=True)
-                     .select(_BUCKET, key, ts, *data_cols))
+    cols = [key, ts, *(f["name"] for f in target.current_fields()
+                       if f["name"] not in (key, ts))]
+    src_sums = bucket_checksums(
+        _source_view(source, pos, target, where, with_bucket=True), cols)
+    dst_sums = bucket_checksums(target.read(include_internal=True), cols)
     j = (
         src_sums.alias("s").join(dst_sums.alias("t"), "bucket",
                                  "full_outer")
         .select(
             "bucket",
-            F.col("s.rows").alias("src_rows"),
-            F.col("t.rows").alias("dst_rows"),
+            F.col("s.row_count").alias("src_rows"),
+            F.col("t.row_count").alias("dst_rows"),
             F.col("s.checksum").alias("src_sum"),
             F.col("t.checksum").alias("dst_sum"))
     )
@@ -774,176 +892,11 @@ def repair_replica(
         return {"verified": pre, "repaired_buckets": [],
                 "reverified": pre}
     bad = sorted(mb["bucket"] for mb in pre["mismatched_buckets"])
-    consumer = ChangelogConsumer(source, checkpoint, create=False)
     where, _columns, _pinned = _load_hop_config(
-        consumer.fs, checkpoint, None, None)
-    pos = pre["position"]
-    snap = source.read_version(pos, buckets=bad)
-    if where is not None:
-        snap = snap.filter(F.expr(where))
+        get_fs(checkpoint), checkpoint, None, None)
     target.overwrite(
-        snap.select(*[f["name"] for f in target.current_fields()]),
+        _source_view(source, pre["position"], target, where, buckets=bad),
         buckets=bad)
     post = verify_replica(spark, source, target, checkpoint)
     return {"verified": pre, "repaired_buckets": bad,
             "reverified": post}
-
-
-@dataclass
-class ReplicaHop:
-    """One downstream replica in a :func:`replicate_many` fan-out."""
-
-    target: "LakeTable | str"
-    checkpoint: str
-    where: str | None = None
-    columns: list[str] | None = None
-    bootstrap: str = "changelog"
-    stream_id: str = "changelog"
-
-
-def replicate_many(
-    spark: SparkSession,
-    source: LakeTable,
-    hops: list[ReplicaHop],
-    max_versions: int | None = None,
-) -> dict[str, Any]:
-    """Fan one source's changelog out to N replicas, reading each
-    version delta from the source ONCE.
-
-    N independent :func:`replicate` loops each scan the source's
-    changed buckets per poll — at fleet scale (one corpus table feeding
-    a filtered replica per downstream team) that is N full delta scans
-    of the same bytes. Here consumers at the SAME position share one
-    ``changes_between`` read: the lowered event frame is computed once
-    and persisted, each hop applies only its own cheap tail (predicate
-    conversion + projection + its replica's merge), and the shared
-    frame is unpersisted when the group is done. Hops at different
-    positions (a replica added later, or one that missed a round) form
-    separate groups and converge to the same head within one call —
-    the loop repeats until every consumer is caught up.
-
-    Everything else matches :func:`replicate` per hop: pinned
-    where/columns config in each checkpoint, per-hop epoch fences,
-    ``bootstrap="snapshot"`` seeding (including the mid-stream re-seed
-    when retention overtakes a cursor). Failure isolation is
-    deliberately NOT attempted: a hop's merge error aborts the call;
-    already-committed hops are durable and a retry resumes every hop
-    from its own offset — the same crash contract as single-hop
-    replicate, N times over.
-    """
-    ckpts = [h.checkpoint for h in hops]
-    if len(set(ckpts)) != len(ckpts):
-        raise ValueError(
-            "hops share a checkpoint: each replica needs its own "
-            "consumer offset (a shared one would skip deltas on "
-            "whichever hop commits second)")
-    tgts = [h.target if isinstance(h.target, str) else h.target.path
-            for h in hops]
-    if len(set(tgts)) != len(tgts):
-        raise ValueError(
-            "hops share a target table: two consumers merging into "
-            "one replica would race their epoch fences")
-    states: list[dict[str, Any]] = []
-    for hop in hops:
-        if hop.bootstrap not in ("changelog", "snapshot"):
-            raise ValueError(
-                f"bootstrap must be 'changelog' or 'snapshot', "
-                f"got {hop.bootstrap!r}")
-        consumer = ChangelogConsumer(source, hop.checkpoint)
-        where, columns, pinned = _load_hop_config(
-            consumer.fs, hop.checkpoint, hop.where, hop.columns)
-        if not pinned:
-            _validate_where(spark, source, where)
-        target = hop.target
-        if isinstance(target, str):
-            # same first-batch schema rule as single-hop replicate: a
-            # backfilling hop added to the fan-out must not be born
-            # ahead of the batches it is about to apply
-            source.refresh()
-            first_v = source.version
-            if hop.bootstrap == "changelog" and max_versions is not None:
-                first_v = min(first_v,
-                              consumer.position + int(max_versions))
-            target = ensure_replica(spark, source, target,
-                                    columns=columns,
-                                    at_version=max(first_v, 1))
-        if not pinned:
-            _pin_hop_config(consumer.fs, hop.checkpoint, where, columns)
-        st = {"hop": hop, "consumer": consumer, "target": target,
-              "where": where, "columns": columns, "batches": [],
-              "seeded_at": None}
-        if hop.bootstrap == "snapshot" \
-                and consumer.committed_position is None:
-            st["seeded_at"] = _seed_from_snapshot(
-                source, target, consumer, where,
-                allow_adds=columns is None)
-        states.append(st)
-
-    while True:
-        source.refresh()
-        head = source.version
-        # group pending hops by their (from, to) window so one delta
-        # read serves every consumer standing at the same position
-        groups: dict[tuple[int, int], list[dict]] = {}
-        for st in states:
-            pos = st["consumer"].position
-            v_hi = head if max_versions is None \
-                else min(head, pos + int(max_versions))
-            if v_hi > pos:
-                groups.setdefault((pos, v_hi), []).append(st)
-        if not groups:
-            break
-        for (pos, v_hi), group in sorted(groups.items()):
-            try:
-                changes = source.changes_between(
-                    pos, v_hi, with_ordering=True)
-            except LookupError:
-                # expired window: snapshot hops re-seed, others fail —
-                # per hop, so one stale changelog consumer cannot sink
-                # the snapshot-mode ones
-                for st in group:
-                    if st["hop"].bootstrap != "snapshot":
-                        raise
-                    st["seeded_at"] = _seed_from_snapshot(
-                        source, st["target"], st["consumer"],
-                        st["where"],
-                        allow_adds=st["columns"] is None)
-                continue
-            mt = source.manifest_at(v_hi)
-            v_hi_fields = mt["schemas"][str(mt["schema_version"])]
-            op_c, seq_c = _event_col_names(set(changes.columns))
-            events = changes_to_events(
-                changes, ts_col=mt["config"]["ts_col"],
-                op_col=op_c, seq_col=seq_c)
-            if len(group) > 1:
-                events = events.persist()
-            try:
-                for st in group:
-                    _follow_schema(v_hi_fields, st["target"],
-                                   allow_adds=st["columns"] is None)
-                    res = st["target"].merge_batch(
-                        _hop_events(events, st["target"], st["where"],
-                                    op_c, seq_c),
-                        op_col=op_c, seq_col=seq_c,
-                        stream_id=st["hop"].stream_id, epoch_id=v_hi)
-                    st["consumer"].commit(v_hi)
-                    st["batches"].append({
-                        "v_from": pos, "v_to": v_hi,
-                        "skipped": res.skipped,
-                        "target_version": res.version,
-                    })
-            finally:
-                if len(group) > 1:
-                    events.unpersist()
-    out_hops = []
-    for st in states:
-        h = {
-            "target": st["target"].path,
-            "position": st["consumer"].position,
-            "batches": st["batches"],
-            "target_version": st["target"].version,
-        }
-        if st["seeded_at"] is not None:
-            h["seeded_at_version"] = st["seeded_at"]
-        out_hops.append(h)
-    return {"source": source.path, "hops": out_hops}

@@ -217,16 +217,23 @@ def test_replicate_follows_schema_evolution(spark, source, paths):
 
 
 def test_expired_position_raises_with_reseed_hint(spark, source, paths):
-    _, _, ckpt = paths
+    from cassandra_data_migrator_spark.streaming.changelog import (
+        ReplicaHop, replicate_many,
+    )
+    _, dst, ckpt = paths
     source.merge_batch(mk_events(spark, [(1, "insert", "a", 100, "a1")]))
     source.merge_batch(mk_events(spark, [(2, "update", "a", 200, "a2")]))
     source.expire_versions(keep_last=1)
     c = ChangelogConsumer(source, ckpt)          # position 1 is gone
     with pytest.raises(LookupError, match="re-seed"):
         c.poll()
+    # a changelog-bootstrap fan-out hop's delta read says the same
+    with pytest.raises(LookupError, match="re-seed"):
+        replicate_many(spark, source, [ReplicaHop(dst, ckpt + "_hop")])
     # seek to the earliest retained version unblocks (delta-only tail)
     c.seek(source.history()[0])
     assert c.poll() is None
+
 
 def test_filtered_replica_out_of_predicate_winners_leave(
         spark, source, paths):
@@ -524,6 +531,25 @@ def test_replicate_many_rejects_shared_checkpoint_or_target(
             ReplicaHop(dst, ckpt + "1"), ReplicaHop(dst, ckpt + "2")])
 
 
+def test_replicate_many_checks_every_hop_before_any_side_effect(
+        spark, source, paths):
+    """A bad predicate on hop 2 fails the fan-out before hop 1 creates
+    its replica, pins its rule or seeds anything."""
+    from cassandra_data_migrator_spark.streaming.changelog import (
+        ReplicaHop, replicate_many,
+    )
+    _, dst, ckpt = paths
+    source.merge_batch(mk_events(spark, [(1, "insert", "a", 100, "a1")]))
+    with pytest.raises(ValueError, match="analyze"):
+        replicate_many(spark, source, [
+            ReplicaHop(dst + "1", ckpt + "1", bootstrap="snapshot"),
+            ReplicaHop(dst + "2", ckpt + "2", where="no_such_col = 1"),
+        ])
+    assert not os.path.exists(os.path.join(dst + "1", "_manifests",
+                                           "LATEST"))
+    assert not os.path.exists(os.path.join(ckpt + "1", "replication.json"))
+
+
 def test_two_tier_cascade_composes(spark, source, paths):
     """A replica is itself a lake table, so it can be a changelog
     SOURCE: src → mid (filtered) → leaf (projected) composes, and the
@@ -568,16 +594,18 @@ def test_lagging_consumer_rename_between_v_to_and_head(
     source.merge_batch(mk_events(spark, [(2, "update", "a", 200, "a2"),
                                          (3, "insert", "b", 200, "b1")]))
     source.rename_column("text", "body")              # head schema: body
-    # one bounded poll: applies ONLY the pre-rename data batch
+    # bounded polls: the pre-rename data batch applies first, alone
     out = replicate(spark, source, LakeTable(spark, dst), ckpt,
-                    max_versions=1, max_batches=1)
+                    max_versions=1)
     replica = LakeTable(spark, dst)
     assert out["batches"][0]["v_to"] == source.version - 1
-    assert "text" in replica.read().columns           # not renamed yet
-    st = {r["url"]: r["text"] for r in replica.read().collect()}
-    assert st == {"a": "a2", "b": "b1"}               # values intact
-    # catching up consumes the DDL commit and follows the rename
-    replicate(spark, source, replica, ckpt)
+    assert out["position"] == source.version
+    # the replica as that batch left it: not renamed yet, values intact
+    pre = replica.read_version(out["batches"][0]["target_version"])
+    assert "text" in pre.columns
+    st = {r["url"]: r["text"] for r in pre.collect()}
+    assert st == {"a": "a2", "b": "b1"}
+    # catching up consumed the DDL commit and followed the rename
     st = {r["url"]: r["body"] for r in replica.read().collect()}
     assert st == {"a": "a2", "b": "b1"}
 

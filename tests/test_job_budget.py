@@ -27,6 +27,10 @@ from cassandra_data_migrator_spark.sources import (
     gen_web_pages,
 )
 from cassandra_data_migrator_spark.streaming import CdcPipeline
+from cassandra_data_migrator_spark.streaming.changelog import (
+    ensure_replica,
+    replicate,
+)
 
 SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -43,6 +47,9 @@ BUDGET_MOR_PIPELINE_EPOCH = 10
 BUDGET_COW_MERGE = 9
 BUDGET_AUTOCORRECT = 21
 BUDGET_FULL_OVERWRITE = 5
+# measured with replicate's own poll loop, before it became the
+# single-hop case of replicate_many
+BUDGET_MOR_REPLICATE_EPOCH = 13
 
 
 def count_jobs(spark, fn) -> int:
@@ -91,10 +98,19 @@ def test_job_budgets(spark, tmpdir_path):
     p.apply_batch(first, epoch_id=0)
     mor_epoch = count_jobs(spark, lambda: p.apply_batch(second, epoch_id=1))
 
-    # one direct CoW merge_batch
+    # one direct CoW merge_batch, then one replicate epoch catching an
+    # MoR replica (snapshot-seeded before the merge) up with it
     t = seeded(spark, tmpdir_path, "cow", pages)
+    replica = ensure_replica(spark, t, os.path.join(tmpdir_path, "replica"),
+                             merge_mode="mor")
+    hop_ckpt = os.path.join(tmpdir_path, "hop_ckpt")
+    replicate(spark, t, replica, hop_ckpt, bootstrap="snapshot")
     cow_merge = count_jobs(
         spark, lambda: t.merge_batch(events, stream_id="m", epoch_id=0))
+    hop = {}
+    replicate_epoch = count_jobs(spark, lambda: hop.update(
+        replicate(spark, t, replica, hop_ckpt)))
+    assert len(hop["batches"]) == 1, hop
 
     # one autocorrect merge of a stale target against its origin
     origin = seeded(spark, tmpdir_path, "origin", pages)
@@ -117,9 +133,11 @@ def test_job_budgets(spark, tmpdir_path):
     full_overwrite = count_jobs(spark, lambda: t.overwrite(pages))
 
     counts = {"mor_pipeline_epoch": mor_epoch, "cow_merge": cow_merge,
-              "autocorrect": fix, "full_overwrite": full_overwrite}
+              "autocorrect": fix, "full_overwrite": full_overwrite,
+              "mor_replicate_epoch": replicate_epoch}
     print("job counts:", counts)
     assert mor_epoch <= BUDGET_MOR_PIPELINE_EPOCH, counts
     assert cow_merge <= BUDGET_COW_MERGE, counts
     assert fix <= BUDGET_AUTOCORRECT, counts
     assert full_overwrite <= BUDGET_FULL_OVERWRITE, counts
+    assert replicate_epoch <= BUDGET_MOR_REPLICATE_EPOCH, counts

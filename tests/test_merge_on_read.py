@@ -555,7 +555,9 @@ def test_mor_replica_hop_verifies(spark, tmpdir_path):
     compare (resolution-aware reads) proves replica == source, and
     compaction on the replica changes nothing."""
     from cassandra_data_migrator_spark.streaming.changelog import (
+        ReplicaHop,
         replicate,
+        replicate_many,
         verify_replica,
     )
 
@@ -568,6 +570,11 @@ def test_mor_replica_hop_verifies(spark, tmpdir_path):
     replica = LakeTable(spark, dst)
     assert replica.merge_mode == "mor"
     assert replica.delta_file_counts()  # the hop really wrote deltas
+    # a fan-out hop's merge_mode sets the created replica's strategy too
+    fan = os.path.join(tmpdir_path, "fan_replica")
+    replicate_many(spark, src, [ReplicaHop(
+        fan, os.path.join(tmpdir_path, "fan_ckpt"), merge_mode="mor")])
+    assert LakeTable(spark, fan).merge_mode == "mor"
 
     rep = verify_replica(spark, src, replica, ckpt)
     assert rep["match"], rep
