@@ -374,6 +374,17 @@ class LakeTable:
             c = F.substring_index(c.cast("string"), sep, 1)
         return bucket_expr(c, self.n_buckets)
 
+    def _write_partitions(self, n_touched: int) -> int:
+        """Width of every bucketed write's ``_bucket`` exchange: one
+        task wave, ``min(touched buckets, cores)``, never 0. Hash
+        partitioning still sends each bucket to exactly one task, and
+        the write's per-task sort on the partition column then gives
+        each bucket one file; a task beyond the core count, or on an
+        empty partition, would only add its fixed launch cost (for an
+        Arrow-UDF finalize, a Python worker round trip)."""
+        return max(1, min(n_touched,
+                          self.spark.sparkContext.defaultParallelism))
+
     @property
     def merge_mode(self) -> str:
         """Table-default merge mode ("cow" | "mor"); legacy manifests
@@ -801,7 +812,8 @@ class LakeTable:
             scope = sorted({int(b) for b in buckets})
             src = src.filter(F.col(_BUCKET).isin(scope))
         return self._write_and_commit(
-            src.repartition(self.n_buckets, F.col(_BUCKET)), offsets={},
+            src.repartition(self._write_partitions(len(scope)),
+                            F.col(_BUCKET)), offsets={},
             touched=scope, epoch_key=None, stream_id=None,
             epoch_id=None).version
 
@@ -956,8 +968,7 @@ class LakeTable:
                 win = F.broadcast(win)
             src = src.join(win, cond, "inner").drop("_k", "_w")
 
-        n_part = max(len(probe.touched),
-                     self.spark.sparkContext.defaultParallelism)
+        n_part = self._write_partitions(len(probe.touched))
         if delta:
             # merge-on-read: never touch stored rows. One shuffle
             # clusters the (pre-reduced) batch by bucket; a window picks
@@ -1155,9 +1166,8 @@ class LakeTable:
                         merged.schema,
                         [self.key_col, self.ts_col, *self._data_cols()]))) \
              .otherwise(F.lit(0)).cast("long")
-        (merged.withColumn(_CK, ck)
-               .withColumn(_PB, F.col(_BUCKET))
-               .write.partitionBy(_PB).parquet(absdir))
+        written = merged.withColumn(_CK, ck).withColumn(_PB, F.col(_BUCKET))
+        written.write.partitionBy(_PB).parquet(absdir)
         files = self._list_written_files(rel, absdir)
 
         # per-bucket lineage (row count, order-insensitive XOR checksum,
@@ -1166,8 +1176,11 @@ class LakeTable:
         # actually durable on disk. Reads ONLY (_bucket, _deleted, _ck):
         # a column-pruned parquet scan that never touches payloads —
         # the per-epoch lineage cost is O(rows) over 13 bytes/row, not
-        # a full re-read. A write of zero rows (a scoped overwrite
-        # clearing its buckets) leaves no file: nothing to scan.
+        # a full re-read. The scan takes the file list above and the
+        # written types as an explicit schema, so it runs no footer-
+        # inference job and lists no directory. A write of zero rows (a
+        # scoped overwrite clearing its buckets) leaves no file: nothing
+        # to scan.
         aggs = [
             F.sum(F.when(~F.col(_DELETED), 1).otherwise(0)).alias("live_rows"),
             F.count("*").alias("rows_with_tombstones"),
@@ -1185,11 +1198,16 @@ class LakeTable:
             tsm = F.unix_micros(F.col(self.ts_col).cast("timestamp"))
             aggs += [F.min(tsm).alias("_ts_min"),
                      F.max(tsm).alias("_ts_max")]
+        thin_cols = [_BUCKET, _DELETED, _CK] + (
+            [self.ts_col] if with_ts_stats else [])
+        thin = T.StructType([written.schema[c] for c in thin_cols])
+        paths = [os.path.join(self.path, p)
+                 for ps in files.values() for p in ps]
         ts_stats: dict[int, tuple[int, int]] = {}
         lineage_rows = []
-        summary = (self.spark.read.parquet(absdir)
+        summary = (self.spark.read.schema(thin).parquet(*paths)
                    .groupBy(F.col(_BUCKET)).agg(*aggs).collect()
-                   if files else [])
+                   if paths else [])
         for r in summary:
             d = r.asDict()
             if with_ts_stats:
@@ -1393,10 +1411,9 @@ class LakeTable:
         tombstones = stored.filter(F.col(_DELETED)).select(*out_cols)
         base = stored.filter(~F.col(_DELETED)).select(src.columns)
         unioned = base.unionByName(src)
-        n_part = max(len(touched),
-                     self.spark.sparkContext.defaultParallelism)
         merged = (
-            unioned.repartition(n_part, F.col(_BUCKET))
+            unioned.repartition(self._write_partitions(len(touched)),
+                                F.col(_BUCKET))
             # grouping by (_bucket, key): the bucket clustering satisfies
             # the aggregation's required distribution → local-only agg
             .groupBy(F.col(_BUCKET), F.col(self.key_col))
@@ -1635,9 +1652,8 @@ class LakeTable:
             return None
         rows = self.read(buckets=buckets, include_deleted=True,
                          include_internal=True)
-        n_part = max(len(buckets),
-                     self.spark.sparkContext.defaultParallelism)
-        clustered = rows.repartition(n_part, F.col(_BUCKET))
+        clustered = rows.repartition(self._write_partitions(len(buckets)),
+                                     F.col(_BUCKET))
         return self._write_and_commit(
             clustered, offsets={}, touched=buckets,
             epoch_key=None, stream_id=None, epoch_id=None)

@@ -2,10 +2,11 @@
 
 Each case counts the Spark jobs one call launches on a small fixed
 input, by running the call under its own job group and asking the
-status tracker for the group's job ids. The budgets are the counts of
-the probe/commit-tail layout before the single-probe refactor; a change
-that launches more jobs on any of these paths fails here instead of
-showing up later as a per-epoch latency regression.
+status tracker for the group's job ids. The budgets are the measured
+counts of the current layout; a change that launches more jobs on any
+of these paths fails here instead of showing up later as a per-epoch
+latency regression. The same tracker also gives each stage's task
+count, which bounds the width of the bucketed writes.
 """
 
 from __future__ import annotations
@@ -41,18 +42,22 @@ SCHEMA = T.StructType([
 ])
 N_BUCKETS = 8
 
-# jobs per call, measured with the per-call probe + separate seed-stats
-# scan layout; the current code may launch fewer, never more
-BUDGET_MOR_PIPELINE_EPOCH = 10
-BUDGET_COW_MERGE = 9
-BUDGET_AUTOCORRECT = 21
-BUDGET_FULL_OVERWRITE = 5
-# measured with replicate's own poll loop, before it became the
-# single-hop case of replicate_many
-BUDGET_MOR_REPLICATE_EPOCH = 13
+# jobs per call, measured with the commit tail's lineage scan reading
+# the written file list under an explicit schema (no footer-inference
+# job); the code may launch fewer, never more
+BUDGET_MOR_PIPELINE_EPOCH = 8
+BUDGET_COW_MERGE = 8
+BUDGET_AUTOCORRECT = 13
+BUDGET_FULL_OVERWRITE = 4
+BUDGET_MOR_REPLICATE_EPOCH = 12
 
 
-def count_jobs(spark, fn) -> int:
+def measure(spark, fn) -> tuple[int, list[int]]:
+    """The number of Spark jobs ``fn()`` launches, and the task counts
+    of its stages that read a shuffle: in each job, every stage but the
+    first (the first one scans files or a cache, and is split by file
+    size, not by the engine's exchange widths). A bucketed write's
+    stage is one of them."""
     sc = spark.sparkContext
     group = f"budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -61,7 +66,19 @@ def count_jobs(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    widths = []
+    for j in jobs:
+        stages = sorted(tracker.getJobInfo(j).stageIds)
+        infos = [tracker.getStageInfo(s) for s in stages[1:]]
+        # the status store trims itself to spark.ui.retainedStages by
+        # dropping skipped stages first (a skipped stage reused an
+        # earlier job's shuffle output and ran no task), so after a long
+        # session a skipped stage may have no info left: it is not a
+        # stage this call ran
+        widths += [i.numTasks for i in infos if i is not None]
+    return len(jobs), widths
 
 
 def inputs(spark, base):
@@ -85,18 +102,32 @@ def seeded(spark, base, name, pages, mode="cow"):
 
 
 def test_job_budgets(spark, tmpdir_path):
+    """Job counts stay within budget, and every bucketed write is one
+    task wave: with 8 buckets on local[4], no stage after an exchange
+    runs more tasks than there are cores, and a 1-bucket scoped
+    overwrite runs its write (and every other post-exchange stage) as
+    one task. Scan stages are left out: their width follows the input
+    files (a CoW merge reads 8 bucket files), not an engine choice."""
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < N_BUCKETS
     pages, events = inputs(spark, tmpdir_path)
     first = events.filter(F.col("seq") < 600)
     second = events.filter(F.col("seq") >= 600)
+    jobs, widths = {}, {}
+
+    def record(path, fn):
+        jobs[path], widths[path] = measure(spark, fn)
 
     # one MoR pipeline epoch without compaction (the live-tail shape):
-    # a warm-up epoch first, so the measured one runs on a grown table
+    # a warm-up epoch first, so the measured one runs on a grown table;
+    # then a compaction folding its deltas
     t = seeded(spark, tmpdir_path, "mor", pages, mode="mor")
     p = CdcPipeline(spark, t, EngineConfig(n_buckets=N_BUCKETS,
                                            merge_mode="mor"),
                     stream_id="tail")
     p.apply_batch(first, epoch_id=0)
-    mor_epoch = count_jobs(spark, lambda: p.apply_batch(second, epoch_id=1))
+    record("mor_pipeline_epoch", lambda: p.apply_batch(second, epoch_id=1))
+    record("compact", t.compact)
 
     # one direct CoW merge_batch, then one replicate epoch catching an
     # MoR replica (snapshot-seeded before the merge) up with it
@@ -105,11 +136,11 @@ def test_job_budgets(spark, tmpdir_path):
                              merge_mode="mor")
     hop_ckpt = os.path.join(tmpdir_path, "hop_ckpt")
     replicate(spark, t, replica, hop_ckpt, bootstrap="snapshot")
-    cow_merge = count_jobs(
-        spark, lambda: t.merge_batch(events, stream_id="m", epoch_id=0))
+    record("cow_merge",
+           lambda: t.merge_batch(events, stream_id="m", epoch_id=0))
     hop = {}
-    replicate_epoch = count_jobs(spark, lambda: hop.update(
-        replicate(spark, t, replica, hop_ckpt)))
+    record("mor_replicate_epoch",
+           lambda: hop.update(replicate(spark, t, replica, hop_ckpt)))
     assert len(hop["batches"]) == 1, hop
 
     # one autocorrect merge of a stale target against its origin
@@ -122,22 +153,26 @@ def test_job_budgets(spark, tmpdir_path):
     diff = diff_tables(origin.read(), stale.read()).cache()
     diff.count()
     fixed = {}
-    fix = count_jobs(spark, lambda: fixed.update(
+    record("autocorrect", lambda: fixed.update(
         autocorrect(stale, origin.read(), diff)[1]))
     diff.unpersist()
     assert fixed["corrected_missing"] and fixed["corrected_mismatch"]
 
-    # one full overwrite
+    # one full overwrite, then a 1-bucket scoped one
     t = LakeTable.create(spark, os.path.join(tmpdir_path, "seed"), SCHEMA,
                          EngineConfig(n_buckets=N_BUCKETS))
-    full_overwrite = count_jobs(spark, lambda: t.overwrite(pages))
+    record("full_overwrite", lambda: t.overwrite(pages))
+    record("scoped_overwrite", lambda: t.overwrite(pages, buckets=[3]))
+    assert [len(es) for es in t.manifest["files"].values()] \
+        == [1] * N_BUCKETS
 
-    counts = {"mor_pipeline_epoch": mor_epoch, "cow_merge": cow_merge,
-              "autocorrect": fix, "full_overwrite": full_overwrite,
-              "mor_replicate_epoch": replicate_epoch}
-    print("job counts:", counts)
-    assert mor_epoch <= BUDGET_MOR_PIPELINE_EPOCH, counts
-    assert cow_merge <= BUDGET_COW_MERGE, counts
-    assert fix <= BUDGET_AUTOCORRECT, counts
-    assert full_overwrite <= BUDGET_FULL_OVERWRITE, counts
-    assert replicate_epoch <= BUDGET_MOR_REPLICATE_EPOCH, counts
+    print("job counts:", jobs)
+    print("post-exchange stage widths:", widths)
+    assert jobs["mor_pipeline_epoch"] <= BUDGET_MOR_PIPELINE_EPOCH, jobs
+    assert jobs["cow_merge"] <= BUDGET_COW_MERGE, jobs
+    assert jobs["autocorrect"] <= BUDGET_AUTOCORRECT, jobs
+    assert jobs["full_overwrite"] <= BUDGET_FULL_OVERWRITE, jobs
+    assert jobs["mor_replicate_epoch"] <= BUDGET_MOR_REPLICATE_EPOCH, jobs
+    for path, tasks in widths.items():
+        assert tasks and max(tasks) <= cores, (path, widths)
+    assert max(widths["scoped_overwrite"]) == 1, widths

@@ -668,3 +668,55 @@ def test_overwrite_bucket_scoped(spark, table):
     for b, entries in table.manifest["files"].items():
         if int(b) != b0:
             assert entries == pre_files2[b]
+
+
+def test_bucketed_writes_with_fewer_tasks_than_buckets(spark, tmpdir_path):
+    """A bucketed write runs min(touched buckets, cores) tasks, so with 8
+    buckets on local[4] several buckets share a task. Each touched
+    bucket must still get exactly one file per commit: one base file
+    per CoW merge, one delta entry (``dv`` = the commit's version) per
+    MoR merge, one file per bucket after ``compact`` with checksums
+    unchanged; and an overwrite with an empty scope still commits."""
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 8
+    inserts = mk_events(spark, [(i, "insert", f"k{i}", 100 + i, f"v{i}")
+                                for i in range(40)])
+    updates = mk_events(spark, [(100 + i, "update", f"k{i}", 200 + i,
+                                 f"w{i}") for i in range(0, 40, 2)])
+
+    cow = LakeTable.create(spark, os.path.join(tmpdir_path, "cow"),
+                           WEB_SCHEMA, EngineConfig(n_buckets=8))
+    cow.merge_batch(inserts)
+    r = cow.merge_batch(updates)
+    assert len(r.touched_buckets) > cores
+    for b in r.touched_buckets:
+        assert len(cow.manifest["files"][str(b)]) == 1
+
+    mor = LakeTable.create(spark, os.path.join(tmpdir_path, "mor"),
+                           WEB_SCHEMA,
+                           EngineConfig(n_buckets=8, merge_mode="mor"))
+    mor.merge_batch(inserts)
+    before = {b: len(es) for b, es in mor.manifest["files"].items()}
+    r = mor.merge_batch(updates)
+    assert len(r.touched_buckets) > cores
+    for b, entries in mor.manifest["files"].items():
+        added = entries[before.get(b, 0):]
+        if int(b) in r.touched_buckets:
+            assert len(added) == 1, (b, entries)
+            assert added[0]["delta"] and added[0]["dv"] == r.version
+        else:
+            assert added == []
+    assert final_state(mor) == final_state(cow)
+
+    cs = {r2["bucket"]: (r2["row_count"], int(r2["checksum"]))
+          for r2 in mor.checksums().collect()}
+    c = mor.compact()
+    assert c is not None and len(c.touched_buckets) > cores
+    assert all(len(es) == 1 and not es[0].get("delta")
+               for es in mor.manifest["files"].values())
+    assert {r2["bucket"]: (r2["row_count"], int(r2["checksum"]))
+            for r2 in mor.checksums().collect()} == cs
+
+    files, v = dict(cow.manifest["files"]), cow.version
+    assert cow.overwrite(cow.read(), buckets=[]) == v + 1
+    assert cow.manifest["files"] == files
