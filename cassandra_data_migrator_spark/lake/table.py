@@ -381,9 +381,16 @@ class LakeTable:
         the write's per-task sort on the partition column then gives
         each bucket one file; a task beyond the core count, or on an
         empty partition, would only add its fixed launch cost (for an
-        Arrow-UDF finalize, a Python worker round trip)."""
-        return max(1, min(n_touched,
-                          self.spark.sparkContext.defaultParallelism))
+        Arrow-UDF finalize, a Python worker round trip).
+
+        Under dynamic allocation the cores registered when the write is
+        planned are not the cores it can use (executors join while its
+        tasks queue), so there the width is the touched-bucket count."""
+        dynamic = self.spark.conf.get("spark.dynamicAllocation.enabled",
+                                      "false").lower() == "true"
+        cores = (n_touched if dynamic
+                 else self.spark.sparkContext.defaultParallelism)
+        return max(1, min(n_touched, cores))
 
     @property
     def merge_mode(self) -> str:

@@ -52,12 +52,12 @@ BUDGET_FULL_OVERWRITE = 4
 BUDGET_MOR_REPLICATE_EPOCH = 12
 
 
-def measure(spark, fn) -> tuple[int, list[int]]:
-    """The number of Spark jobs ``fn()`` launches, and the task counts
-    of its stages that read a shuffle: in each job, every stage but the
-    first (the first one scans files or a cache, and is split by file
-    size, not by the engine's exchange widths). A bucketed write's
-    stage is one of them."""
+def measure(spark, fn) -> tuple[int, list[list[int]]]:
+    """The number of Spark jobs ``fn()`` launches and, per job in launch
+    order, the task counts of its stages that read a shuffle: every
+    stage but the job's first (the first one scans files or a cache,
+    and is split by file size, not by the engine's exchange widths). A
+    bucketed write's stage is one of them."""
     sc = spark.sparkContext
     group = f"budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -69,7 +69,7 @@ def measure(spark, fn) -> tuple[int, list[int]]:
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     widths = []
-    for j in jobs:
+    for j in sorted(jobs):
         stages = sorted(tracker.getJobInfo(j).stageIds)
         infos = [tracker.getStageInfo(s) for s in stages[1:]]
         # the status store trims itself to spark.ui.retainedStages by
@@ -77,7 +77,7 @@ def measure(spark, fn) -> tuple[int, list[int]]:
         # earlier job's shuffle output and ran no task), so after a long
         # session a skipped stage may have no info left: it is not a
         # stage this call ran
-        widths += [i.numTasks for i in infos if i is not None]
+        widths.append([i.numTasks for i in infos if i is not None])
     return len(jobs), widths
 
 
@@ -105,9 +105,9 @@ def test_job_budgets(spark, tmpdir_path):
     """Job counts stay within budget, and every bucketed write is one
     task wave: with 8 buckets on local[4], no stage after an exchange
     runs more tasks than there are cores, and a 1-bucket scoped
-    overwrite runs its write (and every other post-exchange stage) as
-    one task. Scan stages are left out: their width follows the input
-    files (a CoW merge reads 8 bucket files), not an engine choice."""
+    overwrite runs its write as one task. Scan stages are left out:
+    their width follows the input files (a CoW merge reads 8 bucket
+    files), not an engine choice."""
     cores = spark.sparkContext.defaultParallelism
     assert cores < N_BUCKETS
     pages, events = inputs(spark, tmpdir_path)
@@ -173,6 +173,13 @@ def test_job_budgets(spark, tmpdir_path):
     assert jobs["autocorrect"] <= BUDGET_AUTOCORRECT, jobs
     assert jobs["full_overwrite"] <= BUDGET_FULL_OVERWRITE, jobs
     assert jobs["mor_replicate_epoch"] <= BUDGET_MOR_REPLICATE_EPOCH, jobs
-    for path, tasks in widths.items():
+    for path, per_job in widths.items():
+        tasks = [n for job in per_job for n in job]
         assert tasks and max(tasks) <= cores, (path, widths)
-    assert max(widths["scoped_overwrite"]) == 1, widths
+    # the write job is the call's first job that reads a shuffle (the
+    # commit tail writes before its lineage scan); the lineage
+    # aggregation's own exchange is spark.sql.shuffle.partitions wide
+    # and only AQE coalescing narrows it, so it is held to the core
+    # bound above, not to this one
+    write_job = next(job for job in widths["scoped_overwrite"] if job)
+    assert write_job == [1], widths

@@ -720,3 +720,26 @@ def test_bucketed_writes_with_fewer_tasks_than_buckets(spark, tmpdir_path):
     files, v = dict(cow.manifest["files"]), cow.version
     assert cow.overwrite(cow.read(), buckets=[]) == v + 1
     assert cow.manifest["files"] == files
+
+
+def test_write_width_follows_static_cores_only(spark, tmpdir_path,
+                                               monkeypatch):
+    """With a fixed executor set a bucketed write is one task wave,
+    min(touched buckets, cores) and never 0. Under dynamic allocation the
+    cores registered when the write is planned undercount the cores it
+    can use, so the width is the touched-bucket count."""
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "t"), WEB_SCHEMA,
+                         EngineConfig(n_buckets=16))
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 16
+    assert [t._write_partitions(n) for n in (0, 1, 16)] == [1, 1, cores]
+    runtime_conf = type(spark.conf)
+    real_get = runtime_conf.get
+
+    def get(self, key, *default):
+        if key == "spark.dynamicAllocation.enabled":
+            return "true"
+        return real_get(self, key, *default)
+
+    monkeypatch.setattr(runtime_conf, "get", get)
+    assert [t._write_partitions(n) for n in (0, 1, 16)] == [1, 1, 16]
