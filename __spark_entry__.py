@@ -475,8 +475,7 @@ def _q_streaming_cdc_replay(spark, sf_dir):
     pipe = CdcPipeline(
         spark, table,
         EngineConfig(n_buckets=16, key_col="user_id", ts_col="ts"),
-        stream_id="q_stream", event_schema=events.schema,
-        salt_transform_stage=False)
+        stream_id="q_stream", event_schema=events.schema)
     q = pipe.run_stream(log_path, _tmpdir("stream_ckpt"),
                         max_files_per_trigger=3, available_now=True)
     q.awaitTermination()
@@ -502,8 +501,7 @@ def _q_streaming_checkpoint_resume(spark, sf_dir):
     table = LakeTable.create(spark, _tmpdir("resume_tbl"), _STATE_SCHEMA,
                              cfg)
     pipe = CdcPipeline(spark, table, cfg, stream_id="q_resume",
-                       event_schema=events.schema,
-                       salt_transform_stage=False)
+                       event_schema=events.schema)
     pipe.run_stream(log_path, ckpt, max_files_per_trigger=2,
                     available_now=True).awaitTermination()
     # crash boundary: nothing below reuses an object from above except
@@ -511,8 +509,7 @@ def _q_streaming_checkpoint_resume(spark, sf_dir):
     write_event_log(events.filter(F.col("seq") > half), log_path,
                     n_chunks=4, append=True)
     pipe2 = CdcPipeline(spark, LakeTable(spark, table.path), cfg,
-                        stream_id="q_resume", event_schema=events.schema,
-                        salt_transform_stage=False)
+                        stream_id="q_resume", event_schema=events.schema)
     pipe2.run_stream(log_path, ckpt, max_files_per_trigger=2,
                      available_now=True).awaitTermination()
     return _final_state_df(LakeTable(spark, table.path))
@@ -797,11 +794,10 @@ def _q_skew_salted_replay(spark, sf_dir):
     shuffle ``job/SplitPartitions.java:48-64``): 80% of the change
     stream is deterministically collapsed onto ONE hot key
     (``seq % 5 != 0 → user_id 1``), then replayed through the streaming
-    pipeline with the salted pre-transform repartition ENABLED
-    (``salt_transform_stage=True, lazy_extract=False`` — the
-    eager-transform configuration whose per-row stage the salt levels;
-    the entry queries otherwise run the lazy winner-side default where
-    salting is deliberately off). Salting is a physical-plan leveler
+    pipeline's eager-transform configuration (``lazy_extract=False``,
+    which always runs the salted pre-transform repartition; the entry
+    queries otherwise run the lazy winner-side default, which has no
+    pre-merge UDF stage to salt). Salting is a physical-plan leveler
     only — rows of one key spread across ``salt_buckets`` tasks for the
     transform stage, then re-converge on the merge's (bucket, key)
     shuffle — so the final LWW state must be byte-equal to the plain
@@ -821,7 +817,7 @@ def _q_skew_salted_replay(spark, sf_dir):
         EngineConfig(n_buckets=8, key_col="user_id", ts_col="ts",
                      salt_buckets=4),
         stream_id="q_skew", event_schema=events.schema,
-        salt_transform_stage=True, lazy_extract=False)
+        lazy_extract=False)
     q = pipe.run_stream(log_path, _tmpdir("skew_ckpt"),
                         max_files_per_trigger=2, available_now=True)
     q.awaitTermination()
@@ -907,8 +903,7 @@ def _q_column_skip_list(spark, sf_dir):
                        column_skip_list=("props",))
     table = LakeTable.create(spark, _tmpdir("skiplist"), _STATE_SCHEMA,
                              cfg)
-    pipe = CdcPipeline(spark, table, cfg, stream_id="q_skiplist",
-                       salt_transform_stage=False)
+    pipe = CdcPipeline(spark, table, cfg, stream_id="q_skiplist")
     pipe.apply_batch(_change_events(spark, sf_dir), epoch_id=0)
     return table.read().select(
         F.col("user_id"), _ts_us("ts").alias("ts_us"),

@@ -74,7 +74,6 @@ class EngineConfig:
 
     # --- skew handling (north_rule: salted repartition) ------------------
     salt_buckets: int = 4             # sub-splits for hot keys inside a bucket
-    hot_key_threshold: int = 100_000  # rows per key in a batch → considered hot
 
     # --- filters (ref OriginSelectStatement.java:104-131) ----------------
     writetime_min: datetime | None = None

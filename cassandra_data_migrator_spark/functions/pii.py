@@ -18,8 +18,8 @@ Same engineering contract as the URL canonicalizer:
 - **Idempotent.** Replacement tokens contain no digits or ``@``, so no
   rule can re-match its own output — re-running the stage on a stored
   winner yields the identical bytes. That makes it safe winner-side
-  (``CdcPipeline._finalize``), where it runs once per surviving key
-  instead of once per change event.
+  (``streaming.pipeline.finalize_winners``), where it runs once per
+  surviving key instead of once per change event.
 - **Oracle-adjacent.** The rules use only constructs with identical
   Java-regex / RE2 semantics (no lookarounds, no backrefs), and
   ``redact_pii_sql`` / ``pii_count_sql`` are the DuckDB replay kept in

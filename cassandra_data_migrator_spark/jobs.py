@@ -45,6 +45,7 @@ import sys
 import time
 from dataclasses import replace
 from datetime import datetime, timezone
+from functools import partial
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -500,6 +501,9 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
         finalize_stream_run,
         finalize_tracked_run,
     )
+    from cassandra_data_migrator_spark.streaming.pipeline import (
+        finalize_winners,
+    )
     from cassandra_data_migrator_spark.streaming.trackrun import (
         BatchRunTracker,
     )
@@ -783,10 +787,9 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
         events = out.filter(keep & valid_keys)
         if transform is not None:
             events = transform(events)
-        fin = CdcPipeline(spark, table, cfg,
-                          stream_id=args.stream_id or "migrate",
-                          redact_cols=redact_cols)._finalize
-        merge_kw = {"finalize": fin, "seq_col": cfg.seq_col}
+        merge_kw = {"finalize": partial(finalize_winners,
+                                        redact_cols=redact_cols),
+                    "seq_col": cfg.seq_col}
         if job.get("previous_run_id") or job.get("auto_rerun"):
             tracker.resume(events, run_id,
                            rerun_multiplier=job.get("rerun_multiplier", 1),
@@ -827,6 +830,9 @@ def cmd_validate(args, spark) -> dict[str, Any]:
         split_predicates,
     )
     from cassandra_data_migrator_spark.sources.event_log import EVENT_SCHEMA
+    from cassandra_data_migrator_spark.streaming.pipeline import (
+        finalize_winners,
+    )
 
     cfg, job, warnings = _cfg(args)
     for w in warnings:
@@ -900,24 +906,11 @@ def cmd_validate(args, spark) -> dict[str, Any]:
         # through the identical positional mapping or every
         # struct-bearing row reports MISMATCH
         origin = TR2.auto_map_structs(origin, _vschema)
-    if "lang" in origin.columns:
-        # the migrate pipeline normalizes lang on write; the diff must
-        # apply the same transform origin-side
-        from cassandra_data_migrator_spark.functions.udfs import (
-            normalize_lang,
-        )
-        origin = origin.withColumn("lang", normalize_lang(F.col("lang")))
+    # the migration ran the winner-side stage (text from html, lang
+    # normalization, redaction) on every stored row; origin truth runs
+    # the same stage, or every row it touches reports MISMATCH
     redact_cols = _redact_cols(args)
-    if redact_cols:
-        # the migration scrubbed these columns winner-side; origin
-        # truth must carry the same redaction or every PII-bearing row
-        # reports MISMATCH (same symmetry rule as --canonicalize-urls)
-        from cassandra_data_migrator_spark.functions.pii import (
-            redact_pii_expr,
-        )
-        for c in redact_cols:
-            if c in origin.columns:
-                origin = origin.withColumn(c, redact_pii_expr(c))
+    origin = finalize_winners(origin, redact_cols)
 
     target = table.read()
     compare = [c for c in target.columns
@@ -946,18 +939,16 @@ def cmd_validate(args, spark) -> dict[str, Any]:
         if job.get("autocorrect_mismatch"):
             allowed.append("mismatch")
         if allowed:
-            from cassandra_data_migrator_spark.streaming import CdcPipeline
             picked = d.filter(F.col(DIFF.DIFF_STATUS).isin(allowed))
             # corrected rows take the SAME winner-side derivations the
             # migration applied (text extraction, lang normalization) —
             # without the finalize, a force_overwrite re-upsert of
             # origin rows (which carry no text column) would null out
             # the extracted text the migration wrote
-            fin = CdcPipeline(spark, table, cfg,
-                              redact_cols=redact_cols)._finalize
             _, corrected = DIFF.autocorrect(
                 table, origin.select(key_col, *compare), picked,
-                key_cols=(key_col,), finalize=fin)
+                key_cols=(key_col,),
+                finalize=partial(finalize_winners, redact_cols=redact_cols))
             out.update(corrected)
     finally:
         d.unpersist()
@@ -1049,23 +1040,17 @@ def cmd_runs(args, spark) -> dict[str, Any]:
     per-group PASS rows, and per-epoch counters as one JSON document a
     dashboard or assert script can consume."""
     from cassandra_data_migrator_spark.lake import LakeTable
-    from cassandra_data_migrator_spark.streaming import CdcPipeline, run_info
-    from cassandra_data_migrator_spark.streaming.trackrun import (
-        BatchRunTracker,
-    )
+    from cassandra_data_migrator_spark.streaming import runstate
 
     table = LakeTable(spark, args.table)
     out: dict[str, Any] = {"job": "runs", "version": table.version}
-    out["run_info"] = [r.asDict() for r in
-                       run_info(spark, table).orderBy("run_id").collect()]
-    tracker = BatchRunTracker(spark, table)
-    out["run_details"] = [
-        r.asDict() for r in
-        tracker.run_details().orderBy("run_id", "grp", "sub").collect()]
-    pipe = CdcPipeline(spark, table)
-    out["epochs"] = [r.asDict() for r in
-                     pipe.counters().orderBy("stream_id", "epoch_id")
-                     .collect()]
+    for key, name, order in (
+            ("run_info", "run_info", ("run_id",)),
+            ("run_details", "run_details", ("run_id", "grp", "sub")),
+            ("epochs", "counters", ("stream_id", "epoch_id"))):
+        out[key] = [r.asDict() for r in
+                    runstate.read(spark, table, name).orderBy(*order)
+                    .collect()]
     # timestamps/None are already JSON-safe here (all-long schemas)
     return out
 

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.functions.hashing import bucket_expr
 from cassandra_data_migrator_spark.operators.filters import guardrail_check
+from cassandra_data_migrator_spark.streaming import runstate
 
 GUARDRAIL_BUCKET_SCHEMA = (
     "bucket int, read long, valid long, large long"
@@ -91,8 +92,7 @@ def run_guardrail_check(
         # table the first time a caller touches report.per_bucket
         spark = df.sparkSession
         per_bucket = spark.createDataFrame(
-            [r.asDict() for r in row_iter],
-            "bucket int, read long, valid long, large long")
+            [r.asDict() for r in row_iter], GUARDRAIL_BUCKET_SCHEMA)
         totals = {
             "read": sum(r["read"] for r in row_iter),
             "valid": sum(r["valid"] for r in row_iter),
@@ -105,14 +105,13 @@ def run_guardrail_check(
                   "large": int(r["large"] or 0), "partitions_passed": 1}
 
     if table is not None and run_id is not None:
-        from cassandra_data_migrator_spark.streaming.runinfo import _write_row
-        _write_row(table, {
+        runstate.append(table, "run_info", [{
             "run_id": run_id, "kind": "guardrail", "status": "ENDED",
             "epochs": totals["partitions_passed"], "read": totals["read"],
             "valid": totals["valid"], "skipped": 0,
             "quarantined": totals["large"], "events_applied": 0,
             "final_version": table.version,
-        })
+        }], f"guardrail-{run_id}")
 
     return GuardrailReport(
         totals=totals,

@@ -29,6 +29,7 @@ replaces the reference's per-worker rate limiter
 from __future__ import annotations
 
 import os
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,60 +49,48 @@ from cassandra_data_migrator_spark.lake.table import (
 )
 from cassandra_data_migrator_spark.operators.filters import split_predicates
 from cassandra_data_migrator_spark.sources.event_log import read_event_stream
-
-LINEAGE_SCHEMA = (
-    "epoch_id long, bucket int, live_rows long, rows_with_tombstones long, "
-    "checksum long, min_seq long, max_seq long, events long, "
-    "version int, stream_id string"
-)
-COUNTERS_SCHEMA = (
-    "epoch_id long, read long, valid long, skipped long, quarantined long, "
-    "events_applied long, buckets int, stream_id string"
-)
+from cassandra_data_migrator_spark.streaming import runstate
 
 
-def _arrow_schemas():
-    import pyarrow as pa
-    lineage = pa.schema([
-        ("epoch_id", pa.int64()), ("bucket", pa.int32()),
-        ("live_rows", pa.int64()), ("rows_with_tombstones", pa.int64()),
-        ("checksum", pa.int64()), ("min_seq", pa.int64()),
-        ("max_seq", pa.int64()), ("events", pa.int64()),
-        ("version", pa.int32()), ("stream_id", pa.string()),
-    ])
-    counters = pa.schema([
-        ("epoch_id", pa.int64()), ("read", pa.int64()),
-        ("valid", pa.int64()), ("skipped", pa.int64()),
-        ("quarantined", pa.int64()), ("events_applied", pa.int64()),
-        ("buckets", pa.int32()), ("stream_id", pa.string()),
-    ])
-    return lineage, counters
+def _redact(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """PII scrub of ``cols`` (functions/pii.py; absent columns are
+    skipped). Idempotent, so a row redacted pre-merge by the eager path
+    is unchanged by a later re-run."""
+    if cols:
+        from cassandra_data_migrator_spark.functions.pii import (
+            redact_pii_expr,
+        )
+        for c in cols:
+            if c in df.columns:
+                df = df.withColumn(c, redact_pii_expr(c))
+    return df
 
 
-_LINEAGE_ARROW, _COUNTERS_ARROW = _arrow_schemas()
+def finalize_winners(df: DataFrame,
+                     redact_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The winner-side scalar stage: fill ``text`` from ``html`` for
+    rows that arrived without it, normalize the ``lang`` tag, redact
+    ``redact_cols``. All three are pure + idempotent, so running them
+    on merged LWW winners equals running them on every change event,
+    and re-running them on a stored winner yields the identical value.
+    It runs wherever winners are produced or compared: the pipeline's
+    lazy merge, the tracked ``migrate``, and both the origin leg and
+    the autocorrect of ``validate``.
 
-
-def _append_parquet(fs, path: str, rows: list[dict], schema,
-                    file_key: str | None = None) -> None:
-    """Driver-side parquet append of a tiny row list (no Spark job),
-    routed through the table's FS seam (``fs.write_bytes`` = one object
-    PUT — works identically on local disk and object stores).
-
-    When ``file_key`` is given (e.g. ``"<stream_id>-<epoch_id>"``) the
-    file name is deterministic and an existing file is overwritten —
-    making the append idempotent under checkpoint redelivery of the
-    same epoch.
-    """
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    name = file_key if file_key is not None else uuid.uuid4().hex
-    table = pa.Table.from_pylist(rows, schema=schema)
-    sink = pa.BufferOutputStream()
-    pq.write_table(table, sink)
-    fs.write_bytes(os.path.join(path, f"part-{name}.parquet"),
-                   sink.getvalue().to_pybytes())
+    Keeping EVERY pandas UDF out of the pre-merge path matters beyond
+    the row-count cut: an ArrowEvalPython node in the scan stage breaks
+    whole-stage codegen and materializes all pass-through columns (the
+    fat html payload included) around the Python boundary for every
+    source row; winner-side, the one fused Arrow node touches each
+    surviving row once. For the DERIVED text column winner-side is also
+    the only point where there is text to redact at all."""
+    cols = set(df.columns)
+    if "html" in cols and "text" in cols:
+        df = df.withColumn(
+            "text", F.coalesce(F.col("text"), extract_text(F.col("html"))))
+    if "lang" in cols:
+        df = df.withColumn("lang", normalize_lang(F.col("lang")))
+    return _redact(df, redact_cols)
 
 
 class CdcPipeline:
@@ -115,7 +104,6 @@ class CdcPipeline:
         stream_id: str = "cdc",
         unset_nulls: bool = False,
         transform: Callable[[DataFrame], DataFrame] | None = None,
-        salt_transform_stage: bool = True,
         lazy_extract: bool = True,
         event_schema=None,
         redact_cols: tuple[str, ...] = (),
@@ -129,13 +117,8 @@ class CdcPipeline:
         # maintenance or a rival writer) and converged via reload+retry
         self.conflict_retries = 0
         self.transform = transform
-        self.salt_transform_stage = salt_transform_stage
-        # PII redaction (functions/pii.py) rides the winner-side scalar
-        # stage next to text extraction: pure + idempotent codegen, so
-        # redacting the merged winner once is byte-identical to
-        # redacting every change event — and for the DERIVED text
-        # column (filled from html post-merge) winner-side is the only
-        # point where there is text to redact at all
+        # PII redaction: winner-side in finalize_winners (lazy), pre-merge
+        # in _prepare (eager)
         self.redact_cols = tuple(redact_cols)
         # lazy_extract: run the Arrow html→text extraction on the merged
         # LWW WINNERS (once per surviving key) instead of on every
@@ -152,10 +135,6 @@ class CdcPipeline:
         #   level and the salt shuffle would be pure cost.
         self.lazy_extract = lazy_extract and not unset_nulls
         self.event_schema = event_schema  # None → sources.event_log.EVENT_SCHEMA
-        # run-details side tables (reference cdm_run_details analog,
-        # cql/statement/TargetUpsertRunDetailsStatement.java:63-84)
-        self.lineage_path = os.path.join(table.path, "_run", "lineage")
-        self.counters_path = os.path.join(table.path, "_run", "counters")
         self.skipped_path = os.path.join(table.path, "_run", "skipped")
         self.quarantine_path = os.path.join(table.path, "_run", "quarantine")
 
@@ -197,7 +176,7 @@ class CdcPipeline:
                 self._side_sink(tag.filter(F.col("_status") == label)
                                 .drop("_status"), path, epoch_id)
         batch = tag.filter(F.col("_status").isNull()).drop("_status")
-        if self.salt_transform_stage and not self.lazy_extract:
+        if not self.lazy_extract:
             # break hot-domain skew BEFORE the expensive Python UDF stage:
             # rows are independent here, so a salted repartition levels
             # Arrow batch work across tasks even if one domain dominates.
@@ -211,50 +190,17 @@ class CdcPipeline:
                                         self.config.n_buckets,
                                         self.config.salt_buckets)
             )
-        if not self.lazy_extract:
+            # eager text rule: derive only when the column is absent — a
+            # null text here means UNSET under unset_nulls
             if "html" in batch.columns and "text" not in batch.columns:
                 batch = batch.withColumn("text", extract_text(F.col("html")))
             if "lang" in batch.columns:
                 batch = batch.withColumn("lang",
                                          normalize_lang(F.col("lang")))
-            batch = self._redact(batch)
+            batch = _redact(batch, self.redact_cols)
         if self.transform is not None:
             batch = self.transform(batch)
         return batch, probe, n_skip, n_quar
-
-    def _redact(self, df: DataFrame) -> DataFrame:
-        """PII scrub of the configured columns (no-op when unset or
-        the column is absent). Idempotent — safe to hit a row via both
-        the eager pre-merge path and a later finalize re-run."""
-        if self.redact_cols:
-            from cassandra_data_migrator_spark.functions.pii import (
-                redact_pii_expr,
-            )
-            for c in self.redact_cols:
-                if c in df.columns:
-                    df = df.withColumn(c, redact_pii_expr(c))
-        return df
-
-    def _finalize(self, merged: DataFrame) -> DataFrame:
-        """Winner-side transforms (see ``lazy_extract``): fill text for
-        rows that arrived without it, normalize the lang tag. Both are
-        pure + idempotent, so re-running them on a stored winner yields
-        the identical value. Keeping EVERY pandas UDF out of the
-        pre-merge path matters beyond the row-count cut: an
-        ArrowEvalPython node in the scan stage breaks whole-stage
-        codegen and materializes all pass-through columns (the fat html
-        payload included) around the Python boundary for every source
-        row; winner-side, the one fused Arrow node touches each
-        surviving row once."""
-        cols = set(merged.columns)
-        if "html" in cols and "text" in cols:
-            merged = merged.withColumn(
-                "text", F.coalesce(F.col("text"),
-                                   extract_text(F.col("html"))))
-        if "lang" in cols:
-            merged = merged.withColumn("lang",
-                                       normalize_lang(F.col("lang")))
-        return self._redact(merged)
 
     def _side_sink(self, df: DataFrame, path: str, epoch_id: int) -> None:
         """Persist this epoch's rejected rows (the caller already knows
@@ -299,8 +245,9 @@ class CdcPipeline:
                     stream_id=self.stream_id,
                     epoch_id=epoch_id,
                     unset_nulls=self.unset_nulls,
-                    finalize=self._finalize if self.lazy_extract
-                    else None,
+                    finalize=partial(finalize_winners,
+                                     redact_cols=self.redact_cols)
+                    if self.lazy_extract else None,
                     probe=probe,
                 ),
                 _reload, attempts=4)
@@ -340,12 +287,7 @@ class CdcPipeline:
 
     def _record(self, result: MergeResult, epoch_id: int,
                 n_skip: int, n_quar: int) -> None:
-        """Append lineage + counter rows for this epoch.
-
-        Written driver-side via pyarrow (a handful of rows): launching a
-        Spark job per tiny side-table write costs several seconds per
-        epoch at high core counts for no distributed work.
-        """
+        """Append lineage + counter rows for this epoch."""
         rows = [
             {"epoch_id": epoch_id, "bucket": r["_bucket"],
              "live_rows": r["live_rows"],
@@ -358,17 +300,16 @@ class CdcPipeline:
         ]
         key = f"{self.stream_id}-{epoch_id}"
         if rows:
-            _append_parquet(self.table.fs, self.lineage_path, rows,
-                            _LINEAGE_ARROW, file_key=key)
+            runstate.append(self.table, "lineage", rows, key)
         c = result.counters or {}
-        _append_parquet(self.table.fs, self.counters_path, [{
+        runstate.append(self.table, "counters", [{
             "epoch_id": epoch_id,
             "read": c.get("events", 0) + n_skip + n_quar,
             "valid": c.get("events", 0), "skipped": n_skip,
             "quarantined": n_quar,
             "events_applied": c.get("events", 0),
             "buckets": c.get("buckets", 0), "stream_id": self.stream_id,
-        }], _COUNTERS_ARROW, file_key=key)
+        }], key)
 
     # ------------------------------------------------------- entrypoints
 
@@ -415,16 +356,7 @@ class CdcPipeline:
     # --------------------------------------------------------- queries
 
     def lineage(self) -> DataFrame:
-        return self._side_table(self.lineage_path, LINEAGE_SCHEMA)
+        return runstate.read(self.spark, self.table, "lineage")
 
     def counters(self) -> DataFrame:
-        return self._side_table(self.counters_path, COUNTERS_SCHEMA)
-
-    def _side_table(self, path: str, schema) -> DataFrame:
-        """Side-table read that treats a never-written table as EMPTY
-        (schema-typed) instead of PATH_NOT_FOUND: a run over an empty /
-        already-drained log records zero epochs, and its rollup must
-        still produce a zero-total ENDED row."""
-        if not self.table.fs.isdir(path):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(path)
+        return runstate.read(self.spark, self.table, "counters")

@@ -16,53 +16,20 @@ group — thousands of rows for a 10^10-event replay), never the data.
 
 from __future__ import annotations
 
-import os
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_data_migrator_spark.streaming.pipeline import (
-    CdcPipeline,
-    _append_parquet,
-)
+from cassandra_data_migrator_spark.streaming import runstate
+from cassandra_data_migrator_spark.streaming.pipeline import CdcPipeline
 from cassandra_data_migrator_spark.streaming.trackrun import BatchRunTracker
-
-RUN_INFO_SCHEMA = (
-    "run_id string, kind string, status string, epochs long, read long, "
-    "valid long, skipped long, quarantined long, events_applied long, "
-    "final_version int"
-)
 
 _TOTAL_KEYS = ("read", "valid", "skipped", "quarantined", "events_applied")
 
 
-def _run_info_arrow():
-    import pyarrow as pa
-    return pa.schema([
-        ("run_id", pa.string()), ("kind", pa.string()),
-        ("status", pa.string()), ("epochs", pa.int64()),
-        ("read", pa.int64()), ("valid", pa.int64()),
-        ("skipped", pa.int64()), ("quarantined", pa.int64()),
-        ("events_applied", pa.int64()), ("final_version", pa.int32()),
-    ])
-
-
-def _write_row(table, row: dict[str, Any]) -> None:
-    _append_parquet(
-        table.fs, os.path.join(table.path, "_run", "run_info"), [row],
-        _run_info_arrow(), file_key=f"{row['kind']}-{row['run_id']}")
-
-
 def run_info(spark: SparkSession, table) -> DataFrame:
-    """All run-level rows recorded for this table. A table with no
-    finalized run yet reads as typed-EMPTY, not PATH_NOT_FOUND — this
-    is the frame a dashboard polls, and it may poll before (or without)
-    any run finishing."""
-    path = os.path.join(table.path, "_run", "run_info")
-    if not table.fs.isdir(path):
-        return spark.createDataFrame([], RUN_INFO_SCHEMA)
-    return spark.read.schema(RUN_INFO_SCHEMA).parquet(path)
+    """All run-level rows recorded for this table (typed-EMPTY before
+    any run is finalized — this is the frame a dashboard polls)."""
+    return runstate.read(spark, table, "run_info")
 
 
 def finalize_stream_run(pipeline: CdcPipeline,
@@ -81,7 +48,8 @@ def finalize_stream_run(pipeline: CdcPipeline,
     totals = {k: int(agg[k] or 0) for k in ("epochs", *_TOTAL_KEYS)}
     row = {"run_id": pipeline.stream_id, "kind": "stream", "status": status,
            **totals, "final_version": pipeline.table.version}
-    _write_row(pipeline.table, row)
+    runstate.append(pipeline.table, "run_info", [row],
+                    f"stream-{pipeline.stream_id}")
     return totals
 
 
@@ -114,5 +82,5 @@ def finalize_tracked_run(tracker: BatchRunTracker, run_id: str,
               "quarantined": quarantined, "events_applied": applied}
     row = {"run_id": run_id, "kind": "tracked", "status": status,
            **totals, "final_version": tracker.table.version}
-    _write_row(tracker.table, row)
+    runstate.append(tracker.table, "run_info", [row], f"tracked-{run_id}")
     return totals

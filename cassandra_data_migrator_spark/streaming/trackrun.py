@@ -39,22 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_data_migrator_spark.lake.table import LakeTable, MergeResult
-from cassandra_data_migrator_spark.streaming.pipeline import _append_parquet
-
-RUN_DETAILS_SCHEMA = (
-    "run_id string, grp int, sub int, n_subs int, status string, "
-    "events long, buckets int, version int"
-)
-
-
-def _run_details_arrow():
-    import pyarrow as pa
-    return pa.schema([
-        ("run_id", pa.string()), ("grp", pa.int32()), ("sub", pa.int32()),
-        ("n_subs", pa.int32()), ("status", pa.string()),
-        ("events", pa.int64()), ("buckets", pa.int32()),
-        ("version", pa.int32()),
-    ])
+from cassandra_data_migrator_spark.streaming import runstate
 
 
 class BatchRunTracker:
@@ -66,18 +51,12 @@ class BatchRunTracker:
         self.spark = spark
         self.table = table
         self.n_groups = n_groups
-        self.details_path = os.path.join(table.path, "_run", "run_details")
-        self._arrow = _run_details_arrow()
+        self.details_path = runstate.path(table, "run_details")
 
     # ------------------------------------------------------------- state
 
     def run_details(self) -> DataFrame:
-        # a run with no PASS row yet is an EMPTY details table, not a
-        # PATH_NOT_FOUND (rollups over fresh/empty runs must work)
-        if not self.table.fs.isdir(self.details_path):
-            return self.spark.createDataFrame([], RUN_DETAILS_SCHEMA)
-        return self.spark.read.schema(RUN_DETAILS_SCHEMA).parquet(
-            self.details_path)
+        return runstate.read(self.spark, self.table, "run_details")
 
     def passed_groups(self, run_id: str) -> set[int]:
         """A group is PASS when its whole-group merge committed, or when
@@ -162,13 +141,12 @@ class BatchRunTracker:
             buckets_n = len(result.touched_buckets)
             version = result.version
         # deterministic file_key keeps the append idempotent
-        _append_parquet(
-            self.table.fs, self.details_path,
+        runstate.append(
+            self.table, "run_details",
             [{"run_id": run_id, "grp": grp, "sub": sub,
               "n_subs": n_subs, "status": status,
               "events": events_n, "buckets": buckets_n,
-              "version": version}],
-            self._arrow, file_key=file_key)
+              "version": version}], file_key)
         return result
 
     def _recover_commit(self, epoch_key: str

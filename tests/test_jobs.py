@@ -294,6 +294,40 @@ def test_validate_autocorrect_flags(spark, tmpdir_path, capsys, job_log):
     ).count() == 0
 
 
+def test_validate_after_migrate_with_text_bearing_event_schema(
+        spark, tmpdir_path, capsys):
+    """Events whose schema carries a ``text`` column left null: the
+    migration fills text from html winner-side, and validate's origin
+    leg must run the same winner-side stage — else every row reports
+    MISMATCH on text and autocorrect "repairs" rows that never converge."""
+    from datetime import timedelta
+
+    ddl = ("seq long, op string, url string, warc_ts timestamp, "
+           "html binary, text string, lang string")
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    ev = spark.createDataFrame(
+        [(i, "upsert", f"https://example.org/p{i}", t0 + timedelta(hours=i),
+          f"<html><body><p>hello {i}</p></body></html>".encode(), None,
+          "EN")
+         for i in range(6)], ddl)
+    log = os.path.join(tmpdir_path, "log")
+    write_event_log(ev, log, n_chunks=2)
+    table = os.path.join(tmpdir_path, "t")
+    _run(spark, capsys, ["migrate", "--log", log, "--table", table,
+                         "--event-schema", ddl])
+    texts = sorted(r["text"] for r in LakeTable(spark, table).read()
+                   .collect())
+    assert texts == [f"hello {i}" for i in range(6)]
+
+    out = _run(spark, capsys, ["validate", "--log", log, "--table", table,
+                               "--event-schema", ddl])
+    assert out["valid"] == 6 and out["mismatch"] == 0
+    fix = _run(spark, capsys, [
+        "validate", "--log", log, "--table", table, "--event-schema", ddl,
+        "--conf", "spark.cdm.autocorrect.mismatch=true"])
+    assert fix["mismatch"] == 0 and fix["corrected_mismatch"] == 0
+
+
 def test_guardrail_job_cli(spark, tmpdir_path, capsys, job_log):
     table = os.path.join(tmpdir_path, "t")
     _run(spark, capsys, ["migrate", "--log", job_log, "--table", table])

@@ -218,12 +218,12 @@ def test_probed_path_counts_null_predicate_as_skipped(spark, tmpdir_path):
 
 
 def test_probed_path_applies_salted_repartition(spark, tmpdir_path):
-    """With eager extraction (lazy_extract=False) + salting on, the
+    """With eager extraction (lazy_extract=False, which always salts), the
     probe path of _prepare must level hot-domain skew before the Arrow
     UDF stage (ADVICE r2)."""
     t = mk_table(spark, tmpdir_path, "t")
     p = CdcPipeline(spark, t, stream_id="s",
-                    lazy_extract=False, salt_transform_stage=True)
+                    lazy_extract=False)
     ev = gen_change_events(spark, n_urls=20, n_events=50, seed=3)
     batch, probe, _s, _q = p._prepare(ev, epoch_id=0)
     probe.unpersist()

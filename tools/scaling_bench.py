@@ -85,13 +85,11 @@ def worker(log_path: str, cores: int) -> None:
     # IDENTICAL table layout at every level — the comparison must vary
     # only the executor count, nothing else
     cfg = EngineConfig(n_buckets=128)
-    # salting off: the input is file-partitioned (already skew-free for
-    # the CPU stage), so salting would only add a payload shuffle; the
-    # skew path is exercised by tests and the streaming pipeline default
+    # the default lazy pipeline: its Arrow stage runs winner-side, so
+    # there is no pre-merge salted shuffle
     pipe = CdcPipeline(spark, LakeTable.create(spark, os.path.join(d, "t"),
                                                schema, cfg),
-                       cfg, stream_id=f"scale{cores}",
-                       salt_transform_stage=False)
+                       cfg, stream_id=f"scale{cores}")
     table = pipe.table
 
     events = read_event_log(spark, log_path)
