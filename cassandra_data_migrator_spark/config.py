@@ -104,7 +104,6 @@ class EngineConfig:
     null_ts_default: datetime | None = field(
         default=datetime(1970, 1, 1, tzinfo=timezone.utc)
     )
-    quarantine_null_keys: bool = True  # null url → quarantine, never merged
 
     # --- guardrail (ref feature/Guardrail.java:88-125) -------------------
     guardrail_kb: int = 0             # 0 = disabled; else flag rows with any
@@ -112,7 +111,3 @@ class EngineConfig:
 
     # --- streaming -------------------------------------------------------
     max_files_per_trigger: int = 16   # trigger sizing (replaces ratelimit)
-
-    @property
-    def data_cols(self) -> tuple[str, ...]:
-        return ("html", "text", "lang")

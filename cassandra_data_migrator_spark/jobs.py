@@ -294,23 +294,85 @@ def _featureset(args, job):
     return feat, ev_schema
 
 
-def _version_struct(ts_c, seq_c):
-    """(ts, seq) LWW version as an orderable struct. Null seq
-    coalesces to long-min — the same rank ``merge_batch``'s window
-    gives it (``_SEQ.desc`` nulls-last), so the explode guard, the
-    validate truth, and the merge order ties identically. A strict
-    struct comparison against a null field would instead evaluate to
-    NULL and silently drop the row. (The sentinel conflates a literal
-    seq of -2^63 with NULL — an accepted, vanishingly contrived tie.)"""
+def _read_events(spark, args, cfg, ev_schema):
+    """The job's event log. ``ev_schema`` is ``"default"`` (the web
+    ``EVENT_SCHEMA``), ``None`` (inferred) or an explicit StructType —
+    :func:`_featureset`'s choice."""
+    from cassandra_data_migrator_spark.sources import read_event_log
+    from cassandra_data_migrator_spark.sources.event_log import EVENT_SCHEMA
+    return read_event_log(
+        spark, args.log,
+        schema=(EVENT_SCHEMA if ev_schema == "default" else ev_schema),
+        fmt=args.log_format, ts_col=cfg.ts_col, seq_col=cfg.seq_col)
+
+
+def _event_chain(args, cfg, feat, target_schema=None):
+    """THE event→target chain, shared by every ``migrate`` mode and by
+    ``validate``'s origin leg — so anything that changes a row's key,
+    values or LWW version runs identically on both legs of the compare
+    (the reference runs its featureset on both legs,
+    ``DiffJobSession.java:243-330``). Stages, in order:
+
+    1. ``--counter``: delete events are dropped — an additive merge has
+       no sound reading of a delete (its null counters would no-op but
+       its ts would bump the max, and any non-null values would be
+       ADDED), and a counter cell cannot be tombstoned additively
+       (``schema/CqlTable.java:202-209``);
+    2. ``--canonicalize-urls``: cosmetic URL variants (host case,
+       default ports, www, fragments, tracking params, param order)
+       collapse into ONE merge key before any feature chain, so
+       variants of a page LWW-resolve instead of fragmenting
+       (``functions/urls.py``);
+    3. the feature chain (writetime/TTL, rename, explode, extract-json,
+       constants);
+    4. once ``target_schema`` is known: codec reconciliation and null-
+       constant typing (the reference's bind-time dispatch), then the
+       automatic positional struct mapping
+       (``CqlConversion.java:290-326``) when the target has struct
+       columns at all — the web tables have none, and a non-None chain
+       would needlessly turn off the streaming pipeline's combined
+       row-preserving probe.
+
+    Every stage is a Catalyst projection or filter. Returns None when no
+    stage applies."""
     from pyspark.sql import functions as F
-    return F.struct(
-        ts_c.alias("t"),
-        F.coalesce(seq_c.cast("long"), F.lit(-(1 << 63))).alias("s"))
+
+    from cassandra_data_migrator_spark.operators import transforms as TR
+
+    stages = []
+    if args.counter:
+        stages.append(lambda df: df.filter(~F.col("op").eqNullSafe("delete"))
+                      if "op" in df.columns else df)
+    if getattr(args, "canonicalize_urls", False):
+        from cassandra_data_migrator_spark.functions.urls import (
+            canonical_url_expr,
+        )
+        stages.append(lambda df: df.withColumn(
+            cfg.key_col, canonical_url_expr(cfg.key_col)))
+    if feat:
+        stages.append(lambda df: feat.transform(
+            df, origin_key=cfg.key_col,
+            keep_cols=("op", cfg.seq_col, cfg.ts_col), ts_col=cfg.ts_col))
+    if target_schema is not None:
+        if feat:
+            stages.append(lambda df: feat.codec_stage(df, target_schema))
+        if any(TR._struct_involved(f.dataType)
+               for f in target_schema.fields):
+            stages.append(
+                lambda df: TR.auto_map_structs(df, target_schema))
+    if not stages:
+        return None
+
+    def chain(df):
+        for stage in stages:
+            df = stage(df)
+        return df
+    return chain
 
 
-def _explode_origin_truth(feat, table, cfg, ev):
+def _explode_origin_truth(feat, cfg, ev):
     """Origin truth for an EXPLODED target: per-surrogate LWW, not
-    per-origin-key.
+    per-origin-key, over the chained events (:func:`_event_chain`).
 
     The migration merges each (key, map-entry) surrogate independently
     — entries evolve independently, and an update whose map no longer
@@ -325,31 +387,25 @@ def _explode_origin_truth(feat, table, cfg, ev):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    tr = feat.transform(ev, origin_key=cfg.key_col,
-                        keep_cols=("op", cfg.seq_col, cfg.ts_col),
-                        ts_col=cfg.ts_col)
-    tr = feat.codec_stage(tr, table.schema())
+    from cassandra_data_migrator_spark.lake.table import lww_version
+
     key_col = feat.target_key_col(cfg.key_col)
     okey = feat.rename.get(cfg.key_col, cfg.key_col)
     mk = feat.explode[1]
 
     is_del = F.col("op").eqNullSafe("delete") & F.col(mk).isNull()
-    upd = tr.filter(~is_del)
-    dels = tr.filter(is_del)
+    upd = ev.filter(~is_del)
+    dels = ev.filter(is_del)
 
     w = Window.partitionBy(key_col).orderBy(
         F.col(cfg.ts_col).desc(), F.col(cfg.seq_col).desc())
     win = (upd.withColumn("_rn", F.row_number().over(w))
            .filter(F.col("_rn") == 1).drop("_rn"))
 
-    dmax = dels.groupBy(okey).agg(
-        F.max(_version_struct(F.col(cfg.ts_col),
-                              F.col(cfg.seq_col))).alias("_d"))
+    version = lww_version(F.col(cfg.ts_col), F.col(cfg.seq_col))
+    dmax = dels.groupBy(okey).agg(F.max(version).alias("_d"))
     origin = (win.join(dmax, on=okey, how="left")
-              .filter(F.col("_d").isNull()
-                      | (_version_struct(F.col(cfg.ts_col),
-                                         F.col(cfg.seq_col))
-                         > F.col("_d")))
+              .filter(F.col("_d").isNull() | (version > F.col("_d")))
               .drop("_d", "op", cfg.seq_col))
     return origin, key_col
 
@@ -405,7 +461,11 @@ def _explode_delete_fanout(feat, table, cfg):
     surrogate row; only an explicit delete op clears the key."""
     from pyspark.sql import functions as F
 
-    from cassandra_data_migrator_spark.lake.table import _DELETED, _SEQ
+    from cassandra_data_migrator_spark.lake.table import (
+        _DELETED,
+        _SEQ,
+        lww_version,
+    )
     from cassandra_data_migrator_spark.operators.features import (
         SURROGATE_KEY_COL,
     )
@@ -447,12 +507,12 @@ def _explode_delete_fanout(feat, table, cfg):
                             & (F.col(SURROGATE_KEY_COL)
                                == F.col(key).cast("string")))
                     .select(F.col(key).alias("_tk"),
-                            _version_struct(F.col(cfg.ts_col),
-                                            F.col(_SEQ)).alias("_tv")))
+                            lww_version(F.col(cfg.ts_col),
+                                        F.col(_SEQ)).alias("_tv")))
             rest = (rest.join(tomb, rest[key] == tomb["_tk"], "left")
                     .filter(F.col("_tk").isNull()
-                            | (_version_struct(F.col(cfg.ts_col),
-                                               F.col(cfg.seq_col))
+                            | (lww_version(F.col(cfg.ts_col),
+                                           F.col(cfg.seq_col))
                                > F.col("_tv")))
                     .drop("_tk", "_tv"))
 
@@ -494,8 +554,6 @@ def _explode_delete_fanout(feat, table, cfg):
 def cmd_migrate(args, spark) -> dict[str, Any]:
     from pyspark.sql import types as T
 
-    from cassandra_data_migrator_spark.sources import read_event_log
-    from cassandra_data_migrator_spark.sources.event_log import EVENT_SCHEMA
     from cassandra_data_migrator_spark.streaming import (
         CdcPipeline,
         finalize_stream_run,
@@ -510,7 +568,6 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
     from cassandra_data_migrator_spark.operators.features import (
         SURROGATE_SEP,
     )
-    from cassandra_data_migrator_spark.operators import transforms as TR2
 
     import uuid
 
@@ -518,19 +575,6 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
     for w in warnings:
         print(f"WARN: {w}", file=sys.stderr)
     feat, ev_schema = _featureset(args, job)
-    transform = None
-    if getattr(args, "canonicalize_urls", False):
-        # canonical-key ingest: collapse cosmetic URL variants (host
-        # case, default ports, www, fragments, tracking params, param
-        # order) into ONE merge key BEFORE any feature chain — variants
-        # of one page then LWW-resolve instead of fragmenting into
-        # separate keys (functions/urls.py; validate applies the same
-        # stage on its origin leg so the compare stays symmetric)
-        from cassandra_data_migrator_spark.functions.urls import (
-            canonical_url_expr,
-        )
-        transform = lambda df: df.withColumn(  # noqa: E731
-            cfg.key_col, canonical_url_expr(cfg.key_col))
     redact_cols = _redact_cols(args)
     table_cfg = cfg
     schema_override = None
@@ -546,12 +590,6 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
             ev_schema = None
     _require_event_schema(ev_schema, args.log_format)
     if feat:
-        _pre_feat = transform  # the canonical-url stage, when enabled
-        transform = lambda df: feat.transform(  # noqa: E731
-            _pre_feat(df) if _pre_feat is not None else df,
-            origin_key=cfg.key_col,
-            keep_cols=("op", cfg.seq_col, cfg.ts_col),
-            ts_col=cfg.ts_col)
         if feat.reshapes:
             # the TARGET is keyed on the feature chain's output key
             # (the renamed key column, or the explode-widened
@@ -580,15 +618,10 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
         # engine's op/seq bookkeeping columns (the reference derives
         # the target shape from the target table's own DDL; with no
         # DDL given, the feature chain IS the shape)
-        sample = read_event_log(
-            spark, args.log,
-            schema=None if ev_schema is None else (
-                ev_schema if isinstance(ev_schema, T.StructType)
-                else EVENT_SCHEMA),
-            fmt=args.log_format, ts_col=cfg.ts_col,
-            seq_col=cfg.seq_col)
-        if transform is not None:
-            sample = transform(sample)
+        sample = _read_events(spark, args, cfg, ev_schema)
+        chain = _event_chain(args, cfg, feat)
+        if chain is not None:
+            sample = chain(sample)
         drop = {"op", cfg.seq_col}
         schema_override = T.StructType(
             [f for f in sample.schema.fields if f.name not in drop])
@@ -611,33 +644,13 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
               f"expires_col={table.expires_col!r}); recreate the table "
               "or drop the TTL properties", file=sys.stderr)
         raise SystemExit(2)
-    if feat and (feat.codecs or feat.has_null_constants):
-        # codec reconciliation (and null-constant typing) binds to the
-        # (now-known) target schema, after the reshape chain — the
-        # reference's bind-time dispatch
-        inner, tschema = transform, table.schema()
-        transform = lambda df: feat.codec_stage(  # noqa: E731
-            (inner(df) if inner is not None else df), tschema)
-    # automatic UDT field-wise mapping (CqlConversion.java:290-326;
-    # SIT/features/04_udt_mapper): struct-shaped columns positionally
-    # rename/cast to the target's struct shape, with NO configuration —
-    # runs after the feature chain so renamed/exploded columns map too.
-    # Gated on the TARGET carrying struct columns at all: the standard
-    # web tables have none, and a non-None transform would needlessly
-    # turn off the streaming pipeline's combined row-preserving probe.
-    _am_schema = table.schema()
-    if any(TR2._struct_involved(f.dataType) for f in _am_schema.fields):
-        _am_inner = transform
-        transform = lambda df: TR2.auto_map_structs(  # noqa: E731
-            (_am_inner(df) if _am_inner is not None else df), _am_schema)
-    if feat and feat.explode is not None:
+    transform = _event_chain(args, cfg, feat, table.schema())
+    if feat.explode is not None:
         # delete fan-out: the feature chain keeps CDC deletes as one
         # placeholder row each (null explode key); expand them here —
         # where the live table is known — into per-surrogate tombstones
-        inner2 = transform
-        fan = _explode_delete_fanout(feat, table, cfg)
-        transform = lambda df: fan(  # noqa: E731
-            inner2(df) if inner2 is not None else df)
+        chain, fan = transform, _explode_delete_fanout(feat, table, cfg)
+        transform = lambda df: fan(chain(df))  # noqa: E731
 
     if args.streaming:
         if any(k.startswith(("track_run", "previous_run_id", "auto_rerun",
@@ -666,11 +679,7 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
         return {"job": "migrate", "mode": "stream",
                 "stream_id": stream_id, **finalize_stream_run(pipe)}
 
-    events = read_event_log(
-        spark, args.log,
-        schema=(EVENT_SCHEMA if ev_schema == "default" else ev_schema),
-        fmt=args.log_format, ts_col=cfg.ts_col,
-        seq_col=cfg.seq_col)
+    events = _read_events(spark, args, cfg, ev_schema)
 
     if args.counter:
         # counter-table migration (reference S5: UPDATE SET c = c + ?,
@@ -697,13 +706,8 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
         ev = out.filter(keep & valid_keys)
         n_deletes = 0
         if "op" in ev.columns:
-            # Cassandra counter columns cannot be deleted-and-recreated
-            # the way regular cells can, and an additive merge has no
-            # sound interpretation of a delete event (its null counters
-            # would no-op but its ts would bump max, and any non-null
-            # values would be ADDED) — drop them loudly rather than
-            # silently sum them (reference counter caveat,
-            # schema/CqlTable.java:202-209)
+            # the chain drops counter deletes (_event_chain, stage 1);
+            # count them here so they are dropped loudly
             n_deletes = ev.filter(
                 F.col("op").eqNullSafe("delete")).count()
             if n_deletes:
@@ -712,7 +716,6 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
                       "tables (increments are not idempotent and a "
                       "counter cell cannot be tombstoned additively)",
                       file=sys.stderr)
-            ev = ev.filter(~F.col("op").eqNullSafe("delete"))
         if transform is not None:
             ev = transform(ev)
         stream_id = args.stream_id or "migrate-counter"
@@ -823,13 +826,11 @@ def cmd_validate(args, spark) -> dict[str, Any]:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from cassandra_data_migrator_spark.lake import LakeTable
     from cassandra_data_migrator_spark.operators import diff as DIFF
-    from cassandra_data_migrator_spark.sources import read_event_log
-
     from cassandra_data_migrator_spark.operators.filters import (
         split_predicates,
     )
-    from cassandra_data_migrator_spark.sources.event_log import EVENT_SCHEMA
     from cassandra_data_migrator_spark.streaming.pipeline import (
         finalize_winners,
     )
@@ -842,70 +843,39 @@ def cmd_validate(args, spark) -> dict[str, Any]:
         # counter events are not web events — infer, same as migrate
         ev_schema = None
     _require_event_schema(ev_schema, args.log_format)
-    from cassandra_data_migrator_spark.lake import LakeTable
     table = LakeTable(spark, args.table)
 
-    # origin truth: LWW state of the event log (the reference's origin
-    # read, OriginSelectByPartitionRangeStatement). The SAME configured
+    # origin truth: the state the migration's merge reaches from the
+    # event log (the reference's origin read,
+    # OriginSelectByPartitionRangeStatement). The SAME configured
     # filters the migration applied run on this leg too — the
     # reference's DiffData origin select carries the writetime/WHERE
     # filters (OriginSelectByPartitionRangeStatement.java:61), so a
     # filtered migration validates against equally-filtered truth
     # instead of reporting the excluded rows as MISSING (and, with
-    # autocorrect, re-inserting them).
-    ev = read_event_log(
-        spark, args.log,
-        schema=(EVENT_SCHEMA if ev_schema == "default" else ev_schema),
-        fmt=args.log_format, ts_col=cfg.ts_col,
-        seq_col=cfg.seq_col)
-    ev, keep, valid_keys = split_predicates(ev, cfg)
+    # autocorrect, re-inserting them). Then the migration's own event
+    # chain, and only then LWW by the target key: the truth orders
+    # exactly the rows the merge ordered.
+    ev, keep, valid_keys = split_predicates(
+        _read_events(spark, args, cfg, ev_schema), cfg)
     ev = ev.filter(keep & valid_keys)
-    if getattr(args, "canonicalize_urls", False):
-        # same canonical-key stage as the migration (post-filter, pre-
-        # feature — the positions match cmd_migrate's transform chain),
-        # so origin truth groups by the canonical key the target holds
-        from cassandra_data_migrator_spark.functions.urls import (
-            canonical_url_expr,
-        )
-        ev = ev.withColumn(cfg.key_col, canonical_url_expr(cfg.key_col))
-    if feat:
-        # the writetime override and type codecs must run BEFORE the
-        # LWW window so validate orders events exactly as the
-        # migration's merge did (the merge transforms pre-merge); both
-        # stages are idempotent, so the full transform below
-        # re-applying them is harmless
-        ev = feat.codec_stage(ev, table.schema())
-        ev = feat.event_time_stage(ev, cfg.ts_col)
+    chain = _event_chain(args, cfg, feat, table.schema())
+    if chain is not None:
+        ev = chain(ev)
 
     if args.counter:
-        return _validate_counter(spark, args, cfg, job, feat, table, ev)
+        return _validate_counter(args, cfg, job, feat, table, ev)
 
-    if feat and feat.explode is not None:
+    if feat.explode is not None:
         # exploded targets need per-SURROGATE truth, not per-origin-key
-        origin, key_col = _explode_origin_truth(feat, table, cfg, ev)
+        origin, key_col = _explode_origin_truth(feat, cfg, ev)
     else:
-        w = Window.partitionBy(cfg.key_col).orderBy(
+        key_col = feat.target_key_col(cfg.key_col)
+        w = Window.partitionBy(key_col).orderBy(
             F.col(cfg.ts_col).desc(), F.col(cfg.seq_col).desc())
         origin = (ev.withColumn("_rn", F.row_number().over(w))
                   .filter((F.col("_rn") == 1) & (F.col("op") != "delete"))
                   .drop("_rn", "op", cfg.seq_col))
-        key_col = cfg.key_col
-        if feat:
-            # the reference runs its featureset on both legs of the
-            # compare (DiffJobSession.java:243-330); same here
-            origin = feat.transform(origin, origin_key=cfg.key_col,
-                                    keep_cols=(cfg.ts_col,),
-                                    ts_col=cfg.ts_col)
-            origin = feat.codec_stage(origin, table.schema())
-            key_col = feat.target_key_col(cfg.key_col)
-    from cassandra_data_migrator_spark.operators import transforms as TR2
-    _vschema = table.schema()
-    if any(TR2._struct_involved(f.dataType) for f in _vschema.fields):
-        # migrate auto-maps struct shapes to the target
-        # (CqlConversion.java:290-326) — the validation truth must run
-        # through the identical positional mapping or every
-        # struct-bearing row reports MISMATCH
-        origin = TR2.auto_map_structs(origin, _vschema)
     # the migration ran the winner-side stage (text from html, lang
     # normalization, redaction) on every stored row; origin truth runs
     # the same stage, or every row it touches reports MISMATCH
@@ -955,11 +925,11 @@ def cmd_validate(args, spark) -> dict[str, Any]:
     return out
 
 
-def _validate_counter(spark, args, cfg, job, feat, table, ev
-                      ) -> dict[str, Any]:
-    """Counter-table validation: origin truth is the per-key SUM of
-    deltas (a from-scratch replay of ``merge_counter_batch``'s
-    additive semantics), not an LWW window. Corrections are applied as
+def _validate_counter(args, cfg, job, feat, table, ev) -> dict[str, Any]:
+    """Counter-table validation: origin truth is the per-key SUM of the
+    chained events' deltas (a from-scratch replay of
+    ``merge_counter_batch``'s additive semantics, deletes dropped the
+    way migrate drops them), not an LWW window. Corrections are applied as
     increments of ``origin − target`` — the reference's counter bind
     (``cql/statement/TargetUpdateStatement.java:42-144``) — and
     correcting MISSING rows additionally requires the
@@ -972,12 +942,7 @@ def _validate_counter(spark, args, cfg, job, feat, table, ev
 
     from cassandra_data_migrator_spark.operators import diff as DIFF
 
-    if feat:
-        ev = feat.transform(ev, origin_key=cfg.key_col,
-                            keep_cols=("op", cfg.seq_col, cfg.ts_col),
-                            ts_col=cfg.ts_col)
-        ev = feat.codec_stage(ev, table.schema())
-    key_col = feat.target_key_col(cfg.key_col) if feat else cfg.key_col
+    key_col = feat.target_key_col(cfg.key_col)
     counter_cols = [f.name for f in table.schema().fields
                     if f.name not in (key_col, cfg.ts_col)]
     origin = (ev.groupBy(F.col(key_col))

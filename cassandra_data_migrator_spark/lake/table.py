@@ -89,6 +89,17 @@ _PREREDUCE_FORCE_BROADCAST_MAX_EVENTS = 1_500_000
 _NO_SEQ = -(2 ** 63)
 
 
+def lww_version(ts, seq):
+    """(ts, seq) LWW version as an orderable struct ``(_t, _s)``. A null
+    seq coalesces to long-min, the rank the merge window gives it (seq
+    desc nulls-last), so every comparison of versions ties the way the
+    merge orders; a struct compared on a null field would evaluate to
+    NULL and silently drop the row. (The sentinel conflates a literal
+    seq of -2^63 with NULL, an accepted and contrived tie.)"""
+    return F.struct(ts.alias("_t"),
+                    F.coalesce(seq.cast("long"), F.lit(_NO_SEQ)).alias("_s"))
+
+
 class CommitConflict(RuntimeError):
     """A concurrent writer committed the same manifest version."""
 
@@ -116,8 +127,8 @@ class Probe:
     :meth:`LakeTable.probe` and shared by every consumer of the merge.
 
     ``perkey`` is persisted: one row per (status, bucket ``_b``, key
-    ``_k``) with the key's winner version ``_w`` = max of struct(ts,
-    coalesce(seq, -2^63)), its min/max seq (``mn``/``mx``) and its event
+    ``_k``) with the key's winner version ``_w`` = max of
+    :func:`lww_version`, its min/max seq (``mn``/``mx``) and its event
     count ``n``. Rows whose status is non-null are rejects: they are
     counted per status in ``rejects`` and kept out of everything else.
     Whoever asked for the probe unpersists it."""
@@ -394,9 +405,8 @@ class LakeTable:
 
     @property
     def merge_mode(self) -> str:
-        """Table-default merge mode ("cow" | "mor"); legacy manifests
-        without the key are CoW. A per-call ``merge_batch(mode=...)``
-        overrides it."""
+        """The table's merge mode ("cow" | "mor"); legacy manifests
+        without the key are CoW."""
         return self.manifest["config"].get("merge_mode") or "cow"
 
     def delta_file_counts(self) -> dict[int, int]:
@@ -521,7 +531,7 @@ class LakeTable:
         snapshot's schema by column id).
 
         Merge-on-read resolution: when the selected buckets carry DELTA
-        file entries (``merge_batch(mode="mor")`` commits), the base and
+        file entries (merge-on-read commits), the base and
         delta rows of each key are resolved to ONE stored winner here —
         the same LWW order the CoW merge uses (ts desc, seq
         desc-nulls-last), with the delta's commit version (``dv``, base
@@ -837,11 +847,10 @@ class LakeTable:
         force_overwrite: bool = False,
         finalize: Any | None = None,
         probe: Probe | None = None,
-        mode: str | None = None,
     ) -> MergeResult:
         """LWW MERGE of a change batch into the table.
 
-        ``mode`` (default: the table's ``merge_mode`` config):
+        The table's ``merge_mode`` picks the write strategy:
 
         - ``"cow"`` — copy-on-write: read + rewrite every touched
           bucket whole (the shape documented below).
@@ -892,9 +901,6 @@ class LakeTable:
         window; reads + rewrites only touched buckets; bucket pruning
         via the manifest file list.
         """
-        mode = mode or self.merge_mode
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
         epoch_key = f"{stream_id}/{epoch_id}" if stream_id is not None else None
         if stream_id is not None:
             fence = self.manifest["epoch_fence"].get(stream_id)
@@ -909,7 +915,8 @@ class LakeTable:
             if not probe.touched:
                 return self._commit_empty_epoch(epoch_key, stream_id,
                                                 epoch_id)
-            delta = mode == "mor" and not force_overwrite and not unset_nulls
+            delta = (self.merge_mode == "mor" and not force_overwrite
+                     and not unset_nulls)
             merged = self._lww_merged(source, probe, op_col, seq_col,
                                       unset_nulls, force_overwrite, delta)
             if finalize is not None:
@@ -1113,9 +1120,7 @@ class LakeTable:
             src.repartition(F.col(_BUCKET))
             .groupBy(*status, F.col(_BUCKET).alias("_b"),
                      F.col(self.key_col).alias("_k"))
-            .agg(F.max(F.struct(
-                     F.col(self.ts_col).alias("_t"),
-                     F.coalesce(F.col(_SEQ), F.lit(_NO_SEQ)).alias("_s")))
+            .agg(F.max(lww_version(F.col(self.ts_col), F.col(_SEQ)))
                   .alias("_w"),
                  F.min(_SEQ).alias("mn"), F.max(_SEQ).alias("mx"),
                  F.count("*").alias("n"))

@@ -261,33 +261,24 @@ class FeatureSet:
             return F.timestamp_micros(c)
         return c
 
-    # marker column making event_time_stage idempotent: validate runs
-    # the stage BEFORE its LWW window and the full transform re-runs it
-    # after — without the marker, listing ts_col itself in
-    # writetime.names (+incrementBy) would double-apply the increment
-    # on the validate leg and report every row as MISMATCH
-    _WT_DONE = "_cdm_wt_done"
-
-    def event_time_stage(self, df: DataFrame, ts_col: str) -> DataFrame:
-        """Writetime override — MUST run before any LWW ordering so
-        merge and validate pick the same winners. Idempotent via the
-        ``_WT_DONE`` marker (dropped at the end of :meth:`transform`)."""
-        if self._WT_DONE in df.columns:
-            return df
+    def _event_time_stage(self, df: DataFrame, ts_col: str) -> DataFrame:
+        """Writetime override. It rewrites the LWW version, so it runs
+        before any LWW ordering: the merge and validate's origin truth
+        both order events after :meth:`transform`. Not idempotent —
+        with ts_col itself in writetime.names, a second application
+        adds the increment again."""
         if self.custom_writetime > 0:
             # constant wins; increment deliberately NOT added
             # (WritetimeTTL.java:231,245)
             return df.withColumn(
-                ts_col, F.timestamp_micros(F.lit(self.custom_writetime))
-            ).withColumn(self._WT_DONE, F.lit(True))
+                ts_col, F.timestamp_micros(F.lit(self.custom_writetime)))
         if self.writetime_names:
             terms = [self._wt_term(df, c) for c in self.writetime_names]
             m = F.greatest(*terms) if len(terms) > 1 else terms[0]
             if self.writetime_increment:
                 m = m + F.expr(
                     f"INTERVAL {self.writetime_increment} MICROSECOND")
-            return (df.withColumn(ts_col, m)
-                    .withColumn(self._WT_DONE, F.lit(True)))
+            return df.withColumn(ts_col, m)
         return df
 
     def _ttl_stage(self, df: DataFrame, ts_col: str) -> DataFrame:
@@ -374,7 +365,7 @@ class FeatureSet:
         own."""
         out = df
         if ts_col is not None:
-            out = self.event_time_stage(out, ts_col)
+            out = self._event_time_stage(out, ts_col)
             out = self._ttl_stage(out, ts_col)
         out = self._scrub_stage(out)
         if self.rename:
@@ -437,8 +428,6 @@ class FeatureSet:
                 SURROGATE_KEY_COL,
                 F.concat_ws(_US, F.col(key).cast("string"),
                             F.col(self.explode[1]).cast("string")))
-        if self._WT_DONE in out.columns:
-            out = out.drop(self._WT_DONE)
         return out
 
 

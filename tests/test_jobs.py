@@ -440,6 +440,35 @@ def test_migrate_counter_cli(spark, tmpdir_path, capsys):
                 spark=spark) == 2
 
 
+def test_counter_validate_after_migrate_with_delete_event(
+        spark, tmpdir_path, capsys):
+    """A delete event that ``migrate --counter`` ignores is ignored by
+    ``validate --counter`` too: its ts must not count toward the origin
+    truth's max(ts), or validate reports a MISMATCH on ``ts`` and
+    autocorrect writes the ignored delete's timestamp into the target."""
+    import datetime as dt
+
+    ddl = "user string, ts timestamp, cents long, op string, seq long"
+    rows = [(f"u{i % 2}", dt.datetime(2024, 1, 1, 0, 0, i), 10 + i,
+             "update", i) for i in range(6)]
+    rows.append(("u0", dt.datetime(2024, 1, 1, 0, 1, 0), None, "delete", 6))
+    log = os.path.join(tmpdir_path, "cdlog")
+    write_event_log(spark.createDataFrame(rows, ddl), log, n_chunks=1)
+    table = os.path.join(tmpdir_path, "cdt")
+    base = ["--log", log, "--table", table, "--key-col", "user",
+            "--ts-col", "ts", "--event-schema", ddl, "--counter"]
+
+    out = _run(spark, capsys, ["migrate", *base])
+    assert out["deletes_ignored"] == 1
+    assert _run(spark, capsys, ["validate", *base])["mismatch"] == 0
+    fix = _run(spark, capsys, [
+        "validate", *base, "--conf", "spark.cdm.autocorrect.mismatch=true"])
+    assert fix["mismatch"] == 0 and fix["corrected"] == 0
+    stored = {r["user"]: r["ts"]
+              for r in LakeTable(spark, table).read().collect()}
+    assert stored["u0"] == dt.datetime(2024, 1, 1, 0, 0, 4)
+
+
 def test_json_event_log_roundtrip(spark, tmpdir_path, capsys):
     """JSON-lines event log (Debezium/Maxwell-style tail): binary html
     round-trips via base64; batch CLI replay over the json log equals

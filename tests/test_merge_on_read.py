@@ -256,15 +256,15 @@ def test_mor_unset_nulls_falls_back_to_cow(spark, tmpdir_path):
 
 
 def test_mixed_cow_merge_folds_touched_buckets(spark, tmpdir_path):
-    """An explicit mode='cow' merge on a MoR table folds the touched
-    buckets' deltas (its rewrite REPLACES their file lists) while
-    leaving other buckets' deltas in place."""
+    """A force_overwrite merge on a MoR table takes the CoW path: it
+    folds the touched buckets' deltas (its rewrite REPLACES their file
+    lists) while leaving other buckets' deltas in place."""
     t = mk_table(spark, tmpdir_path, "t", n_buckets=8)
     apply_epochs(t, spark)
     pre = final_state(t)
     r = t.merge_batch(
         mk_events(spark, [(99, "update", "https://a/1", 999, "cowed")]),
-        mode="cow")
+        force_overwrite=True)
     for b in r.touched_buckets:
         assert not any(e.get("delta")
                        for e in t.manifest["files"][str(b)])
@@ -338,13 +338,6 @@ def test_create_rejects_unknown_merge_mode(spark, tmpdir_path):
     with pytest.raises(ValueError, match="merge_mode"):
         LakeTable.create(spark, os.path.join(tmpdir_path, "bad"),
                          WEB_SCHEMA, EngineConfig(merge_mode="nope"))
-
-
-def test_merge_batch_rejects_unknown_mode(spark, tmpdir_path):
-    t = mk_table(spark, tmpdir_path, "t", mode="cow")
-    with pytest.raises(ValueError, match="mode"):
-        t.merge_batch(mk_events(spark, [(1, "insert", "u", 1, "x")]),
-                      mode="hybrid")
 
 
 def test_mor_streaming_replay_equals_cow_batch(spark, tmpdir_path):

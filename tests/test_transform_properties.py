@@ -336,7 +336,7 @@ def test_counter_migrate_without_event_schema(spark, tmpdir_path,
 def test_writetime_names_self_reference_idempotent(spark, tmpdir_path,
                                                    capsys):
     """ts_col itself listed in writetime.names with incrementBy: the
-    marker-guarded stage applies the increment exactly ONCE on both the
+    one event chain applies the increment exactly ONCE on both the
     migrate and validate legs (previously validate re-applied it after
     its LWW window and reported every row as MISMATCH)."""
     rows = [("u1", dt.datetime(2024, 1, 1), "update", 1),
