@@ -63,13 +63,16 @@ class EngineConfig:
     # (Iceberg v2 calls the same trade-off copy-on-write vs
     # merge-on-read; Hudi: COW vs MOR table types.)
     merge_mode: str = "cow"
-    # Inline MoR maintenance for long-lived tails: after a merge,
-    # buckets holding >= this many unfolded delta files are compacted
-    # in place (0 = never — run `maintain --compact` out of band).
-    # Bounds the read-side resolution depth without an external
-    # maintenance scheduler; the cost model is Hudi's inline
-    # compaction. Checked against the manifest only (no data I/O) and
-    # compaction rewrites just the over-threshold buckets.
+    # Inline MoR maintenance for long-lived tails (pipeline and tracked
+    # `migrate` merges): a merge folds every bucket whose unfolded delta
+    # files, counting the one it would add, reach this many, in its own
+    # write (0 = never — run `maintain --compact` out of band). A folded
+    # bucket is rewritten as one base file in the same commit, so no
+    # delta is written only to be read back by a second pass. Bounds the
+    # read-side resolution depth below the threshold without an external
+    # maintenance scheduler; the fold set is read off the manifest the
+    # merge commits against (no data I/O) and only those buckets are
+    # rewritten.
     mor_compact_min_deltas: int = 0
 
     # --- skew handling (north_rule: salted repartition) ------------------

@@ -792,7 +792,8 @@ def cmd_migrate(args, spark) -> dict[str, Any]:
             events = transform(events)
         merge_kw = {"finalize": partial(finalize_winners,
                                         redact_cols=redact_cols),
-                    "seq_col": cfg.seq_col}
+                    "seq_col": cfg.seq_col,
+                    "fold_min_deltas": cfg.mor_compact_min_deltas}
         if job.get("previous_run_id") or job.get("auto_rerun"):
             tracker.resume(events, run_id,
                            rerun_multiplier=job.get("rerun_multiplier", 1),
@@ -874,7 +875,8 @@ def cmd_validate(args, spark) -> dict[str, Any]:
         w = Window.partitionBy(key_col).orderBy(
             F.col(cfg.ts_col).desc(), F.col(cfg.seq_col).desc())
         origin = (ev.withColumn("_rn", F.row_number().over(w))
-                  .filter((F.col("_rn") == 1) & (F.col("op") != "delete"))
+                  .filter((F.col("_rn") == 1)
+                          & ~F.col("op").eqNullSafe("delete"))
                   .drop("_rn", "op", cfg.seq_col))
     # the migration ran the winner-side stage (text from html, lang
     # normalization, redaction) on every stored row; origin truth runs

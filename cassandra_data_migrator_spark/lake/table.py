@@ -42,10 +42,11 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import copy
+import functools
 import json
 import os
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Collection, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -70,9 +71,11 @@ _CK = "_ck"             # long  — row checksum, precomputed at write time so
                         #         the lineage pass reads 3 thin columns
                         #         instead of re-scanning payloads
 _PB = "_pb"             # partition-dir duplicate of _bucket (not read back)
-_DV = "_dv"             # int — delta commit version during MoR resolution
-                        #       (read-time literal from the manifest entry's
-                        #       "dv"; base files read as 0; never stored)
+_DV = "_dv"             # int — commit version of a row during LWW
+                        #       resolution (read-time literal from the
+                        #       manifest entry's "dv"; base files read as
+                        #       0; a merge's batch rows carry its new
+                        #       version; never stored)
 INTERNAL_COLS = (_BUCKET, _DELETED, _SEQ)
 
 # LWW pre-reduction gate: a batch of at most this many events is reduced
@@ -98,6 +101,25 @@ def lww_version(ts, seq):
     seq of -2^63 with NULL, an accepted and contrived tie.)"""
     return F.struct(ts.alias("_t"),
                     F.coalesce(seq.cast("long"), F.lit(_NO_SEQ)).alias("_s"))
+
+
+def _lww_winners(rows: DataFrame, key: str, ts: str,
+                 n_part: int | None = None) -> DataFrame:
+    """THE LWW window over rows that carry ``_dv``, the commit version
+    that stored them (base files 0, a merge's own batch its new
+    version): one row per ``(_bucket, key)``, newest ``(ts, seq)``
+    first, the older commit winning an exact tie, ``_dv`` dropped.
+    Serves the MoR read resolution, the delta write, its fold and
+    :meth:`LakeTable.compact`. With ``n_part`` the rows are first
+    clustered by ``_bucket`` for a bucketed write; the window's
+    ``(_bucket, key)`` distribution is then already satisfied, so the
+    plan holds that one Exchange."""
+    if n_part is not None:
+        rows = rows.repartition(n_part, F.col(_BUCKET))
+    w = Window.partitionBy(_BUCKET, key).orderBy(
+        F.col(ts).desc(), F.col(_SEQ).desc_nulls_last(), F.col(_DV).asc())
+    return (rows.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn", _DV))
 
 
 class CommitConflict(RuntimeError):
@@ -175,7 +197,12 @@ def _fields_to_schema(fields: list[dict]) -> T.StructType:
     ])
 
 
+@functools.lru_cache(maxsize=None)
 def _parse_type(s: str) -> T.DataType:
+    """A registered type string as a DataType. Cached: each parse is a
+    JVM ``fromDDL`` round trip, and every read, merge and commit
+    re-parses the same few manifest type strings. Callers share the
+    returned object and must not mutate it."""
     return T.StructType.fromDDL(f"`c` {s}").fields[0].dataType
 
 
@@ -524,6 +551,7 @@ class LakeTable:
         current: list[dict] | None = None,
         schemas: dict | None = None,
         ts_between: tuple[Any, Any] | None = None,
+        resolve: bool = True,
     ) -> DataFrame:
         """Read any committed manifest. ``current``/``schemas`` override
         the field list the files are reconciled to (used by
@@ -532,13 +560,19 @@ class LakeTable:
 
         Merge-on-read resolution: when the selected buckets carry DELTA
         file entries (merge-on-read commits), the base and
-        delta rows of each key are resolved to ONE stored winner here —
-        the same LWW order the CoW merge uses (ts desc, seq
-        desc-nulls-last), with the delta's commit version (``dv``, base
-        files = 0) as the tie-break so an exact duplicate replayed in a
-        later delta loses to the earlier stored row, exactly like the
-        CoW window's stored-row-wins-on-tie. Pure-CoW snapshots skip the
-        resolution entirely (no window node in the plan)."""
+        delta rows of each key are resolved to ONE stored winner here
+        by :func:`_lww_winners` — the same LWW order the CoW merge uses
+        (ts desc, seq desc-nulls-last), with the delta's commit version
+        (``dv``, base files = 0) as the tie-break so an exact duplicate
+        replayed in a later delta loses to the earlier stored row,
+        exactly like the CoW window's stored-row-wins-on-tie. Pure-CoW
+        snapshots skip the resolution entirely (no window node in the
+        plan).
+
+        ``resolve=False`` returns every stored row of the selected
+        buckets UNRESOLVED, tombstones and internal columns included,
+        with its ``_dv``: the input of a window that also ranks rows
+        not yet stored (the MoR fold, ``compact``)."""
         if schemas is None:
             schemas = manifest["schemas"]
         if current is None:
@@ -572,7 +606,7 @@ class LakeTable:
                         or (hi_us is not None and e["ts_min"] > hi_us)):
                     continue
                 path = _resolve_entry(self.path, e["path"])
-                if bucket_has_delta:
+                if bucket_has_delta or not resolve:
                     gk = (e["schema_version"], int(e.get("dv", 0)))
                     delta_groups.setdefault(gk, []).append(path)
                 else:
@@ -584,34 +618,32 @@ class LakeTable:
                                              schemas=schemas)
             out = df if out is None else out.unionByName(df)
         if delta_groups:
-            # LWW-resolve base ∪ deltas of the delta-carrying buckets
-            # to one stored row per key. The key/ts columns are located
-            # by FIELD ID in the output field list (``current`` may
-            # carry renamed-forward names when changes_between
-            # reconciles an old snapshot).
             dpart: DataFrame | None = None
             for (sv, dv), paths in sorted(delta_groups.items()):
                 df = self._read_files_as_current(
                     paths, sv, current, schemas=schemas) \
                     .withColumn(_DV, F.lit(dv))
                 dpart = df if dpart is None else dpart.unionByName(df)
-            own = schemas[str(manifest["schema_version"])]
-            cfg = manifest["config"]
-            key_out = _name_by_field_id(own, cfg["key_col"], current)
-            ts_out = _name_by_field_id(own, cfg["ts_col"], current)
-            w = Window.partitionBy(_BUCKET, key_out).orderBy(
-                F.col(ts_out).desc(),
-                F.col(_SEQ).desc_nulls_last(),
-                F.col(_DV).asc(),
-            )
-            dpart = (dpart.withColumn("_rn", F.row_number().over(w))
-                          .filter(F.col("_rn") == 1).drop("_rn", _DV))
+            if resolve:
+                # LWW-resolve base ∪ deltas of the delta-carrying
+                # buckets to one stored row per key. The key/ts columns
+                # are located by FIELD ID in the output field list
+                # (``current`` may carry renamed-forward names when
+                # changes_between reconciles an old snapshot).
+                own = schemas[str(manifest["schema_version"])]
+                cfg = manifest["config"]
+                dpart = _lww_winners(
+                    dpart, _name_by_field_id(own, cfg["key_col"], current),
+                    _name_by_field_id(own, cfg["ts_col"], current))
             out = dpart if out is None else out.unionByName(dpart)
         if out is None:
+            dv = [] if resolve else [T.StructField(_DV, T.IntegerType())]
             out = self.spark.createDataFrame(
                 [], T.StructType(list(_fields_to_schema(current).fields)
-                                 + _internal_struct_fields())
+                                 + _internal_struct_fields() + dv)
             )
+        if not resolve:
+            return out
         if ts_between is not None:
             own = schemas[str(manifest["schema_version"])]
             ts_out = _name_by_field_id(own, manifest["config"]["ts_col"],
@@ -847,6 +879,7 @@ class LakeTable:
         force_overwrite: bool = False,
         finalize: Any | None = None,
         probe: Probe | None = None,
+        fold_min_deltas: int = 0,
     ) -> MergeResult:
         """LWW MERGE of a change batch into the table.
 
@@ -857,9 +890,9 @@ class LakeTable:
         - ``"mor"`` — merge-on-read: append ONLY the batch's per-key
           LWW winners as delta files; the read path resolves base ∪
           deltas with the identical LWW order (see ``_read_snapshot``)
-          and ``compact()`` folds deltas into base. Same final state,
-          write cost O(batch) instead of O(touched buckets) — the 100-TB
-          shape for high-frequency small epochs. ``finalize`` then runs
+          and ``compact()`` or a fold (below) folds deltas into base.
+          Same final state, write cost O(batch) instead of O(touched
+          buckets) — the 100-TB shape for high-frequency small epochs. ``finalize`` then runs
           on batch winners only (cheaper; stored rows keep their already
           -finalized values). Two semantics need stored-row context at
           write time and silently use the CoW path even in MoR mode:
@@ -880,6 +913,15 @@ class LakeTable:
         ran it (over this batch, or over a frame it reaches by
         row-preserving steps plus a status filter). The merge then
         launches no probe job of its own; the caller unpersists it.
+
+        ``fold_min_deltas`` (MoR delta merges; 0 = never): fold on
+        write. Every bucket whose unfolded-delta depth, plus one if this
+        batch touches it, reaches the threshold is rewritten as one
+        base file IN THIS COMMIT — its stored base ∪ deltas ranked with
+        the batch rows in the delta write's own LWW window — instead of
+        taking a delta that a second compaction pass would read back
+        at once. The fold set comes from the manifest this merge
+        commits against, so a conflict retry recomputes it.
 
         Semantics (the engine's central operator — reference analogs
         S4/S5 upserts + J3 ``TargetUpsertStatement``, Cassandra LWW):
@@ -917,13 +959,20 @@ class LakeTable:
                                                 epoch_id)
             delta = (self.merge_mode == "mor" and not force_overwrite
                      and not unset_nulls)
+            hit = set(probe.touched)
+            fold: set[int] = set()
+            if delta and fold_min_deltas:
+                depth = self.delta_file_counts()
+                fold = {b for b in hit | set(depth)
+                        if depth.get(b, 0) + (b in hit) >= fold_min_deltas}
             merged = self._lww_merged(source, probe, op_col, seq_col,
-                                      unset_nulls, force_overwrite, delta)
+                                      unset_nulls, force_overwrite, delta,
+                                      sorted(fold))
             if finalize is not None:
                 merged = finalize(merged)
             return self._write_and_commit(
-                merged, probe.offsets, probe.touched, epoch_key, stream_id,
-                epoch_id, delta=delta)
+                merged, probe.offsets, sorted(hit | fold), epoch_key,
+                stream_id, epoch_id, append=hit - fold if delta else ())
         finally:
             if own_probe:
                 probe.unpersist()
@@ -931,10 +980,12 @@ class LakeTable:
     def _lww_merged(
         self, source: DataFrame, probe: Probe, op_col: str, seq_col: str,
         unset_nulls: bool, force_overwrite: bool, delta: bool,
+        fold: Sequence[int] = (),
     ) -> DataFrame:
         """The merge plan: the batch's LWW winners (``delta``: merge-on-
-        read, batch rows only) or the touched buckets' merged state,
-        clustered by ``_bucket`` for the bucketed write."""
+        read, batch rows only, plus the resolved state of the ``fold``
+        buckets) or the touched buckets' merged state, clustered by
+        ``_bucket`` for the bucketed write."""
         schema_fields = self.current_fields()
         data_cols = self._data_cols()
         src = source
@@ -982,21 +1033,25 @@ class LakeTable:
                 win = F.broadcast(win)
             src = src.join(win, cond, "inner").drop("_k", "_w")
 
-        n_part = self._write_partitions(len(probe.touched))
         if delta:
-            # merge-on-read: never touch stored rows. One shuffle
-            # clusters the (pre-reduced) batch by bucket; a window picks
-            # exactly one winner per key (prereduction can leave exact
-            # (key, ts, seq) duplicates — replay copies — which must
-            # collapse so a delta commit holds at most one row per key,
-            # the invariant read-time resolution and changes_between
-            # rely on); the bucketed write then splits per-bucket files
-            # with no further shuffle.
-            clustered = src.repartition(n_part, F.col(_BUCKET))
-            w = Window.partitionBy(_BUCKET, self.key_col).orderBy(
-                F.col(self.ts_col).desc(), F.col(_SEQ).desc_nulls_last())
-            return (clustered.withColumn("_rn", F.row_number().over(w))
-                             .filter(F.col("_rn") == 1).drop("_rn"))
+            # merge-on-read: the batch rows are the newest delta. One
+            # shuffle clusters them by bucket, together with the fold
+            # buckets' stored rows (unresolved, each with its commit
+            # version); the LWW window picks exactly one winner per key
+            # (prereduction can leave exact (key, ts, seq) duplicates —
+            # replay copies — which must collapse so a delta commit
+            # holds at most one row per key, the invariant read-time
+            # resolution and changes_between rely on), and in a fold
+            # bucket it also resolves the stored rows, so the bucket
+            # comes out whole. The bucketed write then splits per-
+            # bucket files with no further shuffle.
+            rows = src.withColumn(_DV, F.lit(self.version + 1))
+            if fold:
+                rows = rows.unionByName(self._read_snapshot(
+                    self.manifest, buckets=list(fold), resolve=False))
+            return _lww_winners(
+                rows, self.key_col, self.ts_col,
+                self._write_partitions(len({*probe.touched, *fold})))
 
         target = self.read(buckets=probe.touched, include_deleted=True,
                            include_internal=True)
@@ -1017,7 +1072,8 @@ class LakeTable:
         # ClusteredDistribution is already satisfied by the bucket hash
         # partitioning, so the window adds only a partition-local sort.
         # The bucketed write then needs no second repartition.
-        unioned = unioned.repartition(n_part, F.col(_BUCKET))
+        unioned = unioned.repartition(
+            self._write_partitions(len(probe.touched)), F.col(_BUCKET))
 
         # LWW: newest (ts, seq) wins; tie → stored row wins (idempotence)
         w = Window.partitionBy(_BUCKET, self.key_col).orderBy(
@@ -1088,7 +1144,9 @@ class LakeTable:
             F.col(self.key_col).cast(typed[self.key_col]),
             F.col(self.ts_col).cast(typed[self.ts_col]),
             *[F.col(c).cast(typed[c]).alias(c) for c in data_cols],
-            *([(F.col(op_col) == F.lit("delete")).alias(_DELETED)]
+            # null-safe: an event with a null op is an upsert, never a
+            # NULL tombstone flag that read()'s ~_deleted would drop
+            *([F.col(op_col).eqNullSafe("delete").alias(_DELETED)]
               if op_col is not None else []),
             F.col(seq_col).cast("long").alias(_SEQ),
             *keep,
@@ -1148,7 +1206,7 @@ class LakeTable:
         stream_id: str | None,
         epoch_id: int | None,
         counter_watermark: tuple[str, int] | None = None,
-        delta: bool = False,
+        append: Collection[int] = (),
     ) -> MergeResult:
         """THE commit tail of every write (merges, compaction, seeds and
         repairs): bucketed write (no extra shuffle — ``merged`` is
@@ -1158,15 +1216,16 @@ class LakeTable:
         watermark recorded in the SAME atomic commit — the watermark can
         never run ahead of or behind the data it fences).
 
-        ``touched`` is the replace scope: each listed bucket's file list
+        ``touched`` is the write scope: each listed bucket's file list
         becomes this commit's files for it (the bucket leaves the
-        manifest when it got no rows).
-        ``delta=True`` (merge-on-read commit): the new files are
-        APPENDED to each touched bucket's entry list, flagged
-        ``{"delta": true, "dv": <this commit's version>}``, instead of
-        replacing it; the lineage/checksum rows then cover the DELTA
-        rows this commit wrote (not the bucket's resolved state — the
-        recomputing :meth:`checksums` is the state-level check)."""
+        manifest when it got no rows), except for the buckets in
+        ``append`` (a merge-on-read delta): their new files are APPENDED
+        to the bucket's entry list, flagged ``{"delta": true, "dv":
+        <this commit's version>}``, and their lineage/checksum rows
+        cover the DELTA rows this commit wrote (not the bucket's
+        resolved state — the recomputing :meth:`checksums` is the
+        state-level check). One commit can do both: an MoR merge folds
+        some buckets and appends deltas to the others."""
         rel, absdir = self._new_data_dir()
         # already clustered by _bucket: the partitionBy(_PB) write
         # splits per-bucket dirs with no extra shuffle, and each
@@ -1235,7 +1294,7 @@ class LakeTable:
                 "max_seq": off.get("max_seq"),
                 "events": off.get("events"),
                 "epoch_key": epoch_key, "version": self.version + 1,
-                **({"delta": True} if delta else {}),
+                **({"delta": True} if d[_BUCKET] in append else {}),
             })
         counters = {
             "events": int(sum(l.get("events") or 0 for l in lineage_rows)),
@@ -1248,12 +1307,13 @@ class LakeTable:
             stats = ts_stats.get(b)
             new_entries = [
                 {"path": p, "schema_version": self.schema_version,
-                 **({"delta": True, "dv": m["version"]} if delta else {}),
+                 **({"delta": True, "dv": m["version"]}
+                    if b in append else {}),
                  **({"ts_min": stats[0], "ts_max": stats[1]}
                     if stats is not None else {})}
                 for p in files.get(b, [])
             ]
-            if delta:
+            if b in append:
                 m["files"].setdefault(str(b), []).extend(new_entries)
             elif new_entries:
                 m["files"][str(b)] = new_entries
@@ -1634,9 +1694,11 @@ class LakeTable:
         but a long-lived table accumulates buckets whose file list grew
         via partial rewrites plus old-schema stragglers — and, on
         merge-on-read tables, per-epoch DELTA files. Compaction FOLDS
-        deltas: the read below LWW-resolves base ∪ deltas, so the
-        rewritten bucket is one plain base file again (delta-carrying
-        buckets always qualify for selection regardless of file count).
+        deltas: the stored rows run unresolved through the bucketed
+        write's own LWW window (:func:`_lww_winners`, the one an MoR
+        merge folds with), so the rewritten bucket is one plain base
+        file again after a single Exchange (delta-carrying buckets
+        always qualify for selection regardless of file count).
         This is the MoR maintenance loop: merges stay O(batch), reads
         pay a bounded resolution window, compact amortizes it away.
         Compaction
@@ -1662,10 +1724,13 @@ class LakeTable:
         buckets = sorted(set(int(b) for b in buckets))
         if not buckets:
             return None
-        rows = self.read(buckets=buckets, include_deleted=True,
-                         include_internal=True)
-        clustered = rows.repartition(self._write_partitions(len(buckets)),
-                                     F.col(_BUCKET))
+        rows = self._read_snapshot(self.manifest, buckets=buckets,
+                                   resolve=False)
+        n_part = self._write_partitions(len(buckets))
+        if set(buckets) & self.delta_file_counts().keys():
+            clustered = _lww_winners(rows, self.key_col, self.ts_col, n_part)
+        else:  # nothing to resolve: a plain rewrite skips the sort
+            clustered = rows.repartition(n_part, F.col(_BUCKET)).drop(_DV)
         return self._write_and_commit(
             clustered, offsets={}, touched=buckets,
             epoch_key=None, stream_id=None, epoch_id=None)

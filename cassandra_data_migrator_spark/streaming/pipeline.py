@@ -86,8 +86,13 @@ def finalize_winners(df: DataFrame,
     the only point where there is text to redact at all."""
     cols = set(df.columns)
     if "html" in cols and "text" in cols:
-        df = df.withColumn(
-            "text", F.coalesce(F.col("text"), extract_text(F.col("html"))))
+        # the UDF's input is null wherever text is already there: a
+        # pandas UDF under coalesce still runs on every row, and a fold
+        # or a CoW rewrite would otherwise ship every stored row's html
+        # to Python
+        text = F.col("text")
+        df = df.withColumn("text", F.coalesce(
+            text, extract_text(F.when(text.isNull(), F.col("html")))))
     if "lang" in cols:
         df = df.withColumn("lang", normalize_lang(F.col("lang")))
     return _redact(df, redact_cols)
@@ -232,7 +237,8 @@ class CdcPipeline:
             # tail, which never changes row state — reloads the manifest
             # and re-merges via the shared retry_on_conflict loop: LWW
             # idempotence makes the re-apply safe, the fence still skips
-            # a twin of this very (stream, epoch), and the dead
+            # a twin of this very (stream, epoch), the fold set is
+            # recomputed from the reloaded delta depths, and the dead
             # attempt's data files are orphans for expire_versions.
             def _reload() -> None:
                 self.conflict_retries += 1
@@ -249,6 +255,7 @@ class CdcPipeline:
                                      redact_cols=self.redact_cols)
                     if self.lazy_extract else None,
                     probe=probe,
+                    fold_min_deltas=self.config.mor_compact_min_deltas,
                 ),
                 _reload, attempts=4)
         finally:
@@ -256,34 +263,7 @@ class CdcPipeline:
                 probe.unpersist()
         if not result.skipped:
             self._record(result, epoch_id, n_skip, n_quar)
-            self._maybe_compact_deltas()
         return result
-
-    def _maybe_compact_deltas(self) -> None:
-        """Inline MoR maintenance (``EngineConfig.mor_compact_min_
-        deltas``): fold buckets whose unfolded-delta depth reached the
-        threshold, right after the epoch that pushed them there. The
-        check is manifest-only; the fold rewrites exactly the hot
-        buckets (row state unchanged — compaction is a no-op on LWW
-        state by contract), under the same conflict-retry loop as the
-        merge so a racing maintainer loses cleanly."""
-        thresh = self.config.mor_compact_min_deltas
-        if not thresh:
-            return
-
-        def _compact_hot() -> MergeResult | None:
-            # recomputed per attempt: after a conflict the reloaded
-            # manifest may show a rival already folded some or all of
-            # them, and then there is nothing left to rewrite
-            hot = [b for b, n in self.table.delta_file_counts().items()
-                   if n >= thresh]
-            return self.table.compact(buckets=hot) if hot else None
-
-        def _reload() -> None:
-            self.conflict_retries += 1
-            self.table._load_latest()
-
-        retry_on_conflict(_compact_hot, _reload, attempts=4)
 
     def _record(self, result: MergeResult, epoch_id: int,
                 n_skip: int, n_quar: int) -> None:

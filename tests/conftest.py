@@ -1,12 +1,14 @@
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, wherever it is
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cassandra_data_migrator_spark.session import get_spark  # noqa: E402
 

@@ -46,6 +46,7 @@ N_BUCKETS = 8
 # the written file list under an explicit schema (no footer-inference
 # job); the code may launch fewer, never more
 BUDGET_MOR_PIPELINE_EPOCH = 8
+BUDGET_MOR_FOLD_EPOCH = 8
 BUDGET_COW_MERGE = 8
 BUDGET_AUTOCORRECT = 13
 BUDGET_FULL_OVERWRITE = 4
@@ -129,6 +130,16 @@ def test_job_budgets(spark, tmpdir_path):
     record("mor_pipeline_epoch", lambda: p.apply_batch(second, epoch_id=1))
     record("compact", t.compact)
 
+    # the same epoch where it brings every bucket to the delta threshold:
+    # the fold rides in the epoch's own write
+    t = seeded(spark, tmpdir_path, "fold", pages, mode="mor")
+    cfg = EngineConfig(n_buckets=N_BUCKETS, merge_mode="mor",
+                       mor_compact_min_deltas=2)
+    p = CdcPipeline(spark, t, cfg, stream_id="tail")
+    p.apply_batch(first, epoch_id=0)
+    record("mor_fold_epoch", lambda: p.apply_batch(second, epoch_id=1))
+    assert t.delta_file_counts() == {}
+
     # one direct CoW merge_batch, then one replicate epoch catching an
     # MoR replica (snapshot-seeded before the merge) up with it
     t = seeded(spark, tmpdir_path, "cow", pages)
@@ -169,6 +180,7 @@ def test_job_budgets(spark, tmpdir_path):
     print("job counts:", jobs)
     print("post-exchange stage widths:", widths)
     assert jobs["mor_pipeline_epoch"] <= BUDGET_MOR_PIPELINE_EPOCH, jobs
+    assert jobs["mor_fold_epoch"] <= BUDGET_MOR_FOLD_EPOCH, jobs
     assert jobs["cow_merge"] <= BUDGET_COW_MERGE, jobs
     assert jobs["autocorrect"] <= BUDGET_AUTOCORRECT, jobs
     assert jobs["full_overwrite"] <= BUDGET_FULL_OVERWRITE, jobs

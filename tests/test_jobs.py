@@ -328,6 +328,34 @@ def test_validate_after_migrate_with_text_bearing_event_schema(
     assert fix["mismatch"] == 0 and fix["corrected_mismatch"] == 0
 
 
+def test_migrate_null_op_event_is_an_upsert(spark, tmpdir_path, capsys):
+    """An event whose op is NULL is an upsert: the merge stores it as a
+    live row (not a NULL tombstone flag that every read drops), and
+    validate's origin truth keeps it too."""
+    from datetime import timedelta
+
+    ddl = ("seq long, op string, url string, warc_ts timestamp, "
+           "html binary, text string, lang string")
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    ev = spark.createDataFrame(
+        [(1, "insert", "https://example.org/u1", t0, b"<p>one</p>", None,
+          "en"),
+         (2, None, "https://example.org/u2", t0 + timedelta(hours=1),
+          b"<p>two</p>", None, "en")], ddl)
+    log = os.path.join(tmpdir_path, "log")
+    write_event_log(ev, log, n_chunks=1)
+    table = os.path.join(tmpdir_path, "t")
+    out = _run(spark, capsys, ["migrate", "--log", log, "--table", table,
+                               "--event-schema", ddl])
+    assert out["events_applied"] == 2
+    assert sorted(r["url"] for r in LakeTable(spark, table).read()
+                  .collect()) == ["https://example.org/u1",
+                                  "https://example.org/u2"]
+    v = _run(spark, capsys, ["validate", "--log", log, "--table", table,
+                             "--event-schema", ddl])
+    assert v["missing"] == 0 and v["mismatch"] == 0 and v["valid"] == 2
+
+
 def test_guardrail_job_cli(spark, tmpdir_path, capsys, job_log):
     table = os.path.join(tmpdir_path, "t")
     _run(spark, capsys, ["migrate", "--log", job_log, "--table", table])

@@ -743,3 +743,15 @@ def test_write_width_follows_static_cores_only(spark, tmpdir_path,
 
     monkeypatch.setattr(runtime_conf, "get", get)
     assert [t._write_partitions(n) for n in (0, 1, 16)] == [1, 1, 16]
+
+
+def test_parse_type_is_cached(spark):
+    """Each registered-type parse is a JVM round trip: a repeated type
+    string returns the identical cached DataType."""
+    from cassandra_data_migrator_spark.lake.table import _parse_type
+
+    a = _parse_type("array<struct<k:string,v:bigint>>")
+    assert _parse_type("array<struct<k:string,v:bigint>>") is a
+    assert a == T.ArrayType(T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("v", T.LongType())]))

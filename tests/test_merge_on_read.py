@@ -474,16 +474,16 @@ def test_inline_auto_compaction_bounds_delta_depth(spark, tmpdir_path):
                 for r in t.read().collect()}
 
     assert snap(mor) == snap(cow) and snap(cow)
-    # the epoch fence survived the interleaved compaction commits
+    # the fold commits are epoch commits: the fence advanced through them
     assert mor.manifest["epoch_fence"]["s"] >= 5
 
 
 def test_inline_compaction_retry_skips_buckets_a_rival_folded(
         spark, tmpdir_path, monkeypatch):
-    """A rival handle folds the hot buckets while the pipeline's inline
-    compaction is in flight: the first attempt loses the manifest race,
-    the retry recomputes the hot list from the reloaded manifest, finds
-    it empty and rewrites nothing."""
+    """A rival handle folds the hot buckets between the epoch's probe
+    and its commit: the folding attempt loses the manifest race, the
+    retry recomputes the fold set from the reloaded manifest, finds it
+    empty and appends plain deltas, so no bucket is rewritten twice."""
     from cassandra_data_migrator_spark.streaming import CdcPipeline
 
     mor = mk_table(spark, tmpdir_path, "mor", n_buckets=4)
@@ -493,28 +493,167 @@ def test_inline_compaction_retry_skips_buckets_a_rival_folded(
     keys = [f"https://k/{i}" for i in range(16)]
     p.apply_batch(mk_events(spark, [
         (i, "insert", k, 100, "a") for i, k in enumerate(keys)]), epoch_id=0)
+    hot = sorted(mor.delta_file_counts())
+    assert hot and set(mor.delta_file_counts().values()) == {1}
 
-    real_compact = LakeTable.compact
-    calls, rival_versions = [], []
+    real_write = LakeTable._write_and_commit
+    rewrites, rival_versions = [], []
 
-    def racing_compact(self, buckets=None, min_files=2):
-        calls.append(sorted(buckets))
-        if len(calls) == 1:
-            rival = LakeTable(spark, self.path)
-            rival_versions.append(real_compact(rival, buckets=buckets).version)
-        return real_compact(self, buckets=buckets, min_files=min_files)
+    def racing_write(self, merged, offsets, touched, *args, **kw):
+        if self is mor:
+            rewrites.append(sorted(set(touched) - set(kw.get("append", ()))))
+            if len(rewrites) == 1:
+                rival_versions.append(
+                    LakeTable(spark, mor.path).compact().version)
+        return real_write(self, merged, offsets, touched, *args, **kw)
 
-    monkeypatch.setattr(LakeTable, "compact", racing_compact)
+    monkeypatch.setattr(LakeTable, "_write_and_commit", racing_write)
     p.apply_batch(mk_events(spark, [
         (100 + i, "update", k, 200, "b") for i, k in enumerate(keys)]),
         epoch_id=1)
 
-    assert len(calls) == 1 and calls[0]       # the retry compacted nothing
+    assert rewrites == [hot, []]      # the retry folded nothing
     assert p.conflict_retries == 1
-    assert mor.version == rival_versions[0]   # nothing committed after it
-    assert mor.delta_file_counts() == {}
+    assert mor.version == rival_versions[0] + 1
+    assert mor.delta_file_counts() == {b: 1 for b in hot}
+    rival_dir = f"data/e{rival_versions[0]:012d}_"
+    for es in mor.manifest["files"].values():
+        base = [e["path"] for e in es if not e.get("delta")]
+        assert len(base) == 1 and base[0].startswith(rival_dir), es
     assert {r["url"]: r["text"] for r in mor.read().collect()} == {
         k: "b" for k in keys}
+
+
+def _buckets_of(spark, table, keys):
+    df = spark.createDataFrame([(k,) for k in keys], "url string")
+    return {r["url"]: r["b"] for r in
+            df.select("url", table.bucket_of("url").alias("b")).collect()}
+
+
+def _change_set(table, v_from):
+    return {(r["url"], r["_change_type"])
+            for r in table.changes_between(v_from).collect()}
+
+
+def test_fold_epoch_is_one_commit(spark, tmpdir_path, monkeypatch):
+    """An MoR merge that brings a bucket to ``fold_min_deltas`` folds it
+    in its own write: one commit, the folded buckets hold one base file
+    and no delta, the other touched buckets keep taking deltas, and the
+    state, the checksums and the changelog across the fold commit equal
+    a CoW replay of the same batches."""
+    from cassandra_data_migrator_spark import plans
+
+    cow = mk_table(spark, tmpdir_path, "cow", mode="cow", n_buckets=4)
+    mor = mk_table(spark, tmpdir_path, "mor", n_buckets=4)
+    keys = [f"https://f/{i}" for i in range(24)]
+    spare = [f"https://n/{i}" for i in range(16)]
+    of = _buckets_of(spark, mor, keys + spare)
+    hot_b = of[keys[0]]
+    hot = [k for k in keys if of[k] == hot_b]
+    cold = [k for k in keys if of[k] != hot_b]
+    new_key = next(k for k in spare if of[k] == hot_b)
+    assert len(hot) >= 3 and cold
+    epochs = [
+        [(i, "insert", k, 100, "a") for i, k in enumerate(keys)],
+        [(100 + i, "update", k, 200, "b") for i, k in enumerate(hot)],
+        # the hot bucket's third delta reaches the threshold: an
+        # update, a delete, a new key and an exact replay of a row
+        # stored in the previous delta (which must lose its tie and
+        # change nothing); one cold key rides along as a plain delta
+        [(300, "update", hot[0], 300, "c"),
+         (301, "delete", hot[1], 300, None),
+         (302, "insert", new_key, 300, "n"),
+         (102, "update", hot[2], 200, "b"),
+         (303, "update", cold[0], 300, "c")],
+    ]
+    merged = []
+    real_write = LakeTable._write_and_commit
+
+    def capture(self, frame, *args, **kw):
+        if self is mor:
+            merged.append(frame)
+        return real_write(self, frame, *args, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_and_commit", capture)
+    for i, rows in enumerate(epochs[:2]):
+        for t in (cow, mor):
+            t.merge_batch(mk_events(spark, rows), stream_id="s",
+                          epoch_id=i, fold_min_deltas=3)
+    assert mor.delta_file_counts()[hot_b] == 2
+
+    v_cow, v_mor = cow.version, mor.version
+    cow.merge_batch(mk_events(spark, epochs[2]), stream_id="s", epoch_id=2)
+    r = mor.merge_batch(mk_events(spark, epochs[2]), stream_id="s",
+                        epoch_id=2, fold_min_deltas=3)
+
+    assert mor.version == v_mor + 1 == r.version     # one commit
+    # the fold shares the delta write's window: no Exchange added
+    assert plans.count_exchanges(merged[-1]) \
+        == plans.count_exchanges(merged[-2])
+    depth = mor.delta_file_counts()
+    assert hot_b not in depth
+    assert [e.get("delta") for e in mor.manifest["files"][str(hot_b)]] \
+        == [None]
+    # the cold buckets keep their epoch-0 delta, and the one this
+    # batch touched takes a second
+    assert depth == {b: 2 if b == of[cold[0]] else 1
+                     for b in {of[k] for k in cold}}
+    folded = [ln for ln in r.lineage if ln["_bucket"] == hot_b]
+    assert len(folded) == 1 and not folded[0].get("delta")
+    assert final_state(mor) == final_state(cow)
+    assert checksum_map(mor) == checksum_map(cow)
+    want = {(hot[0], "update_postimage"), (hot[1], "delete"),
+            (new_key, "insert"), (cold[0], "update_postimage")}
+    assert _change_set(mor, v_mor) == _change_set(cow, v_cow) == want
+
+
+def test_fold_threshold_one_on_a_fresh_table(spark, tmpdir_path):
+    """Threshold 1 folds every touched bucket of every merge, starting
+    on a table with no stored files (the fold read of an empty bucket
+    set still carries ``_dv``), then over a bucket that holds files
+    next to one that does not."""
+    cow = mk_table(spark, tmpdir_path, "cow", mode="cow", n_buckets=4)
+    mor = mk_table(spark, tmpdir_path, "mor", n_buckets=4)
+    keys = [f"https://o/{i}" for i in range(12)]
+    of = _buckets_of(spark, mor, keys)
+    first = [k for k in keys if of[k] != of[keys[0]]]
+    epochs = [
+        [(i, "insert", k, 100, "a") for i, k in enumerate(first)],
+        [(100, "insert", keys[0], 200, "b"),
+         (101, "update", first[0], 200, "b")],
+    ]
+    for i, rows in enumerate(epochs):
+        for t in (cow, mor):
+            t.merge_batch(mk_events(spark, rows), stream_id="s",
+                          epoch_id=i, fold_min_deltas=1)
+        assert mor.delta_file_counts() == {}
+        assert all(len(es) == 1 for es in mor.manifest["files"].values())
+        assert final_state(mor) == final_state(cow)
+        assert checksum_map(mor) == checksum_map(cow)
+
+
+def test_fold_of_a_delete_only_batch(spark, tmpdir_path):
+    """A batch of only deletes folds its buckets to base files that
+    hold tombstones: nothing reads back live, and a late update older
+    than a delete still loses afterwards."""
+    cow = mk_table(spark, tmpdir_path, "cow", mode="cow", n_buckets=2)
+    mor = mk_table(spark, tmpdir_path, "mor", n_buckets=2)
+    keys = [f"https://d/{i}" for i in range(6)]
+    epochs = [
+        [(i, "insert", k, 100, "a") for i, k in enumerate(keys)],
+        [(10 + i, "delete", k, 200, None) for i, k in enumerate(keys)],
+        [(20, "update", keys[0], 150, "late")],
+    ]
+    for i, rows in enumerate(epochs):
+        for t in (cow, mor):
+            t.merge_batch(mk_events(spark, rows), stream_id="s",
+                          epoch_id=i, fold_min_deltas=2)
+        if i == 1:
+            assert mor.delta_file_counts() == {}
+            assert mor.read().count() == 0
+            assert mor.read(include_deleted=True).count() == len(keys)
+    assert final_state(mor) == final_state(cow) == {}
+    assert checksum_map(mor) == checksum_map(cow)
 
 
 def test_migrate_cli_auto_compact_deltas(spark, tmpdir_path, capsys):
@@ -540,6 +679,41 @@ def test_migrate_cli_auto_compact_deltas(spark, tmpdir_path, capsys):
     d = run(["describe", "--table", table])
     assert d["merge_mode"] == "mor"
     assert d["delta_files_total"] == 0  # every epoch folded inline
+
+
+def test_tracked_migrate_applies_auto_compact_deltas(spark, tmpdir_path,
+                                                    capsys):
+    """``migrate --tracked --auto-compact-deltas N`` on an MoR table
+    folds in the group merges themselves: three tracked runs of one log
+    touch every bucket three times, and the delta depth stays below N."""
+    import json as _json
+
+    from cassandra_data_migrator_spark.jobs import main
+    from cassandra_data_migrator_spark.sources import (
+        gen_change_events,
+        write_event_log,
+    )
+
+    def run(argv):
+        assert main(argv, spark=spark) == 0
+        return _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    log = os.path.join(tmpdir_path, "log")
+    write_event_log(gen_change_events(spark, n_urls=40, n_events=200,
+                                      seed=5), log, n_chunks=2)
+    table = os.path.join(tmpdir_path, "t")
+    for i in range(3):
+        out = run(["migrate", "--log", log, "--table", table,
+                   "--merge-mode", "mor", "--auto-compact-deltas", "2",
+                   "--n-groups", "2", "--conf", "spark.cdm.trackRun=true",
+                   "--conf", f"spark.cdm.trackRun.runId=r{i}"])
+        assert out["mode"] == "tracked"
+    t = LakeTable(spark, table)
+    depth = t.delta_file_counts()
+    assert depth and max(depth.values()) < 2, depth
+    ref = os.path.join(tmpdir_path, "ref")
+    run(["migrate", "--log", log, "--table", ref])
+    assert final_state(t) == final_state(LakeTable(spark, ref))
 
 
 def test_mor_replica_hop_verifies(spark, tmpdir_path):

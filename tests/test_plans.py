@@ -288,3 +288,67 @@ def test_schema_contract_casts_erased_when_types_match(spark,
     # end-to-end: merging the matching-typed frame still works
     t.merge_batch(ev)
     assert t.read().count() == 1
+
+
+def test_compact_of_a_delta_bucket_is_one_exchange(spark, tmpdir_path,
+                                                   monkeypatch):
+    """compact() ranks the bucket's unresolved base ∪ delta rows in the
+    bucketed write's own LWW window: the `_bucket` clustering is the
+    plan's only Exchange (resolving at read time first would add a
+    second one under the window)."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from cassandra_data_migrator_spark.config import EngineConfig
+    from cassandra_data_migrator_spark.lake import LakeTable
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("text", T.StringType(), True),
+    ])
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, "compactplan"),
+                         schema, EngineConfig(n_buckets=4,
+                                              merge_mode="mor"))
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    for i in range(2):
+        t.merge_batch(spark.createDataFrame(
+            [(i, "upsert", "a", t0 + dt.timedelta(hours=i), f"v{i}")],
+            "seq long, op string, url string, warc_ts timestamp, "
+            "text string"))
+    assert t.delta_file_counts()
+    written = []
+    real_write = LakeTable._write_and_commit
+
+    def capture(self, frame, *args, **kw):
+        written.append(frame)
+        return real_write(self, frame, *args, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_and_commit", capture)
+    t.compact()
+    assert plans.count_exchanges(written[0]) == 1
+    assert t.delta_file_counts() == {}
+    assert [r["text"] for r in t.read().collect()] == ["v1"]
+
+
+def test_finalize_extracts_text_only_where_it_is_null(spark):
+    """finalize_winners hands extract_text the html only where text is
+    null: the UDF's argument is the CASE WHEN, so rows that already
+    carry text ship no html to Python (a pandas UDF under coalesce
+    still runs on every row)."""
+    import re
+
+    from cassandra_data_migrator_spark.streaming.pipeline import (
+        finalize_winners,
+    )
+
+    df = spark.createDataFrame(
+        [(b"<p>x</p>", None, "en"), (b"<p>y</p>", "y", "en")],
+        "html binary, text string, lang string")
+    out = finalize_winners(df)
+    plan = plans.explain_str(out, "simple")
+    assert re.search(
+        r"extract_text\(CASE WHEN isnull\(text#\d+\) THEN html#\d+ END\)",
+        plan), plan
+    assert sorted(r["text"] for r in out.collect()) == ["x", "y"]
