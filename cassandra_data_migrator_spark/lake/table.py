@@ -103,19 +103,14 @@ def lww_version(ts, seq):
                     F.coalesce(seq.cast("long"), F.lit(_NO_SEQ)).alias("_s"))
 
 
-def _lww_winners(rows: DataFrame, key: str, ts: str,
-                 n_part: int | None = None) -> DataFrame:
+def _lww_winners(rows: DataFrame, key: str, ts: str) -> DataFrame:
     """THE LWW window over rows that carry ``_dv``, the commit version
     that stored them (base files 0, a merge's own batch its new
     version): one row per ``(_bucket, key)``, newest ``(ts, seq)``
     first, the older commit winning an exact tie, ``_dv`` dropped.
-    Serves the MoR read resolution, the delta write, its fold and
-    :meth:`LakeTable.compact`. With ``n_part`` the rows are first
-    clustered by ``_bucket`` for a bucketed write; the window's
-    ``(_bucket, key)`` distribution is then already satisfied, so the
-    plan holds that one Exchange."""
-    if n_part is not None:
-        rows = rows.repartition(n_part, F.col(_BUCKET))
+    Serves the MoR read resolution, every merge and
+    :meth:`LakeTable.compact`. Rows clustered by ``_bucket`` already
+    satisfy its distribution: a bucketed write adds no Exchange."""
     w = Window.partitionBy(_BUCKET, key).orderBy(
         F.col(ts).desc(), F.col(_SEQ).desc_nulls_last(), F.col(_DV).asc())
     return (rows.withColumn("_rn", F.row_number().over(w))
@@ -561,18 +556,17 @@ class LakeTable:
         Merge-on-read resolution: when the selected buckets carry DELTA
         file entries (merge-on-read commits), the base and
         delta rows of each key are resolved to ONE stored winner here
-        by :func:`_lww_winners` — the same LWW order the CoW merge uses
+        by :func:`_lww_winners` — the window every merge ranks with
         (ts desc, seq desc-nulls-last), with the delta's commit version
         (``dv``, base files = 0) as the tie-break so an exact duplicate
-        replayed in a later delta loses to the earlier stored row,
-        exactly like the CoW window's stored-row-wins-on-tie. Pure-CoW
-        snapshots skip the resolution entirely (no window node in the
-        plan).
+        replayed in a later delta loses to the earlier stored row.
+        Pure-CoW snapshots skip the resolution entirely (no window node
+        in the plan).
 
         ``resolve=False`` returns every stored row of the selected
         buckets UNRESOLVED, tombstones and internal columns included,
         with its ``_dv``: the input of a window that also ranks rows
-        not yet stored (the MoR fold, ``compact``)."""
+        not yet stored (a merge's fold buckets, ``compact``)."""
         if schemas is None:
             schemas = manifest["schemas"]
         if current is None:
@@ -883,22 +877,23 @@ class LakeTable:
     ) -> MergeResult:
         """LWW MERGE of a change batch into the table.
 
-        The table's ``merge_mode`` picks the write strategy:
+        Every merge is one plan: the batch rows and the stored rows of
+        its FOLD buckets (only their manifest files are read) through
+        one ``_bucket`` Exchange, which also serves the bucketed write,
+        and one LWW window. A fold bucket is rewritten whole; any other
+        touched bucket gets the batch winners appended as a delta. The
+        table's ``merge_mode`` picks the fold set:
 
-        - ``"cow"`` — copy-on-write: read + rewrite every touched
-          bucket whole (the shape documented below).
-        - ``"mor"`` — merge-on-read: append ONLY the batch's per-key
-          LWW winners as delta files; the read path resolves base ∪
-          deltas with the identical LWW order (see ``_read_snapshot``)
-          and ``compact()`` or a fold (below) folds deltas into base.
-          Same final state, write cost O(batch) instead of O(touched
-          buckets) — the 100-TB shape for high-frequency small epochs. ``finalize`` then runs
-          on batch winners only (cheaper; stored rows keep their already
-          -finalized values). Two semantics need stored-row context at
-          write time and silently use the CoW path even in MoR mode:
-          ``force_overwrite`` (autocorrect must beat equal-version
-          stored rows, which the delta tie-break would preserve) and
-          ``unset_nulls`` (null columns inherit stored values).
+        - ``"cow"`` — copy-on-write: every touched bucket.
+        - ``"mor"`` — merge-on-read: the buckets at ``fold_min_deltas``
+          (below). The read path resolves deltas against base with the
+          same LWW order (see ``_read_snapshot``). Same final state,
+          write cost O(batch) instead of O(touched buckets), and
+          ``finalize`` runs on batch winners only. ``force_overwrite``
+          (autocorrect must beat equal-version stored rows, which the
+          delta tie-break would keep) and ``unset_nulls`` (null columns
+          inherit stored values) need the stored rows, so under them
+          every touched bucket is folded, as in CoW.
 
         ``finalize``: optional ``DataFrame -> DataFrame`` applied to the
         merged WINNERS just before the write. This is where expensive
@@ -916,12 +911,10 @@ class LakeTable:
 
         ``fold_min_deltas`` (MoR delta merges; 0 = never): fold on
         write. Every bucket whose unfolded-delta depth, plus one if this
-        batch touches it, reaches the threshold is rewritten as one
-        base file IN THIS COMMIT — its stored base ∪ deltas ranked with
-        the batch rows in the delta write's own LWW window — instead of
-        taking a delta that a second compaction pass would read back
-        at once. The fold set comes from the manifest this merge
-        commits against, so a conflict retry recomputes it.
+        batch touches it, reaches the threshold is folded IN THIS
+        COMMIT instead of taking a delta that a second compaction pass
+        would read back at once. The fold set comes from the manifest
+        this merge commits against, so a conflict retry recomputes it.
 
         Semantics (the engine's central operator — reference analogs
         S4/S5 upserts + J3 ``TargetUpsertStatement``, Cassandra LWW):
@@ -938,10 +931,6 @@ class LakeTable:
           resurrect across a delete.
         - exactly-once: if ``(stream_id, epoch_id)`` is at or below the
           committed fence, the whole merge is a no-op.
-
-        Physical plan: one hash-partition shuffle on the key for the
-        window; reads + rewrites only touched buckets; bucket pruning
-        via the manifest file list.
         """
         epoch_key = f"{stream_id}/{epoch_id}" if stream_id is not None else None
         if stream_id is not None:
@@ -957,35 +946,32 @@ class LakeTable:
             if not probe.touched:
                 return self._commit_empty_epoch(epoch_key, stream_id,
                                                 epoch_id)
-            delta = (self.merge_mode == "mor" and not force_overwrite
-                     and not unset_nulls)
-            hit = set(probe.touched)
-            fold: set[int] = set()
-            if delta and fold_min_deltas:
+            hit = fold = set(probe.touched)
+            if (self.merge_mode == "mor" and not force_overwrite
+                    and not unset_nulls):
                 depth = self.delta_file_counts()
-                fold = {b for b in hit | set(depth)
-                        if depth.get(b, 0) + (b in hit) >= fold_min_deltas}
+                fold = {b for b in hit | set(depth) if fold_min_deltas
+                        and depth.get(b, 0) + (b in hit) >= fold_min_deltas}
             merged = self._lww_merged(source, probe, op_col, seq_col,
-                                      unset_nulls, force_overwrite, delta,
+                                      unset_nulls, force_overwrite,
                                       sorted(fold))
             if finalize is not None:
                 merged = finalize(merged)
             return self._write_and_commit(
                 merged, probe.offsets, sorted(hit | fold), epoch_key,
-                stream_id, epoch_id, append=hit - fold if delta else ())
+                stream_id, epoch_id, append=hit - fold)
         finally:
             if own_probe:
                 probe.unpersist()
 
     def _lww_merged(
         self, source: DataFrame, probe: Probe, op_col: str, seq_col: str,
-        unset_nulls: bool, force_overwrite: bool, delta: bool,
-        fold: Sequence[int] = (),
+        unset_nulls: bool, force_overwrite: bool, fold: Sequence[int],
     ) -> DataFrame:
-        """The merge plan: the batch's LWW winners (``delta``: merge-on-
-        read, batch rows only, plus the resolved state of the ``fold``
-        buckets) or the touched buckets' merged state, clustered by
-        ``_bucket`` for the bucketed write."""
+        """The merge plan: the batch's LWW winners plus the merged state
+        of the ``fold`` buckets, clustered by ``_bucket`` for the
+        bucketed write — one Exchange and one LWW window for every
+        merge (a CoW merge folds every touched bucket)."""
         schema_fields = self.current_fields()
         data_cols = self._data_cols()
         src = source
@@ -1033,76 +1019,51 @@ class LakeTable:
                 win = F.broadcast(win)
             src = src.join(win, cond, "inner").drop("_k", "_w")
 
-        if delta:
-            # merge-on-read: the batch rows are the newest delta. One
-            # shuffle clusters them by bucket, together with the fold
-            # buckets' stored rows (unresolved, each with its commit
-            # version); the LWW window picks exactly one winner per key
-            # (prereduction can leave exact (key, ts, seq) duplicates —
-            # replay copies — which must collapse so a delta commit
-            # holds at most one row per key, the invariant read-time
-            # resolution and changes_between rely on), and in a fold
-            # bucket it also resolves the stored rows, so the bucket
-            # comes out whole. The bucketed write then splits per-
-            # bucket files with no further shuffle.
-            rows = src.withColumn(_DV, F.lit(self.version + 1))
-            if fold:
-                rows = rows.unionByName(self._read_snapshot(
-                    self.manifest, buckets=list(fold), resolve=False))
-            return _lww_winners(
-                rows, self.key_col, self.ts_col,
-                self._write_partitions(len({*probe.touched, *fold})))
-
-        target = self.read(buckets=probe.touched, include_deleted=True,
-                           include_internal=True)
-        if force_overwrite:
-            # autocorrect mode: the source IS the truth for its keys — the
-            # stored row is dropped regardless of LWW order (reference
-            # re-upsert, DiffJobSession.java:255-258); the key set comes
-            # from the probe's cache, not another source scan
-            target = target.join(probe.keys(self.key_col), self.key_col,
-                                 "left_anti")
-        target = target.withColumn("_is_src", F.lit(0))
-        src = src.withColumn("_is_src", F.lit(1))
-        unioned = target.select(src.columns).unionByName(src)
-
-        # ONE shuffle for the whole merge: cluster by _bucket up front.
-        # The LWW window partitions by (_bucket, key) — since bucket is a
-        # function of the key, grouping is identical, and Catalyst's
-        # ClusteredDistribution is already satisfied by the bucket hash
-        # partitioning, so the window adds only a partition-local sort.
-        # The bucketed write then needs no second repartition.
-        unioned = unioned.repartition(
-            self._write_partitions(len(probe.touched)), F.col(_BUCKET))
-
-        # LWW: newest (ts, seq) wins; tie → stored row wins (idempotence)
-        w = Window.partitionBy(_BUCKET, self.key_col).orderBy(
-            F.col(self.ts_col).desc(),
-            F.col(_SEQ).desc_nulls_last(),
-            F.col("_is_src").asc(),
-        )
-        ranked = unioned.withColumn("_rn", F.row_number().over(w))
+        # The batch rows are the newest commit; one shuffle clusters them
+        # by bucket with the fold buckets' stored rows, each carrying the
+        # commit version that stored it. The window collapses exact
+        # (key, ts, seq) replay copies the prereduction keeps (a delta
+        # holds at most one row per key, as read resolution and
+        # changes_between rely on) and brings each fold bucket out whole.
+        rows = src.withColumn(_DV, F.lit(self.version + 1))
+        if fold:
+            # UNSET carries values from each key's RESOLVED stored row:
+            # a superseded value must not fill a newer stored null
+            stored = self._read_snapshot(
+                self.manifest, buckets=list(fold), include_deleted=True,
+                include_internal=True, resolve=unset_nulls)
+            if unset_nulls:
+                stored = stored.withColumn(_DV, F.lit(0))
+            if force_overwrite:
+                # autocorrect: the source IS the truth for its keys, so
+                # their stored rows go regardless of LWW order (reference
+                # re-upsert, DiffJobSession.java:255-258); the key set
+                # comes from the probe's cache, not another source scan
+                stored = stored.join(probe.keys(self.key_col),
+                                     self.key_col, "left_anti")
+            rows = rows.unionByName(stored)
+        rows = rows.repartition(
+            self._write_partitions(len({*probe.touched, *fold})),
+            F.col(_BUCKET))
 
         if unset_nulls:
-            # running last-non-null per delete-generation: an update's null
-            # column means "leave previous value", but values never
-            # resurrect across a tombstone.
-            asc = Window.partitionBy(_BUCKET, self.key_col).orderBy(
-                F.col(self.ts_col).asc(), F.col(_SEQ).asc_nulls_first(),
-                F.col("_is_src").desc(),
-            )
-            gen = F.sum(F.when(F.col(_DELETED), 1).otherwise(0)).over(
-                asc.rowsBetween(Window.unboundedPreceding, 0))
-            ranked = unioned.withColumn("_gen", gen)
-            genw = Window.partitionBy(_BUCKET, self.key_col, "_gen").orderBy(
-                F.col(self.ts_col).asc(), F.col(_SEQ).asc_nulls_first(),
-                F.col("_is_src").desc(),
-            ).rowsBetween(Window.unboundedPreceding, 0)
+            # running last-non-null per delete-generation: an update's
+            # null column means "leave previous value", but values never
+            # resurrect across a tombstone. Ordered as the LWW window
+            # reversed, so the stored row is last on an exact tie.
+            order = (F.col(self.ts_col).asc(), F.col(_SEQ).asc_nulls_first(),
+                     F.col(_DV).desc())
+            upto = (Window.unboundedPreceding, 0)
+            rows = rows.withColumn("_gen", F.sum(
+                F.when(F.col(_DELETED), 1).otherwise(0)).over(
+                Window.partitionBy(_BUCKET, self.key_col).orderBy(*order)
+                .rowsBetween(*upto)))
+            genw = Window.partitionBy(_BUCKET, self.key_col, "_gen") \
+                .orderBy(*order).rowsBetween(*upto)
             for c in data_cols:
-                ranked = ranked.withColumn(c, F.last(c, ignorenulls=True).over(genw))
-            ranked = ranked.withColumn("_rn", F.row_number().over(w))
-
-        return ranked.filter(F.col("_rn") == 1).drop("_rn", "_is_src", "_gen")
+                rows = rows.withColumn(c, F.last(c, ignorenulls=True).over(genw))
+            rows = rows.drop("_gen")
+        return _lww_winners(rows, self.key_col, self.ts_col)
 
     def _commit_empty_epoch(
         self, epoch_key: str | None, stream_id: str | None,
@@ -1695,8 +1656,8 @@ class LakeTable:
         via partial rewrites plus old-schema stragglers — and, on
         merge-on-read tables, per-epoch DELTA files. Compaction FOLDS
         deltas: the stored rows run unresolved through the bucketed
-        write's own LWW window (:func:`_lww_winners`, the one an MoR
-        merge folds with), so the rewritten bucket is one plain base
+        write's own LWW window (:func:`_lww_winners`, the one every
+        merge ranks with), so the rewritten bucket is one plain base
         file again after a single Exchange (delta-carrying buckets
         always qualify for selection regardless of file count).
         This is the MoR maintenance loop: merges stay O(batch), reads
@@ -1724,15 +1685,14 @@ class LakeTable:
         buckets = sorted(set(int(b) for b in buckets))
         if not buckets:
             return None
-        rows = self._read_snapshot(self.manifest, buckets=buckets,
-                                   resolve=False)
-        n_part = self._write_partitions(len(buckets))
+        rows = self._read_snapshot(
+            self.manifest, buckets=buckets, resolve=False).repartition(
+            self._write_partitions(len(buckets)), F.col(_BUCKET))
+        # nothing to resolve without deltas: a plain rewrite skips the sort
         if set(buckets) & self.delta_file_counts().keys():
-            clustered = _lww_winners(rows, self.key_col, self.ts_col, n_part)
-        else:  # nothing to resolve: a plain rewrite skips the sort
-            clustered = rows.repartition(n_part, F.col(_BUCKET)).drop(_DV)
+            rows = _lww_winners(rows, self.key_col, self.ts_col)
         return self._write_and_commit(
-            clustered, offsets={}, touched=buckets,
+            rows.drop(_DV), offsets={}, touched=buckets,
             epoch_key=None, stream_id=None, epoch_id=None)
 
     def clone_to(self, path: str, version: int | None = None,

@@ -33,12 +33,27 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
         return buf.getvalue()
 
 
+def own_plan(df: DataFrame) -> str:
+    """The frame's physical plan (``simple`` mode) without the plans of
+    the caches it reads: an ``InMemoryRelation`` prints the plan that
+    filled its cache, shuffles included, at every reference."""
+    lines, cache_depth = [], None
+    for line in explain_str(df, "simple").splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if node.startswith("InMemoryRelation") else None
+        lines.append(line)
+    return "\n".join(lines)
+
+
 def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle Exchange nodes (excludes reused exchanges and
-    AQE shuffle-read wrappers)."""
-    plan = explain_str(df, "simple")
+    """Number of shuffle Exchange nodes the frame itself runs (excludes
+    reused exchanges, AQE shuffle-read wrappers and the shuffles inside
+    a cached relation's plan)."""
     return len(re.findall(r"\bExchange (?:hash|range|single|rebalance)",
-                          plan, flags=re.IGNORECASE))
+                          own_plan(df), flags=re.IGNORECASE))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

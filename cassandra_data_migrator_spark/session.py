@@ -10,7 +10,10 @@ to cores rather than the 200 default.
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
+import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -26,14 +29,34 @@ def package_zip(out_dir: str = "/tmp") -> str:
     (north_rule: launched with ``spark-submit --py-files``); locally the
     same zip makes pandas UDFs importable in Python workers regardless
     of the driver's cwd.
+
+    Named by a hash of its bytes (entries carry a fixed timestamp) and
+    written through a temp file plus ``os.replace``: a zip a live
+    session shipped is never rewritten, which Spark's next fetch of it
+    would refuse.
     """
-    out = os.path.join(out_dir, "cassandra_data_migrator_spark.zip")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(_PKG_DIR):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    z.write(full, os.path.relpath(full, _REPO_ROOT))
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for root, dirs, files in os.walk(_PKG_DIR):
+            dirs.sort()
+            for fn in sorted(f for f in files if f.endswith(".py")):
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    z.writestr(zipfile.ZipInfo(
+                        os.path.relpath(full, _REPO_ROOT)), f.read(),
+                        zipfile.ZIP_DEFLATED)
+    data = buf.getvalue()
+    out = os.path.join(out_dir, "cassandra_data_migrator_spark-"
+                       f"{hashlib.sha256(data).hexdigest()[:16]}.zip")
+    if not os.path.exists(out):
+        fd, tmp = tempfile.mkstemp(suffix=".tmp", dir=out_dir)
+        try:
+            with os.fdopen(fd, "wb") as f:
+                f.write(data)
+            os.replace(tmp, out)
+        except OSError:
+            os.unlink(tmp)
+            raise
     return out
 
 

@@ -100,15 +100,20 @@ def apply_epochs(table, spark, stream="s", **kw):
                           epoch_id=i, **kw)
 
 
-def test_mor_final_state_matches_cow(spark, tmpdir_path):
+@pytest.mark.parametrize("fold_min_deltas", [0, 1, 2, 3])
+def test_mor_final_state_matches_cow(spark, tmpdir_path, fold_min_deltas):
+    """Whatever the fold threshold (0: never fold; 1: fold every touched
+    bucket, the CoW fold set; 2, 3: fold as buckets reach it), the MoR
+    table reaches the CoW table's state and per-bucket checksums."""
     cow = mk_table(spark, tmpdir_path, "cow", mode="cow")
     mor = mk_table(spark, tmpdir_path, "mor", mode="mor")
     apply_epochs(cow, spark)
-    apply_epochs(mor, spark)
+    apply_epochs(mor, spark, fold_min_deltas=fold_min_deltas)
     assert final_state(mor) == final_state(cow)
     assert checksum_map(mor) == checksum_map(cow)
-    # and the MoR table really did take the delta path
-    assert mor.delta_file_counts()
+    if fold_min_deltas == 0:
+        # and the MoR table really did take the delta path
+        assert mor.delta_file_counts()
 
 
 def test_mor_lww_edges_exact_values(spark, tmpdir_path):
@@ -253,6 +258,25 @@ def test_mor_unset_nulls_falls_back_to_cow(spark, tmpdir_path):
     t.merge_batch(ev, unset_nulls=True)
     st = final_state(t)
     assert st["u"] == (nts(200), "v1")
+
+
+def test_unset_nulls_carries_from_the_resolved_stored_row(spark,
+                                                          tmpdir_path):
+    """An UNSET merge over an MoR bucket carries values forward from each
+    key's RESOLVED stored row: a plain delta that set ``text`` to NULL
+    superseded the base's value, so a newer UNSET update with a null
+    ``text`` keeps that NULL, not the superseded "base" under it. (The
+    one case where the resolved and the unresolved stored rows differ.)
+    """
+    t = mk_table(spark, tmpdir_path, "t")
+    t.merge_batch(mk_events(spark, [(1, "insert", "u", 100, "base")]))
+    t.compact()
+    t.merge_batch(mk_events(spark, [(2, "update", "u", 200, None)]))
+    assert t.delta_file_counts()
+    t.merge_batch(mk_events(spark, [(3, "update", "u", 300, None)]),
+                  unset_nulls=True)
+    assert final_state(t)["u"] == (nts(300), None)
+    assert t.delta_file_counts() == {}
 
 
 def test_mixed_cow_merge_folds_touched_buckets(spark, tmpdir_path):

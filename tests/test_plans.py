@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -352,3 +353,82 @@ def test_finalize_extracts_text_only_where_it_is_null(spark):
         r"extract_text\(CASE WHEN isnull\(text#\d+\) THEN html#\d+ END\)",
         plan), plan
     assert sorted(r["text"] for r in out.collect()) == ["x", "y"]
+
+
+def test_count_exchanges_skips_a_cached_relations_plan(spark):
+    """A cache's plan prints in full under every InMemoryRelation that
+    references it; its shuffle ran once, when the cache was filled, and
+    is not one the frame runs."""
+    cached = spark.range(100).repartition(4, "id").persist()
+    try:
+        cached.count()
+        twice = cached.unionByName(cached)
+        assert plans.count_exchanges(twice) == 0
+        assert plans.count_exchanges(twice.repartition(2, "id")) == 1
+    finally:
+        cached.unpersist()
+
+
+@pytest.mark.parametrize("shape", [
+    "cow", "cow_force_overwrite", "cow_unset_nulls",
+    "mor_delta", "mor_fold", "mor_force_overwrite"])
+def test_every_merge_is_one_exchange_and_one_lww_window(
+        spark, tmpdir_path, monkeypatch, shape):
+    """Every merge shape is one plan: the batch rows and the fold
+    buckets' stored rows through one ``_bucket`` Exchange and one LWW
+    ``row_number`` window, whichever buckets it folds (a CoW merge folds
+    every touched bucket, a plain MoR merge only those at its delta
+    threshold). Captured at the commit tail, as the write runs it."""
+    import datetime as dt
+    import re
+
+    from pyspark.sql import types as T
+
+    from cassandra_data_migrator_spark.config import EngineConfig
+    from cassandra_data_migrator_spark.lake import LakeTable
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("text", T.StringType(), True),
+    ])
+    mode = shape.split("_")[0]
+    t = LakeTable.create(spark, os.path.join(tmpdir_path, shape), schema,
+                         EngineConfig(n_buckets=4, merge_mode=mode))
+    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+
+    def batch(i):
+        return spark.createDataFrame(
+            [(10 * i + k, "upsert", f"u{k}", t0 + dt.timedelta(hours=i),
+              f"v{i}") for k in range(6)],
+            "seq long, op string, url string, warc_ts timestamp, "
+            "text string")
+
+    # stored rows in every touched bucket; on MoR two deltas each
+    for i in range(2):
+        t.merge_batch(batch(i))
+    if mode == "mor":
+        assert t.delta_file_counts()
+    kw = {"cow_force_overwrite": {"force_overwrite": True},
+          "cow_unset_nulls": {"unset_nulls": True},
+          "mor_fold": {"fold_min_deltas": 3},
+          "mor_force_overwrite": {"force_overwrite": True}}.get(shape, {})
+    written = []
+    real_write = LakeTable._write_and_commit
+
+    def capture(self, frame, *args, **kwargs):
+        # planned here, while the merge's probe cache is still live
+        plan = plans.own_plan(frame)
+        written.append((plans.count_exchanges(frame),
+                        len(re.findall(r"\bWindow \[row_number\(\)", plan)),
+                        plan, kwargs.get("append")))
+        return real_write(self, frame, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_and_commit", capture)
+    t.merge_batch(batch(2), **kw)
+    exchanges, windows, plan, append = written[0]
+    assert bool(append) == (shape == "mor_delta")
+    assert (exchanges, windows) == (1, 1), plan
+    assert sorted(r["text"] for r in t.read().collect()) == ["v2"] * 6
+    if shape != "mor_delta":
+        assert t.delta_file_counts() == {}
