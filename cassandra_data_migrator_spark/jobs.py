@@ -235,15 +235,10 @@ def _session(args) -> SparkSession:
 
 
 def _open_or_create(spark, args, cfg, schema=None):
-    import posixpath
-
     from pyspark.sql import types as T
 
     from cassandra_data_migrator_spark.lake import LakeTable
-    from cassandra_data_migrator_spark.lake.fs import get_fs
-    # existence probe through the FS seam — the table may live on an
-    # object store, not the driver's local disk
-    if get_fs(args.table).isdir(posixpath.join(args.table, "_manifests")):
+    if LakeTable.exists(args.table):
         return LakeTable(spark, args.table)
     schema = schema if schema is not None \
         else T.StructType.fromDDL(args.schema)

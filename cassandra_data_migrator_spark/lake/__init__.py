@@ -2,5 +2,4 @@ from cassandra_data_migrator_spark.lake.table import (  # noqa: F401
     CommitConflict,
     LakeTable,
     MergeResult,
-    merge_with_retry,
 )

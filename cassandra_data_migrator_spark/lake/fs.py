@@ -14,6 +14,8 @@ Semantics the table layer relies on:
   e.g. S3 ``If-None-Match``).
 - ``replace`` — atomic pointer swap for the LATEST file (local:
   ``os.replace``; object stores: plain PUT, which is atomic per key).
+- ``read_text`` of a missing path raises ``FileNotFoundError`` (an
+  expired or never-committed manifest version).
 
 Local filesystem is the default and only built-in; register others via
 :func:`register_fs`.

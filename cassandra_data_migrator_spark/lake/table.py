@@ -35,8 +35,27 @@ Scale notes (100 TB / 1000 executors):
 - The driver handles bucket *ids* and file *paths* only — never rows.
 - All row work is DataFrame-native: one shuffle per merge (the window),
   whole-stage-codegen'd hashing, parquet pushdown on bucket files.
-- Single-writer-per-table assumption (streaming epochs are serial);
-  manifest O_EXCL create detects a second writer and fails cleanly.
+
+Commit protocol (owned here; no other module names the layout above):
+every commit derives its manifest from the one this handle loaded
+(:meth:`LakeTable._successor_manifest`: version + 1, parent linked,
+fence advanced, lineage reset) and publishes it with an exclusive
+create of ``v<version>.json`` followed by the ``LATEST`` swing. A
+second writer that already took that version makes the create fail
+with :class:`CommitConflict`. ``merge_batch`` and
+``merge_counter_batch`` retry their own lost race: reload the
+winner's manifest, check the epoch fence again, recompute what
+depends on the manifest (fold set, watermark) and write again, at
+most ``_COMMIT_ATTEMPTS`` times, and sooner give up when two reloads
+in a row find no newer version (a commit whose ``LATEST`` swing never
+happened blocks every writer). LWW idempotence makes the re-apply
+safe, and the fence turns a twin of the same ``(stream_id,
+epoch_id)`` into a skip. A ``force_overwrite`` merge (autocorrect)
+replaces the stored rows of its keys whatever their LWW order, so a
+re-apply over a rival's newer rows would undo them: like compaction,
+overwrite and schema changes it does not retry, and raises
+:class:`CommitConflict`. A lost attempt's data files are orphans that
+``expire_versions`` reclaims.
 """
 
 from __future__ import annotations
@@ -90,6 +109,22 @@ _PREREDUCE_MAX_EVENTS = 32_000_000
 _PREREDUCE_FORCE_BROADCAST_MAX_EVENTS = 1_500_000
 # seq stand-in for a null seq inside the winner version struct
 _NO_SEQ = -(2 ** 63)
+# a merge that keeps losing the race for the next manifest version
+# gives up (re-raising CommitConflict) after this many writes in all
+_COMMIT_ATTEMPTS = 4
+_MANIFESTS = "_manifests"
+
+
+def _manifest_file(path: str, version: int) -> str:
+    return os.path.join(path, _MANIFESTS, f"v{int(version):012d}.json")
+
+
+def _latest_file(path: str) -> str:
+    return os.path.join(path, _MANIFESTS, "LATEST")
+
+
+def _epoch_key(stream_id: str | None, epoch_id: int | None) -> str | None:
+    return f"{stream_id}/{epoch_id}" if stream_id is not None else None
 
 
 def lww_version(ts, seq):
@@ -136,6 +171,9 @@ class MergeResult:
     counters: dict[str, int] = field(default_factory=dict)
     lineage: list[dict[str, Any]] = field(default_factory=list)
     version: int | None = None
+    # commits this merge lost to another writer before the one it
+    # returns (each followed by a reload and a fresh attempt)
+    conflict_retries: int = 0
 
 
 @dataclass
@@ -277,7 +315,7 @@ class LakeTable:
         # table AND its pipelines' side tables (they use ``table.fs``).
         self.fs = fs if fs is not None else get_fs(path)
         self.manifest: dict[str, Any] = {}
-        self._load_latest()
+        self.refresh()
 
     # ------------------------------------------------------------------ DDL
 
@@ -319,8 +357,6 @@ class LakeTable:
             raise ValueError(
                 f"expires column {config.expires_col!r} not in schema")
         fs = fs if fs is not None else get_fs(path)
-        fs.makedirs(os.path.join(path, "_manifests"))
-        fs.makedirs(os.path.join(path, "data"))
         if field_registry is not None:
             fields, next_id = field_registry
             fields = [dict(f) for f in fields]
@@ -345,28 +381,28 @@ class LakeTable:
             "files": {},
             # exactly-once fence: stream_id -> highest committed epoch id
             "epoch_fence": {},
-            "stats": {"rows": 0},
             "lineage": [],
         }
-        _write_manifest(path, manifest, expect_new_table=True, fs=fs)
+        _first_commit(path, manifest, fs)
         return cls(spark, path, fs=fs)
+
+    @staticmethod
+    def exists(path: str, fs: Any | None = None) -> bool:
+        """True when ``path`` holds a table: its ``LATEST`` pointer is
+        there. A directory whose :meth:`create` stopped before the first
+        commit is not a table, and ``create`` over it succeeds."""
+        fs = fs if fs is not None else get_fs(path)
+        return fs.exists(_latest_file(path))
 
     def refresh(self) -> None:
         """Re-read LATEST so this handle sees commits made by other
-        writers (the changelog consumer's poll loop and any long-lived
-        handle racing a second process use this)."""
-        self._load_latest()
-
-    def _load_latest(self) -> None:
-        latest = os.path.join(self.path, "_manifests", "LATEST")
-        if not self.fs.exists(latest):
+        writers (the changelog consumer's poll loop, a merge retrying a
+        lost commit race, any long-lived handle racing a second
+        process)."""
+        if not LakeTable.exists(self.path, self.fs):
             raise FileNotFoundError(f"not a lake table: {self.path}")
-        version = int(self.fs.read_text(latest).strip())
-        self.manifest = json.loads(
-            self.fs.read_text(self._manifest_path(version)))
-
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, "_manifests", f"v{version:012d}.json")
+        self.manifest = self.manifest_at(
+            int(self.fs.read_text(_latest_file(self.path)).strip()))
 
     # ------------------------------------------------------------- metadata
 
@@ -499,16 +535,18 @@ class LakeTable:
             ts_between=ts_between)
 
     def manifest_at(self, version: int) -> dict:
-        """The committed manifest of ``version``; raises ``LookupError``
-        when that snapshot has been expired (``expire_versions``) or was
-        never committed."""
-        p = self._manifest_path(int(version))
-        if not self.fs.exists(p):
+        """The committed manifest of ``version``, the one reader of a
+        versioned manifest file; raises ``LookupError`` when that
+        snapshot has been expired (``expire_versions``) or was never
+        committed."""
+        try:
+            return json.loads(
+                self.fs.read_text(_manifest_file(self.path, version)))
+        except FileNotFoundError:
             raise LookupError(
                 f"version {version} is not available on {self.path} "
                 f"(expired by expire_versions, or never committed; "
-                f"retained versions: {self.history()})")
-        return json.loads(self.fs.read_text(p))
+                f"retained versions: {self.history()})") from None
 
     def read_version(
         self,
@@ -808,16 +846,61 @@ class LakeTable:
         return out
 
     def _commit(self, new_manifest: dict) -> None:
-        _write_manifest(self.path, new_manifest, fs=self.fs)
+        _write_manifest(self.path, new_manifest, self.fs)
         self.manifest = new_manifest
 
-    def _successor_manifest(self, epoch_key: str | None = None) -> dict:
-        """A deep copy of the current manifest as the draft of the next
-        version: version bumped, parent linked, ``epoch_key`` set."""
-        m = copy.deepcopy(self.manifest)
+    def _successor_manifest(self, stream_id: str | None = None,
+                            epoch_id: int | None = None) -> dict:
+        """THE draft of the next version, for every commit: a deep copy
+        of the current manifest with the version bumped, the parent
+        linked, the epoch key set, ``stream_id``'s fence advanced to
+        ``epoch_id`` (never lowered) and an empty lineage; the caller
+        adds what its commit changes."""
+        m = copy.deepcopy({k: v for k, v in self.manifest.items()
+                           if k != "lineage"})
         m.update(version=self.version + 1, parent=self.version,
-                 epoch_key=epoch_key)
+                 epoch_key=_epoch_key(stream_id, epoch_id), lineage=[])
+        if stream_id is not None and epoch_id is not None:
+            m["epoch_fence"][stream_id] = max(
+                epoch_id, m["epoch_fence"].get(stream_id, -1))
         return m
+
+    def _fenced_skip(self, stream_id: str | None,
+                     epoch_id: int | None) -> MergeResult | None:
+        """The skipped result when ``(stream_id, epoch_id)`` is at or
+        below the committed fence (an exactly-once replay), else None."""
+        fence = self.manifest["epoch_fence"].get(stream_id)
+        if fence is None or epoch_id is None or epoch_id > fence:
+            return None
+        return MergeResult(epoch_key=_epoch_key(stream_id, epoch_id),
+                           skipped=True, version=self.version)
+
+    def _retry_lost_race(
+            self, attempt: Callable[[], MergeResult]) -> MergeResult:
+        """Run ``attempt``, a merge that derives everything it commits
+        from ``self.manifest`` (fence, fold set, watermark). When its
+        commit loses the race for the next version, reload the winner's
+        manifest and run it again, at most ``_COMMIT_ATTEMPTS`` times in
+        all; the last loss re-raises. A reload that finds no newer
+        version may catch a rival between its create and its ``LATEST``
+        swing, so one is retried; the second in a row re-raises. The
+        returned result counts the lost races in ``conflict_retries``."""
+        retries = stalled = 0
+        while True:
+            try:
+                result = attempt()
+            except CommitConflict:
+                retries += 1
+                if retries == _COMMIT_ATTEMPTS:
+                    raise
+                lost_at = self.version
+                self.refresh()
+                stalled = stalled + 1 if self.version == lost_at else 0
+                if stalled == 2:
+                    raise
+                continue
+            result.conflict_retries = retries
+            return result
 
     def _data_cols(self) -> list[str]:
         return [f["name"] for f in self.current_fields()
@@ -857,8 +940,7 @@ class LakeTable:
         return self._write_and_commit(
             src.repartition(self._write_partitions(len(scope)),
                             F.col(_BUCKET)), offsets={},
-            touched=scope, epoch_key=None, stream_id=None,
-            epoch_id=None).version
+            touched=scope).version
 
     # ------------------------------------------------------------ the MERGE
 
@@ -916,6 +998,14 @@ class LakeTable:
         would read back at once. The fold set comes from the manifest
         this merge commits against, so a conflict retry recomputes it.
 
+        A commit lost to another writer is retried here (see the module
+        docstring): the fence is checked again against the winner's
+        manifest and the merge is planned and written again;
+        ``MergeResult.conflict_retries`` counts the lost races. A
+        ``force_overwrite`` merge is not retried: it would replace a
+        rival's newer rows for its keys, so it raises
+        :class:`CommitConflict`.
+
         Semantics (the engine's central operator — reference analogs
         S4/S5 upserts + J3 ``TargetUpsertStatement``, Cassandra LWW):
 
@@ -932,20 +1022,17 @@ class LakeTable:
         - exactly-once: if ``(stream_id, epoch_id)`` is at or below the
           committed fence, the whole merge is a no-op.
         """
-        epoch_key = f"{stream_id}/{epoch_id}" if stream_id is not None else None
-        if stream_id is not None:
-            fence = self.manifest["epoch_fence"].get(stream_id)
-            if fence is not None and epoch_id is not None and epoch_id <= fence:
-                return MergeResult(epoch_key=epoch_key, skipped=True,
-                                   version=self.version)
-
         own_probe = probe is None
-        if own_probe:
-            probe = self.probe(source, seq_col)
-        try:
+
+        def attempt() -> MergeResult:
+            nonlocal probe
+            skipped = self._fenced_skip(stream_id, epoch_id)
+            if skipped is not None:
+                return skipped
+            if probe is None:
+                probe = self.probe(source, seq_col)
             if not probe.touched:
-                return self._commit_empty_epoch(epoch_key, stream_id,
-                                                epoch_id)
+                return self._commit_empty_epoch(stream_id, epoch_id)
             hit = fold = set(probe.touched)
             if (self.merge_mode == "mor" and not force_overwrite
                     and not unset_nulls):
@@ -958,10 +1045,14 @@ class LakeTable:
             if finalize is not None:
                 merged = finalize(merged)
             return self._write_and_commit(
-                merged, probe.offsets, sorted(hit | fold), epoch_key,
-                stream_id, epoch_id, append=hit - fold)
+                merged, probe.offsets, sorted(hit | fold), stream_id,
+                epoch_id, append=hit - fold)
+
+        try:
+            return (attempt() if force_overwrite
+                    else self._retry_lost_race(attempt))
         finally:
-            if own_probe:
+            if own_probe and probe is not None:
                 probe.unpersist()
 
     def _lww_merged(
@@ -1065,24 +1156,19 @@ class LakeTable:
             rows = rows.drop("_gen")
         return _lww_winners(rows, self.key_col, self.ts_col)
 
-    def _commit_empty_epoch(
-        self, epoch_key: str | None, stream_id: str | None,
-        epoch_id: int | None,
-    ) -> MergeResult:
+    def _commit_empty_epoch(self, stream_id: str | None,
+                            epoch_id: int | None) -> MergeResult:
         """An epoch whose batch is empty (e.g. every row skipped or
         quarantined) still advances the fence with a metadata-only
         commit: otherwise a checkpoint redelivery of the same epoch
         would re-run its side effects (double-counted reject counters).
         """
         if stream_id is None or epoch_id is None:
-            return MergeResult(epoch_key=epoch_key, skipped=False,
-                               version=self.version)
-        m = self._successor_manifest(epoch_key)
-        m["epoch_fence"][stream_id] = max(
-            epoch_id, m["epoch_fence"].get(stream_id, -1))
-        m["lineage"] = []
+            return MergeResult(epoch_key=_epoch_key(stream_id, epoch_id),
+                               skipped=False, version=self.version)
+        m = self._successor_manifest(stream_id, epoch_id)
         self._commit(m)
-        return MergeResult(epoch_key=epoch_key, skipped=False,
+        return MergeResult(epoch_key=m["epoch_key"], skipped=False,
                            version=m["version"])
 
     def _typed_source(
@@ -1163,9 +1249,8 @@ class LakeTable:
         merged: DataFrame,
         offsets: dict[int, dict],
         touched: list[int],
-        epoch_key: str | None,
-        stream_id: str | None,
-        epoch_id: int | None,
+        stream_id: str | None = None,
+        epoch_id: int | None = None,
         counter_watermark: tuple[str, int] | None = None,
         append: Collection[int] = (),
     ) -> MergeResult:
@@ -1187,6 +1272,7 @@ class LakeTable:
         resolved state — the recomputing :meth:`checksums` is the
         state-level check). One commit can do both: an MoR merge folds
         some buckets and appends deltas to the others."""
+        epoch_key = _epoch_key(stream_id, epoch_id)
         rel, absdir = self._new_data_dir()
         # already clustered by _bucket: the partitionBy(_PB) write
         # splits per-bucket dirs with no extra shuffle, and each
@@ -1263,7 +1349,7 @@ class LakeTable:
             "live_rows_touched": int(sum(l["live_rows"] for l in lineage_rows)),
         }
 
-        m = self._successor_manifest(epoch_key)
+        m = self._successor_manifest(stream_id, epoch_id)
         for b in touched:
             stats = ts_stats.get(b)
             new_entries = [
@@ -1280,10 +1366,6 @@ class LakeTable:
                 m["files"][str(b)] = new_entries
             else:  # a replaced bucket left without rows holds no files
                 m["files"].pop(str(b), None)
-        if stream_id is not None and epoch_id is not None:
-            m["epoch_fence"][stream_id] = max(
-                epoch_id, m["epoch_fence"].get(stream_id, -1)
-            )
         if counter_watermark is not None:
             sid, new_wm = counter_watermark
             wms = m.setdefault("counter_watermarks", {})
@@ -1351,7 +1433,10 @@ class LakeTable:
         to all data columns). ``ts_col`` tracks ``max`` event time per
         key. Same single-shuffle plan as ``merge_batch``: cluster by
         bucket, then a (bucket, key) aggregation that reuses the
-        clustering.
+        clustering. A lost commit race is retried as in ``merge_batch``,
+        with the fence and the watermark read again from the winner's
+        manifest, so a rival's apply of the same increments is never
+        added twice.
         """
         if self.merge_mode == "mor":
             # counters are read-before-write (stored + Σdelta); a delta
@@ -1360,106 +1445,111 @@ class LakeTable:
             raise ValueError(
                 "counter merges are read-before-write and CoW-only; "
                 "create counter tables with merge_mode='cow'")
-        wm: int | None = None
-        if watermark:
-            if stream_id is None:
-                raise ValueError("watermark mode requires a stream_id")
-            wm = self.counter_watermark(stream_id)
-            if wm is not None:
-                source = source.filter(watermark_tail_predicate(seq_col, wm))
-            elif self.manifest["epoch_fence"].get(stream_id) is not None:
-                # LEGACY-FENCE GUARD: this stream was loaded by a
-                # pre-watermark (fence-only) counter merge — the fence
-                # proves a prior apply happened but records nothing
-                # about its seq extent, so re-applying the current log
-                # would double-add every increment it shares with the
-                # original one. Refuse to guess: apply nothing, record
-                # nothing (inventing a watermark from the CURRENT log
-                # would wrongly bless any tail the old apply never saw).
-                # The convergent paths are `validate --counter
-                # --autocorrect` (origin−target deltas) or a fresh
-                # stream_id against an empty table.
-                return MergeResult(
-                    epoch_key=f"{stream_id}/"
-                              f"{self.manifest['epoch_fence'][stream_id]}",
-                    skipped=True, skip_reason="legacy-fence",
-                    version=self.version)
-            # the fence stays monotone but never blocks a watermarked
-            # merge — idempotence comes from the seq filter itself
-            epoch_id = self.manifest["epoch_fence"].get(stream_id, -1) + 1
-        epoch_key = f"{stream_id}/{epoch_id}" if stream_id is not None else None
-        if stream_id is not None and not watermark:
-            fence = self.manifest["epoch_fence"].get(stream_id)
-            if fence is not None and epoch_id is not None and epoch_id <= fence:
-                return MergeResult(epoch_key=epoch_key, skipped=True,
-                                   version=self.version)
+        if watermark and stream_id is None:
+            raise ValueError("watermark mode requires a stream_id")
 
-        data_cols = self._data_cols()
-        counter_cols = list(counter_cols or data_cols)
-        extra = set(data_cols) - set(counter_cols)
-        if extra:
-            raise ValueError(
-                f"counter table may only contain counter columns; "
-                f"non-counter data columns: {sorted(extra)}")
-
-        # same schema-is-the-contract cast as merge_batch: no-op when
-        # types match, loud ANSI overflow when a delta exceeds the
-        # registered counter type
-        src = self._typed_source(source, seq_col, counter_cols)
-        # only the bucket-level result is used: counters never pre-reduce
-        probe = self.probe(source, seq_col)
-        probe.unpersist()
-        touched, offsets = probe.touched, probe.offsets
-        if not touched:
+        def attempt() -> MergeResult:
+            src, eid, wm = source, epoch_id, None
             if watermark:
-                # nothing past the watermark: a byte-identical replay —
-                # true no-op, no empty-epoch commit (the watermark
-                # already proves this tail applied)
-                return MergeResult(epoch_key=epoch_key, skipped=True,
-                                   skip_reason="watermark",
-                                   version=self.version)
-            return self._commit_empty_epoch(epoch_key, stream_id, epoch_id)
-        wm_update = None
-        if watermark:
-            seqs = [o["max_seq"] for o in offsets.values()
-                    if o.get("max_seq") is not None]
-            if not seqs:
-                raise ValueError(
-                    "watermark mode requires events with a non-null "
-                    f"{seq_col!r} (the watermark IS the applied-seq "
-                    "frontier)")
-            new_wm = max(seqs)
-            wm_update = (stream_id, max(new_wm, wm) if wm is not None
-                         else new_wm)
+                wm = self.counter_watermark(stream_id)
+                fence = self.manifest["epoch_fence"].get(stream_id)
+                if wm is not None:
+                    src = src.filter(watermark_tail_predicate(seq_col, wm))
+                elif fence is not None:
+                    # LEGACY-FENCE GUARD: this stream was loaded by a
+                    # pre-watermark (fence-only) counter merge — the
+                    # fence proves a prior apply happened but records
+                    # nothing about its seq extent, so re-applying the
+                    # current log would double-add every increment it
+                    # shares with the original one. Refuse to guess:
+                    # apply nothing, record nothing (inventing a
+                    # watermark from the CURRENT log would wrongly bless
+                    # any tail the old apply never saw). The convergent
+                    # paths are `validate --counter --autocorrect`
+                    # (origin−target deltas) or a fresh stream_id
+                    # against an empty table.
+                    return MergeResult(
+                        epoch_key=_epoch_key(stream_id, fence),
+                        skipped=True, skip_reason="legacy-fence",
+                        version=self.version)
+                # the fence stays monotone but never blocks a
+                # watermarked merge — idempotence comes from the seq
+                # filter itself
+                eid = (-1 if fence is None else fence) + 1
+            skipped = self._fenced_skip(stream_id, eid)
+            if skipped is not None:
+                return skipped
 
-        # stored rows contribute their current value as the base term;
-        # tombstones previously written to a touched bucket (by
-        # merge_batch on the same table) are carried through UNCHANGED —
-        # the bucket rewrite must not discard them, or a late pre-delete
-        # update replayed later via merge_batch could resurrect the key.
-        stored = self.read(buckets=touched, include_deleted=True,
-                           include_internal=True)
-        out_cols = [self.key_col, self.ts_col, *counter_cols,
-                    _BUCKET, _DELETED, _SEQ]
-        tombstones = stored.filter(F.col(_DELETED)).select(*out_cols)
-        base = stored.filter(~F.col(_DELETED)).select(src.columns)
-        unioned = base.unionByName(src)
-        merged = (
-            unioned.repartition(self._write_partitions(len(touched)),
-                                F.col(_BUCKET))
-            # grouping by (_bucket, key): the bucket clustering satisfies
-            # the aggregation's required distribution → local-only agg
-            .groupBy(F.col(_BUCKET), F.col(self.key_col))
-            .agg(*[F.sum(c).alias(c) for c in counter_cols],
-                 F.max(self.ts_col).alias(self.ts_col),
-                 F.max(_SEQ).alias(_SEQ))
-            .withColumn(_DELETED, F.lit(False))
-            .select(*out_cols)
-            .unionByName(tombstones)
-        )
-        return self._write_and_commit(
-            merged, offsets, touched, epoch_key, stream_id,
-            epoch_id, counter_watermark=wm_update)
+            data_cols = self._data_cols()
+            cols = list(counter_cols or data_cols)
+            extra = set(data_cols) - set(cols)
+            if extra:
+                raise ValueError(
+                    f"counter table may only contain counter columns; "
+                    f"non-counter data columns: {sorted(extra)}")
+
+            # same schema-is-the-contract cast as merge_batch: no-op
+            # when types match, loud ANSI overflow when a delta exceeds
+            # the registered counter type
+            typed = self._typed_source(src, seq_col, cols)
+            # only the bucket-level result is used: counters never
+            # pre-reduce
+            probe = self.probe(src, seq_col)
+            probe.unpersist()
+            touched, offsets = probe.touched, probe.offsets
+            if not touched:
+                if watermark:
+                    # nothing past the watermark: a byte-identical
+                    # replay — true no-op, no empty-epoch commit (the
+                    # watermark already proves this tail applied)
+                    return MergeResult(epoch_key=_epoch_key(stream_id, eid),
+                                       skipped=True, skip_reason="watermark",
+                                       version=self.version)
+                return self._commit_empty_epoch(stream_id, eid)
+            wm_update = None
+            if watermark:
+                seqs = [o["max_seq"] for o in offsets.values()
+                        if o.get("max_seq") is not None]
+                if not seqs:
+                    raise ValueError(
+                        "watermark mode requires events with a non-null "
+                        f"{seq_col!r} (the watermark IS the applied-seq "
+                        "frontier)")
+                wm_update = (stream_id, max(seqs) if wm is None
+                             else max(max(seqs), wm))
+
+            # stored rows contribute their current value as the base
+            # term; tombstones previously written to a touched bucket
+            # (by merge_batch on the same table) are carried through
+            # UNCHANGED — the bucket rewrite must not discard them, or a
+            # late pre-delete update replayed later via merge_batch
+            # could resurrect the key.
+            stored = self.read(buckets=touched, include_deleted=True,
+                               include_internal=True)
+            out_cols = [self.key_col, self.ts_col, *cols,
+                        _BUCKET, _DELETED, _SEQ]
+            tombstones = stored.filter(F.col(_DELETED)).select(*out_cols)
+            base = stored.filter(~F.col(_DELETED)).select(typed.columns)
+            merged = (
+                base.unionByName(typed)
+                .repartition(self._write_partitions(len(touched)),
+                             F.col(_BUCKET))
+                # grouping by (_bucket, key): the bucket clustering
+                # satisfies the aggregation's required distribution →
+                # local-only agg
+                .groupBy(F.col(_BUCKET), F.col(self.key_col))
+                .agg(*[F.sum(c).alias(c) for c in cols],
+                     F.max(self.ts_col).alias(self.ts_col),
+                     F.max(_SEQ).alias(_SEQ))
+                .withColumn(_DELETED, F.lit(False))
+                .select(*out_cols)
+                .unionByName(tombstones)
+            )
+            return self._write_and_commit(
+                merged, offsets, touched, stream_id, eid,
+                counter_watermark=wm_update)
+
+        return self._retry_lost_race(attempt)
 
     # ---------------------------------------------------- schema evolution
 
@@ -1543,7 +1633,8 @@ class LakeTable:
     def _bump_schema(self, fields: list[dict], config: dict | None = None,
                      next_field_id: int | None = None) -> None:
         """Metadata-only commit of ``fields`` as the next schema version
-        (with the given ``config`` entries and field-id counter)."""
+        (with the given ``config`` entries and field-id counter); like
+        every commit that writes no data, it carries an empty lineage."""
         m = self._successor_manifest()
         m["config"].update(config or {})
         if next_field_id is not None:
@@ -1596,8 +1687,7 @@ class LakeTable:
         keep.add(self.version)  # never expire the live snapshot
         referenced: set[str] = set()
         for v in sorted(keep):
-            m = json.loads(self.fs.read_text(self._manifest_path(v)))
-            for entries in m["files"].values():
+            for entries in self.manifest_at(v)["files"].values():
                 referenced.update(e["path"] for e in entries)
 
         def _is_referenced(d: str, pb: str, fn: str) -> bool:
@@ -1641,7 +1731,7 @@ class LakeTable:
         manifests_removed = 0
         for v in versions:
             if v not in keep:
-                self.fs.delete(self._manifest_path(v))
+                self.fs.delete(_manifest_file(self.path, v))
                 manifests_removed += 1
         return {"manifests_removed": manifests_removed,
                 "files_removed": files_removed,
@@ -1691,9 +1781,8 @@ class LakeTable:
         # nothing to resolve without deltas: a plain rewrite skips the sort
         if set(buckets) & self.delta_file_counts().keys():
             rows = _lww_winners(rows, self.key_col, self.ts_col)
-        return self._write_and_commit(
-            rows.drop(_DV), offsets={}, touched=buckets,
-            epoch_key=None, stream_id=None, epoch_id=None)
+        return self._write_and_commit(rows.drop(_DV), offsets={},
+                                      touched=buckets)
 
     def clone_to(self, path: str, version: int | None = None,
                  fs: Any | None = None) -> "LakeTable":
@@ -1734,10 +1823,8 @@ class LakeTable:
         m = self.manifest_at(self.version if version is None
                              else int(version))
         fs = fs if fs is not None else get_fs(path)
-        if fs.exists(os.path.join(path, "_manifests", "LATEST")):
+        if LakeTable.exists(path, fs):
             raise ValueError(f"clone target {path!r} already exists")
-        fs.makedirs(os.path.join(path, "_manifests"))
-        fs.makedirs(os.path.join(path, "data"))
         files = {
             b: [{**e, "path": _resolve_entry(self.path, e["path"])}
                 for e in entries]
@@ -1764,7 +1851,7 @@ class LakeTable:
             "lineage": [],
             "ever_tombstones": bool(m.get("ever_tombstones")),
         }
-        _write_manifest(path, new, expect_new_table=True, fs=fs)
+        _first_commit(path, new, fs)
         return LakeTable(self.spark, path, fs=fs)
 
     def external_buckets(self) -> list[int]:
@@ -1788,85 +1875,29 @@ class LakeTable:
         return self.compact(buckets=ext)
 
     def history(self) -> list[int]:
-        d = os.path.join(self.path, "_manifests")
+        d = os.path.join(self.path, _MANIFESTS)
         return sorted(
             int(fn[1:-5]) for fn in self.fs.listdir(d)
             if fn.startswith("v") and fn.endswith(".json")
         )
 
 
-def _write_manifest(path: str, manifest: dict, expect_new_table: bool = False,
-                    fs: Any | None = None) -> None:
+def _first_commit(path: str, manifest: dict, fs: Any) -> None:
+    """Lay out a new table directory and commit its first manifest."""
+    fs.makedirs(os.path.join(path, _MANIFESTS))
+    fs.makedirs(os.path.join(path, "data"))
+    _write_manifest(path, manifest, fs)
+
+
+def _write_manifest(path: str, manifest: dict, fs: Any) -> None:
     """Two-step atomic commit through the FS seam: exclusive-create the
     immutable versioned manifest (conflict detector), then atomically
     swing the LATEST pointer."""
-    fs = fs if fs is not None else get_fs(path)
-    mdir = os.path.join(path, "_manifests")
-    target = os.path.join(mdir, f"v{manifest['version']:012d}.json")
     try:
-        fs.create_exclusive(target, json.dumps(manifest))
+        fs.create_exclusive(_manifest_file(path, manifest["version"]),
+                            json.dumps(manifest))
     except FileExistsError as e:
         raise CommitConflict(
             f"manifest v{manifest['version']} already exists at {path}"
         ) from e
-    fs.replace(os.path.join(mdir, "LATEST"), str(manifest["version"]))
-
-
-def merge_with_retry(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    attempts: int = 3,
-    fs: Any | None = None,
-    **merge_kw: Any,
-) -> MergeResult:
-    """Optimistic-concurrency merge: open the table at its latest
-    version, merge, and on :class:`CommitConflict` reopen and retry.
-
-    This is the documented recipe for the rare multi-writer case (the
-    engine's normal shape is one writer per stream, serialized by the
-    epoch fence): the conditional PUT of the versioned manifest is the
-    conflict detector, the loser's data files are orphans (reclaimed by
-    ``expire_versions``), and re-applying the batch against the
-    winner's state is safe because the LWW merge is idempotent — the
-    same reason the reference can re-run a migration over already-
-    copied ranges (``README.md:117-126``). The epoch fence carries
-    across the retry: if the CONFLICTING commit was this very
-    (stream_id, epoch_id) from a twin job, the reopened merge sees the
-    fence and skips instead of double-applying.
-    """
-    state: dict[str, LakeTable] = {}
-
-    def _reopen() -> None:
-        state["t"] = LakeTable(spark, path, fs=fs)
-
-    _reopen()
-    return retry_on_conflict(
-        lambda: state["t"].merge_batch(source, **merge_kw),
-        _reopen, attempts=attempts)
-
-
-def retry_on_conflict(
-    merge: Callable[[], MergeResult],
-    refresh: Callable[[], None],
-    attempts: int = 3,
-) -> MergeResult:
-    """The optimistic-concurrency retry loop itself: run ``merge``; on
-    :class:`CommitConflict` call ``refresh`` (reopen/reload the table so
-    the next attempt merges against the winner's state) and try again,
-    at most ``attempts`` times total, then re-raise — bounded so a
-    genuinely hot multi-writer loop still fails loudly. Shared by
-    :func:`merge_with_retry` (fresh handle per attempt) and the
-    streaming pipeline's per-epoch apply (reloads its long-lived handle
-    and counts retries); the safety argument — LWW idempotence + the
-    epoch fence skipping a twin of the same (stream, epoch) — lives on
-    :func:`merge_with_retry`."""
-    last: CommitConflict | None = None
-    for i in range(max(1, attempts)):
-        try:
-            return merge()
-        except CommitConflict as e:
-            last = e
-            if i + 1 < attempts:
-                refresh()
-    raise last  # type: ignore[misc]  # attempts >= 1 ⇒ last is set
+    fs.replace(_latest_file(path), str(manifest["version"]))

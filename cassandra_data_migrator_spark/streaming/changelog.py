@@ -337,7 +337,7 @@ def ensure_replica(
     keep following by id; fresh sequential ids would mis-align the
     moment a column is dropped."""
     fs = fs if fs is not None else get_fs(target_path)
-    if fs.exists(os.path.join(target_path, "_manifests", "LATEST")):
+    if LakeTable.exists(target_path, fs):
         return LakeTable(spark, target_path, fs=fs)
     if at_version is None:
         m = source.manifest

@@ -39,10 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from cassandra_data_migrator_spark.lake.table import (
-    LakeTable,
-    retry_on_conflict,
-)
+from cassandra_data_migrator_spark.lake.table import LakeTable
 from cassandra_data_migrator_spark.operators.dedup import (
     incremental_dedup_batch,
 )
@@ -61,39 +58,23 @@ def apply_dedup_epoch(
     num_hashes: int = 8,
     band_size: int = 2,
     shingle_n: int = 3,
-    attempts: int = 3,
     ts_col: str = "ingest_seq",
     fs: Any | None = None,
 ) -> int:
     """One epoch of the online-dedup stream: index-merge + probe + kept
-    corpus merge, each side wrapped in the optimistic-concurrency retry
-    (a racing ``maintain`` compaction loses or wins a whole manifest
-    version; re-running either merge is safe — fence + idempotent LWW,
-    see ``lake.table.merge_with_retry``). Returns the kept-row count
-    (driver-side scalar only — the payload never leaves executors).
+    corpus merge. Returns the kept-row count (driver-side scalar only —
+    the payload never leaves executors).
 
-    Tables are reopened per attempt (and per epoch) at their latest
-    manifest version, which is what makes the retry correct and the
-    function restartable from any checkpoint.
+    Both tables are opened per epoch at their latest manifest version,
+    which makes the function restartable from any checkpoint. A racing
+    ``maintain`` compaction that takes a manifest version first is
+    retried inside each merge (fence + idempotent LWW); the index probe
+    then reads the state the index merge committed against.
     """
-    holder: dict[str, LakeTable] = {}
-
-    def _reopen_index() -> None:
-        holder["idx"] = LakeTable(spark, index_path, fs=fs)
-
-    def _reopen_out() -> None:
-        holder["out"] = LakeTable(spark, out_path, fs=fs)
-
-    _reopen_index()
-    # incremental_dedup_batch's internal merge raises CommitConflict if
-    # a maintenance job commits concurrently; retry re-runs the whole
-    # merge+probe against the fresh manifest (fenced → no double-apply)
-    kept = retry_on_conflict(
-        lambda: incremental_dedup_batch(
-            holder["idx"], batch_df, id_col, text_col, seq_col,
-            num_hashes=num_hashes, band_size=band_size,
-            shingle_n=shingle_n, stream_id=stream_id, epoch_id=epoch_id),
-        _reopen_index, attempts=attempts)
+    kept = incremental_dedup_batch(
+        LakeTable(spark, index_path, fs=fs), batch_df, id_col, text_col,
+        seq_col, num_hashes=num_hashes, band_size=band_size,
+        shingle_n=shingle_n, stream_id=stream_id, epoch_id=epoch_id)
 
     # the corpus table's LWW version column (``ts_col``, default
     # ``ingest_seq``) is the document's own seq — distinct from the key
@@ -102,12 +83,9 @@ def apply_dedup_epoch(
     src = kept.withColumn("_op", F.lit("upsert"))
     if ts_col not in src.columns:
         src = src.withColumn(ts_col, F.col(seq_col).cast("long"))
-    _reopen_out()
-    result = retry_on_conflict(
-        lambda: holder["out"].merge_batch(
-            src, op_col="_op", seq_col=ts_col,
-            stream_id=stream_id, epoch_id=epoch_id),
-        _reopen_out, attempts=attempts)
+    result = LakeTable(spark, out_path, fs=fs).merge_batch(
+        src, op_col="_op", seq_col=ts_col,
+        stream_id=stream_id, epoch_id=epoch_id)
     # events = this epoch's kept-source rows per the merge's own probe
     # (NOT the rewritten table rows) — the per-epoch kept count
     return int(sum((l.get("events") or 0) for l in result.lineage))

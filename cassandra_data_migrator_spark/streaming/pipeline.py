@@ -45,7 +45,6 @@ from cassandra_data_migrator_spark.lake.table import (
     LakeTable,
     MergeResult,
     Probe,
-    retry_on_conflict,
 )
 from cassandra_data_migrator_spark.operators.filters import split_predicates
 from cassandra_data_migrator_spark.sources.event_log import read_event_stream
@@ -118,8 +117,9 @@ class CdcPipeline:
         self.config = config or EngineConfig(n_buckets=table.n_buckets)
         self.stream_id = stream_id
         self.unset_nulls = unset_nulls
-        # observability: epochs that lost a manifest race (to table
-        # maintenance or a rival writer) and converged via reload+retry
+        # observability: commit races this pipeline's merges lost (to
+        # table maintenance or a rival writer) and retried, summed over
+        # their MergeResult.conflict_retries
         self.conflict_retries = 0
         self.transform = transform
         # PII redaction: winner-side in finalize_winners (lazy), pre-merge
@@ -232,35 +232,25 @@ class CdcPipeline:
         # full transformed batch would materialize the whole payload
         # (html+text) per epoch for no saved work.
         try:
-            # a rival commit under this epoch's feet — the normal cause
-            # is table MAINTENANCE (compact / expire) racing the live
-            # tail, which never changes row state — reloads the manifest
-            # and re-merges via the shared retry_on_conflict loop: LWW
-            # idempotence makes the re-apply safe, the fence still skips
-            # a twin of this very (stream, epoch), the fold set is
-            # recomputed from the reloaded delta depths, and the dead
-            # attempt's data files are orphans for expire_versions.
-            def _reload() -> None:
-                self.conflict_retries += 1
-                self.table._load_latest()
-
-            result = retry_on_conflict(
-                lambda: self.table.merge_batch(
-                    batch,
-                    seq_col=self.config.seq_col,
-                    stream_id=self.stream_id,
-                    epoch_id=epoch_id,
-                    unset_nulls=self.unset_nulls,
-                    finalize=partial(finalize_winners,
-                                     redact_cols=self.redact_cols)
-                    if self.lazy_extract else None,
-                    probe=probe,
-                    fold_min_deltas=self.config.mor_compact_min_deltas,
-                ),
-                _reload, attempts=4)
+            # a rival commit under this epoch's feet (normally table
+            # maintenance racing the live tail) is retried inside the
+            # merge, against the reloaded manifest and with this probe
+            result = self.table.merge_batch(
+                batch,
+                seq_col=self.config.seq_col,
+                stream_id=self.stream_id,
+                epoch_id=epoch_id,
+                unset_nulls=self.unset_nulls,
+                finalize=partial(finalize_winners,
+                                 redact_cols=self.redact_cols)
+                if self.lazy_extract else None,
+                probe=probe,
+                fold_min_deltas=self.config.mor_compact_min_deltas,
+            )
         finally:
             if probe is not None:
                 probe.unpersist()
+        self.conflict_retries += result.conflict_retries
         if not result.skipped:
             self._record(result, epoch_id, n_skip, n_quar)
         return result

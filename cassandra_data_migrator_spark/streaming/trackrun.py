@@ -158,12 +158,8 @@ class BatchRunTracker:
         the fence outlives its manifest once ``expire_versions`` has
         vacuumed old snapshots, and the caller must then record the
         completion as totals-unknown rather than zeros."""
-        import json as _json
-
-        fs, path = self.table.fs, self.table.path
         for v in sorted(self.table.history(), reverse=True):
-            m = _json.loads(fs.read_text(
-                os.path.join(path, "_manifests", f"v{v:012d}.json")))
+            m = self.table.manifest_at(v)
             if m.get("epoch_key") == epoch_key:
                 lineage = m.get("lineage") or []
                 return (int(sum(l.get("events") or 0 for l in lineage)),

@@ -38,9 +38,9 @@ WEB_SCHEMA = T.StructType([
 
 def test_commit_conflict_two_writers(spark, tmpdir_path):
     """Two handles racing a commit: the second writer's conditional PUT
-    of the same manifest version MUST fail with CommitConflict (the
-    object-store If-None-Match contract), and re-opening + re-merging
-    converges via LWW idempotence — the documented retry recipe."""
+    of the same manifest version fails (the object-store If-None-Match
+    contract), and its merge retries on its own against the winner's
+    manifest, converging via LWW idempotence."""
     log = os.path.join(tmpdir_path, "log")
     ev = gen_change_events(spark, n_urls=80, n_events=400, seed=23)
     write_event_log(ev, log, n_chunks=2)
@@ -58,15 +58,13 @@ def test_commit_conflict_two_writers(spark, tmpdir_path):
 
     a.merge_batch(first, stream_id="wa", epoch_id=0)
     # B still believes the old version: its commit targets the same
-    # manifest version A just created → conditional PUT must conflict
-    with pytest.raises(CommitConflict):
-        b.merge_batch(second, stream_id="wb", epoch_id=0)
-
-    # the losing writer's recipe: reopen (fresh manifest) and re-merge;
-    # the LWW merge is idempotent so a partially-shipped batch re-applies
+    # manifest version A just created → the conditional PUT conflicts,
+    # and B reloads and commits the next version instead
+    res = b.merge_batch(second, stream_id="wb", epoch_id=0)
+    assert res.conflict_retries == 1 and not res.skipped
+    assert b.version == res.version == a.version + 1
     b2 = LakeTable(spark, path, fs=fs)
-    assert b2.version == a.version          # sees A's committed version
-    b2.merge_batch(second, stream_id="wb", epoch_id=0)
+    assert b2.manifest["epoch_fence"] == {"wa": 0, "wb": 0}
 
     # converged state == a single-writer replay of the whole log
     ref = LakeTable.create(spark, os.path.join(tmpdir_path, "ref"),
@@ -219,12 +217,12 @@ class _RacingFS(ObjectStoreEmulatorFS):
         return super().create_exclusive(p, data)
 
 
-def test_merge_with_retry_converges_after_lost_race(spark, tmpdir_path):
-    """merge_with_retry: lose the conditional PUT to a rival committed
-    INSIDE the race window, then reopen-and-retry to convergence — the
-    documented optimistic-concurrency recipe as an API."""
-    from cassandra_data_migrator_spark.lake import merge_with_retry
-
+def test_stale_merge_retries_its_lost_race(spark, tmpdir_path):
+    """A stale handle's merge loses the conditional PUT to a rival
+    committed INSIDE the race window, retries on its own against the
+    rival's manifest and converges; a twin replaying the same (stream,
+    epoch) from a handle opened before either commit loses its race
+    too, and on the retry the fence turns it into a skip."""
     log = os.path.join(tmpdir_path, "log")
     ev = gen_change_events(spark, n_urls=60, n_events=300, seed=41)
     write_event_log(ev, log, n_chunks=2)
@@ -235,12 +233,14 @@ def test_merge_with_retry_converges_after_lost_race(spark, tmpdir_path):
     path = os.path.join(tmpdir_path, "t")
     LakeTable.create(spark, path, WEB_SCHEMA, EngineConfig(n_buckets=4),
                      fs=ObjectStoreEmulatorFS())
+    twin = LakeTable(spark, path, fs=ObjectStoreEmulatorFS())
     fs = _RacingFS(spark, path)
     fs.rival_batch = first
+    victim = LakeTable(spark, path, fs=fs)
 
-    res = merge_with_retry(spark, path, second, fs=fs,
-                           stream_id="victim", epoch_id=0)
+    res = victim.merge_batch(second, stream_id="victim", epoch_id=0)
     assert fs.raced and not res.skipped
+    assert res.conflict_retries == 1
 
     # both writers' batches landed; state == a single-writer full replay
     ref = LakeTable.create(spark, os.path.join(tmpdir_path, "ref"),
@@ -252,11 +252,137 @@ def test_merge_with_retry_converges_after_lost_race(spark, tmpdir_path):
             for r in ref.read().collect()}
     assert got == want
 
-    # a twin job replaying the victim's OWN (stream, epoch) is fenced,
-    # not double-applied
-    twin = merge_with_retry(spark, path, second, fs=ObjectStoreEmulatorFS(),
-                            stream_id="victim", epoch_id=0)
-    assert twin.skipped
+    # the twin replaying the victim's OWN (stream, epoch) is fenced,
+    # not double-applied, and commits nothing
+    skipped = twin.merge_batch(second, stream_id="victim", epoch_id=0)
+    assert skipped.skipped and skipped.conflict_retries == 1
+    assert skipped.version == t.version
+    assert LakeTable(spark, path).version == t.version
+
+
+def _counter_table(spark, path):
+    schema = T.StructType.fromDDL("user string, ts timestamp, cents long")
+    return LakeTable.create(spark, path, schema, EngineConfig(
+        n_buckets=4, key_col="user", ts_col="ts"))
+
+
+def _counter_events(spark, n):
+    import datetime as dt
+    rows = [(f"u{i % 3}", dt.datetime(2024, 1, 1, 0, 0, i), 10 + i, i)
+            for i in range(n)]
+    return spark.createDataFrame(rows, "user string, ts timestamp, "
+                                       "cents long, seq long")
+
+
+def _counter_totals(events):
+    out: dict[str, int] = {}
+    for r in events.collect():
+        out[r["user"]] = out.get(r["user"], 0) + r["cents"]
+    return out
+
+
+@pytest.mark.parametrize("watermark", [False, True])
+def test_stale_counter_merge_never_double_adds(spark, tmpdir_path,
+                                               watermark):
+    """A counter merge from a handle opened before a rival applied the
+    same increments loses the commit race, and its retry reads the
+    rival's fence (fence mode: a skip) or watermark (watermark mode:
+    only the grown log's new tail applies). Either way every increment
+    is added once."""
+    path = os.path.join(tmpdir_path, "c")
+    _counter_table(spark, path)
+    rival = LakeTable(spark, path)
+    stale = LakeTable(spark, path)
+    log = _counter_events(spark, 6)
+    rival.merge_counter_batch(log, stream_id="c", epoch_id=0,
+                              watermark=watermark)
+    if watermark:
+        grown = _counter_events(spark, 9)
+        res = stale.merge_counter_batch(grown, stream_id="c",
+                                        watermark=True)
+        assert not res.skipped and res.counters["events"] == 3
+        assert stale.counter_watermark("c") == 8
+        want = _counter_totals(grown)
+    else:
+        res = stale.merge_counter_batch(log, stream_id="c", epoch_id=0)
+        assert res.skipped
+        want = _counter_totals(log)
+    assert res.conflict_retries == 1
+    got = {r["user"]: r["cents"]
+           for r in LakeTable(spark, path).read().collect()}
+    assert got == want
+
+
+def test_stale_compact_still_raises_commit_conflict(spark, tmpdir_path):
+    """Only the merges retry a lost race: compaction from a stale
+    handle still fails with CommitConflict (the conflict detector)."""
+    path = os.path.join(tmpdir_path, "t")
+    t = LakeTable.create(spark, path, WEB_SCHEMA, EngineConfig(
+        n_buckets=4, merge_mode="mor"))
+    events = read_event_log(spark, _small_log(spark, tmpdir_path))
+    t.merge_batch(events.filter(F.col("seq") < 100))
+    stale = LakeTable(spark, path)
+    t.merge_batch(events.filter(F.col("seq") >= 100))
+    assert stale.delta_file_counts()
+    with pytest.raises(CommitConflict):
+        stale.compact()
+    assert LakeTable(spark, path).version == t.version
+
+
+def test_stale_autocorrect_raises_instead_of_undoing_newer_rows(
+        spark, tmpdir_path):
+    """A force_overwrite merge (autocorrect) replaces the stored rows of
+    its keys whatever their LWW order, so it does not retry a lost race:
+    a stale handle's autocorrect of old rows, after a rival committed
+    newer rows for the same keys, raises CommitConflict and leaves the
+    rival's rows in place."""
+    events = read_event_log(spark, _small_log(spark, tmpdir_path))
+    old = events.filter(F.col("seq") < 100)
+    path = os.path.join(tmpdir_path, "t")
+    t = LakeTable.create(spark, path, WEB_SCHEMA, EngineConfig(n_buckets=4))
+    t.merge_batch(old)
+    stale = LakeTable(spark, path)
+    t.merge_batch(events.filter(F.col("seq") >= 100))
+    before = {r["url"]: (r["warc_ts"], r["html"])
+              for r in t.read().collect()}
+    stale_rows = {r["url"]: (r["warc_ts"], r["html"])
+                  for r in stale.read().collect()}
+    assert before != stale_rows     # the rival did write newer rows
+
+    with pytest.raises(CommitConflict):
+        stale.merge_batch(old, force_overwrite=True)
+    now = LakeTable(spark, path)
+    assert now.version == t.version
+    assert {r["url"]: (r["warc_ts"], r["html"])
+            for r in now.read().collect()} == before
+
+
+def test_merge_gives_up_on_a_commit_that_never_swung_latest(
+        spark, tmpdir_path):
+    """A v<N>.json left without its LATEST swing makes every writer lose
+    the race for N. A reload that finds no newer version is retried
+    once (it may have caught a live rival between create and swing);
+    the second such reload gives up rather than rewriting the batch up
+    to the attempt limit."""
+    from cassandra_data_migrator_spark.lake.table import _manifest_file
+    events = read_event_log(spark, _small_log(spark, tmpdir_path))
+    fs = ObjectStoreEmulatorFS()
+    path = os.path.join(tmpdir_path, "t")
+    t = LakeTable.create(spark, path, WEB_SCHEMA,
+                         EngineConfig(n_buckets=4), fs=fs)
+    orphan = _manifest_file(path, t.version + 1)
+    fs.create_exclusive(orphan, "{}")
+    with pytest.raises(CommitConflict):
+        t.merge_batch(events, stream_id="s", epoch_id=0)
+    assert fs.ops.count(("create_exclusive", orphan)) == 1 + 2
+    assert LakeTable(spark, path, fs=fs).version == t.version
+
+
+def _small_log(spark, tmpdir_path):
+    log = os.path.join(tmpdir_path, "log")
+    write_event_log(gen_change_events(spark, n_urls=40, n_events=200,
+                                      seed=5), log, n_chunks=1)
+    return log
 
 
 def test_maintain_races_live_stream(spark, tmpdir_path):

@@ -356,6 +356,20 @@ def test_migrate_null_op_event_is_an_upsert(spark, tmpdir_path, capsys):
     assert v["missing"] == 0 and v["mismatch"] == 0 and v["valid"] == 2
 
 
+def test_migrate_over_a_crashed_create(spark, tmpdir_path, capsys,
+                                       job_log):
+    """A table directory whose create stopped after laying out its
+    directories, before the first commit, is not a table: migrate
+    creates the table there instead of failing to open it."""
+    table = os.path.join(tmpdir_path, "t")
+    os.makedirs(os.path.join(table, "_manifests"))
+    os.makedirs(os.path.join(table, "data"))
+    out = _run(spark, capsys, ["migrate", "--log", job_log,
+                               "--table", table])
+    assert out["events_applied"] == 600
+    assert LakeTable(spark, table).read().count() > 0
+
+
 def test_guardrail_job_cli(spark, tmpdir_path, capsys, job_log):
     table = os.path.join(tmpdir_path, "t")
     _run(spark, capsys, ["migrate", "--log", job_log, "--table", table])

@@ -185,6 +185,40 @@ def test_schema_evolution_add_and_rename(spark, table):
         and row["language"] == "de"
 
 
+def test_metadata_only_commits_carry_no_lineage(spark, table):
+    """A commit that writes no data (schema evolution, an empty fenced
+    epoch) carries an empty lineage: ``lineage_rows()`` after it must
+    not show the previous commit's rows as its own."""
+    r = table.merge_batch(mk_events(spark, [(1, "insert", "u", 100, "v1")]))
+    assert [ln["version"] for ln in table.lineage_rows()] == [r.version]
+    for evolve in (lambda: table.add_column("fetch_status", "int"),
+                   lambda: table.rename_column("fetch_status", "status"),
+                   lambda: table.widen_column("status", "bigint"),
+                   lambda: table.drop_column("status"),
+                   lambda: table.merge_batch(mk_events(spark, []),
+                                             stream_id="s", epoch_id=0)):
+        v = table.version
+        evolve()
+        assert table.version == v + 1
+        assert table.lineage_rows() == []
+        assert LakeTable(spark, table.path).lineage_rows() == []
+    # the lineage of the merge's own version is still there
+    assert table.manifest_at(r.version)["lineage"]
+
+
+def test_exists_needs_a_committed_table(spark, tmpdir_path):
+    """``LakeTable.exists`` is true only once the first commit's
+    ``LATEST`` pointer is there: a directory a crashed ``create`` left
+    behind is not a table, and ``create`` over it succeeds."""
+    path = os.path.join(tmpdir_path, "t")
+    os.makedirs(os.path.join(path, "_manifests"))
+    assert not LakeTable.exists(path)
+    with pytest.raises(FileNotFoundError, match="not a lake table"):
+        LakeTable(spark, path)
+    t = LakeTable.create(spark, path, WEB_SCHEMA, EngineConfig(n_buckets=8))
+    assert LakeTable.exists(path) and t.version == 1
+
+
 def test_overwrite_bootstrap(spark, table):
     pages = spark.createDataFrame(
         [("u1", ts(1), b"<p>a</p>", "a", "en"),
@@ -358,10 +392,8 @@ def test_expire_versions_reclaims_disk_and_preserves_state(spark, table):
     # every file on disk is referenced by a retained manifest, and
     # every referenced file exists
     referenced = set()
-    import json as _json
     for v in table.history():
-        m = _json.loads(table.fs.read_text(table._manifest_path(v)))
-        for es in m["files"].values():
+        for es in table.manifest_at(v)["files"].values():
             referenced.update(os.path.join(table.path, e["path"]) for e in es)
     on_disk = set(_disk_parquet_files(table.path))
     assert referenced <= on_disk

@@ -590,12 +590,14 @@ def test_fold_epoch_is_one_commit(spark, tmpdir_path, monkeypatch):
          (102, "update", hot[2], 200, "b"),
          (303, "update", cold[0], 300, "c")],
     ]
-    merged = []
+    exchanges = []
     real_write = LakeTable._write_and_commit
 
     def capture(self, frame, *args, **kw):
         if self is mor:
-            merged.append(frame)
+            # planned here, while the merge's probe cache is still live:
+            # the plan the write runs, not a re-plan after the merge
+            exchanges.append(plans.count_exchanges(frame))
         return real_write(self, frame, *args, **kw)
 
     monkeypatch.setattr(LakeTable, "_write_and_commit", capture)
@@ -612,8 +614,7 @@ def test_fold_epoch_is_one_commit(spark, tmpdir_path, monkeypatch):
 
     assert mor.version == v_mor + 1 == r.version     # one commit
     # the fold shares the delta write's window: no Exchange added
-    assert plans.count_exchanges(merged[-1]) \
-        == plans.count_exchanges(merged[-2])
+    assert exchanges[-1] == exchanges[-2] == 1
     depth = mor.delta_file_counts()
     assert hot_b not in depth
     assert [e.get("delta") for e in mor.manifest["files"][str(hot_b)]] \
